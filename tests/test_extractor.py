@@ -341,13 +341,15 @@ def test_spec_trailing_colon_and_empty_are_reference_parity():
 
 def test_null_field_arrays_do_not_wipe_accumulator(spark):
     """marc.datafields / marc.controlfields = NULL are schema-legal in
-    user parquet: extract_all_marc_values and marc_formats must
-    contribute nothing / the default instead of nulling values earlier
-    macros appended to the same field (r9 review)."""
+    user parquet: extract_all_marc_values, marc_formats and
+    marc_geo_facet must contribute nothing / the default instead of
+    nulling values earlier macros appended to the same field (r9
+    review)."""
     from traject_spark.macros import (
         extract_all_marc_values,
         literal,
         marc_formats,
+        marc_geo_facet,
     )
     from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
     from traject_spark.pipeline import Pipeline
@@ -360,68 +362,9 @@ def test_null_field_arrays_do_not_wipe_accumulator(spark):
         Pipeline()
         .to_field("all_text", literal("seed"), extract_all_marc_values())
         .to_field("format", literal("seed"), marc_formats())
+        .to_field("geo", literal("seed"), marc_geo_facet())
     )
     row = p.apply(df).collect()[0]
     assert row["all_text"] == ["seed"]
     assert row["format"] is not None and "seed" in row["format"]
-
-
-def test_extract_sql_fastpath_parity(spark):
-    """The r16 generated-SQL extraction twin (_extract_sql) must match
-    the generic Column builder element-for-element on every edge shape:
-    merged multi-tag groups, doubled codes (joinable), per-subfield
-    specs, 880-with-$6 rewrite, 880-without-$6 drop, NULL subfield
-    values, NULL subfields arrays, NULL datafields, non-mergeable
-    repeated-tag specs (per-spec contribution order)."""
-    from traject_spark.marc.extractor import _extract_sql
-    from traject_spark.marc.spec import parse_marc_spec
-
-    recs = [
-        ("book", marc_record(datafields=[
-            ("100", "1", " ", [("a", "Author, A."), ("d", "1920-")]),
-            ("245", "1", "0", [("a", "Title :"), ("b", "sub /"), ("c", "A.")]),
-            ("650", " ", "0", [("a", "Topic"), ("x", "Hist"), ("z", "Geo")]),
-        ])),
-        ("alt880", marc_record(datafields=[
-            ("245", "1", "0", [("a", "Latin title")]),
-            ("880", "1", "0", [("6", "245-01"), ("a", "Alt title")]),
-            ("880", "0", " ", [("a", "no-six-falls-back-to-880")]),
-        ])),
-        ("nulls", marc_record(datafields=[
-            ("245", "1", "0", [("a", None), ("b", "only-b")]),
-            ("100", " ", " ", []),
-        ])),
-        ("nullsubs", {"leader": " " * 24, "controlfields": [],
-                      "datafields": [{"tag": "245", "ind1": " ",
-                                      "ind2": " ", "subfields": None}]}),
-        ("nodata", {"leader": " " * 24, "controlfields": None,
-                    "datafields": None}),
-        ("doubled", marc_record(datafields=[
-            ("020", " ", " ", [("a", "111"), ("a", "222"), ("z", "x")]),
-        ])),
-    ]
-    df = spark.createDataFrame(recs, MARC_SOURCE_SCHEMA)
-    SPECS = [
-        ("245ab", " "),
-        ("100a:110a:111a", " "),
-        ("035a", None),
-        ("050a:060a:090a:096a", None),
-        ("600:610:650", " "),
-        ("020aa", " "),          # doubled code joins again
-        ("245a:245ab", " "),     # repeated tag: non-mergeable path
-        ("100", "|"),            # all subfields, custom separator
-        ("264c", None),
-    ]
-    for spec, sep in SPECS:
-        parsed = parse_marc_spec(spec)
-        sql = _extract_sql("`marc`", parsed, sep)
-        assert sql is not None, spec
-        both = df.select(
-            F.expr(sql).alias("a"),
-            marc_extract(F.col("marc"), parsed, separator=sep).alias("b"),
-        )
-        diffs = both.filter(~F.col("a").eqNullSafe(F.col("b"))).count()
-        assert diffs == 0, f"spec {spec} diverged"
-    # ineligible shapes must fall back (return None), never mis-render
-    for bad in ("008[35-37]", "245|01|ab", "880a", "041a:008[35-37]"):
-        assert _extract_sql("`marc`", parse_marc_spec(bad), " ") is None
+    assert row["geo"] == ["seed"]

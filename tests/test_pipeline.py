@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from traject_spark import Pipeline, extract_marc, literal, transforms as T
 from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
 
-from tests.fixtures import BOOK, EMPTY, THE_TITLE
+from tests.fixtures import ALT_SCRIPT, BOOK, EMPTY, THE_TITLE
 
 
 def source_df(spark, *recs):
@@ -417,34 +417,11 @@ def test_map_record_field_named_like_id_col(spark):
     assert out == {"id": ["ctrl1"], "title": ["T"]}
 
 
-def test_parallel_compile_matches_sequential(spark, monkeypatch):
-    """Speculative parallel compile is a pure build-time optimization:
-    same values as the sequential pass on a pure-to_field pipeline, and
-    an order-dependent pipeline (clipboard / output() / skip_when /
-    rescue) trips the speculation and falls back — observable ordering
-    semantics never change."""
-    import os
+def test_clipboard_carries_value_to_later_rule(spark):
+    """A value stashed on the clipboard by one rule is what a later rule
+    reads, with unrelated rules in between."""
+    from traject_spark.macros import literal
 
-    from traject_spark.macros import extract_marc, literal
-
-    def mk():
-        return (
-            Pipeline()
-            .to_field("title", extract_marc("245ab"))
-            .to_field("author", extract_marc("100a"))
-            .to_field("lang", extract_marc("008[35-37]"))
-            .to_field("lit", literal("x"))
-        )
-
-    df = source_df(spark, ("b", BOOK))
-    monkeypatch.setenv("TRAJECT_SPARK_PARALLEL_COMPILE", "0")
-    seq = [r.asDict() for r in mk().apply(df).collect()]
-    monkeypatch.setenv("TRAJECT_SPARK_PARALLEL_COMPILE", "1")
-    par = [r.asDict() for r in mk().apply(df).collect()]
-    assert seq == par and par
-
-    # order-dependent pipeline: a later rule reads an earlier field via
-    # the clipboard — must trip the speculation, not miscompile
     def stash(acc, ctx):
         ctx.clipboard["t"] = acc
         return acc
@@ -454,175 +431,73 @@ def test_parallel_compile_matches_sequential(spark, monkeypatch):
 
     p = (
         Pipeline()
-        .to_field("title", extract_marc("245a"), stash)
+        .to_field("title", extract_marc("245a"))
+        .to_field("stashed", literal("X"), stash)
+        .to_field("author", extract_marc("100a"))
         .to_field("copy", unstash)
-        .to_field("a", literal("1"))
-        .to_field("b", literal("2"))
     )
-    row = p.apply(df).collect()[0]
-    assert row["copy"] == row["title"] and row["title"]
-
-    # skip_when inside a to_field macro also trips (and still skips)
-    from pyspark.sql import functions as F
-
-    def skipper(acc, ctx):
-        ctx.skip_when(F.lit(True))
-        return acc
-
-    p2 = (
-        Pipeline()
-        .to_field("t", extract_marc("245a"), skipper)
-        .to_field("a", literal("1"))
-        .to_field("b", literal("2"))
-        .to_field("c", literal("3"))
-    )
-    assert p2.apply(df).count() == 0
-
-
-def test_parallel_compile_pool_reentry_goes_sequential(spark):
-    """A macro that compiles a sub-pipeline from inside a pool thread
-    must not re-submit to the shared 8-worker pool: with >=8 outer
-    rules each blocking on a nested compile, every worker would wait on
-    nested f.result() submissions that can never run — deadlock (r10
-    advice). The re-entry guard forces nested compiles sequential."""
-    import threading
-
-    from traject_spark.macros import literal
-
-    nested_parallel = []
-
-    def nested_compile(acc, ctx):
-        inner = (
-            Pipeline()
-            .to_field("w", literal("1"))
-            .to_field("x", literal("2"))
-            .to_field("y", literal("3"))
-            .to_field("z", literal("4"))
-        )
-        if threading.current_thread().name.startswith("traject-compile"):
-            nested_parallel.append(inner._compile_steps_parallel())
-            inner._field_exprs = {}
-            inner._skip_conds = []
-            inner._error_exprs = []
-            inner._materialized = []
-        inner.compile()
-        return acc
-
-    p = Pipeline()
-    for i in range(10):
-        p.to_field(f"f{i}", literal(str(i)), nested_compile)
-
-    done = {}
-
-    def run():
-        done["fields"], _ = p.compile()
-
-    t = threading.Thread(target=run, daemon=True)
-    t.start()
-    t.join(timeout=120)
-    assert not t.is_alive(), "compile deadlocked on pool re-entry"
-    assert len(done["fields"]) == 10
-    # the guard was actually exercised: nested attempts from pool
-    # threads reported False (sequential path)
-    assert nested_parallel and not any(nested_parallel)
-
-
-def _forty_rule_pipeline():
-    """A reference-scale 40-rule config: the flagship 12 rules (every
-    semantic macro once) plus 28 plain extract_marc fields with varying
-    specs/options — the shape of the reference's real-world ~40-field
-    configs (index_bench/common.rb:12-136 is mostly extract_marc lines
-    with the heavy semantic derivations appearing once each)."""
-    from traject_spark.macros import (
-        extract_all_marc_values, extract_marc, marc_formats,
-        marc_geo_facet, marc_languages, marc_lcc_to_broad_category,
-        marc_lcsh_formatted, marc_publication_date, marc_sortable_author,
-        marc_sortable_title, oclcnum,
-    )
-
-    p = (
-        Pipeline()
-        .to_field("title", extract_marc("245ab", trim_punctuation=True))
-        .to_field("title_sort", marc_sortable_title())
-        .to_field("author", extract_marc("100a:110a:111a"))
-        .to_field("author_sort", marc_sortable_author())
-        .to_field("language", marc_languages())
-        .to_field("oclc", oclcnum())
-        .to_field("lcc_category", marc_lcc_to_broad_category())
-        .to_field("subject", marc_lcsh_formatted())
-        .to_field("geo", marc_geo_facet())
-        .to_field("format", marc_formats())
-        .to_field("pub_date", marc_publication_date())
-        .to_field("all_text", extract_all_marc_values())
-    )
-    extra_specs = [
-        "246ab", "130a", "240a", "250a", "260abc", "264abc", "300a",
-        "490av", "500a", "505a", "520a", "600abcdq", "610ab", "611a",
-        "630a", "650ax", "651a", "655a", "700abcd", "710ab", "711a",
-        "730a", "740a", "830a", "020a", "022a", "035a", "001",
-    ]
-    for i, spec in enumerate(extra_specs):
-        p.to_field(
-            f"f{i}_{spec.replace('[', '_').replace(']', '')}",
-            extract_marc(spec, trim_punctuation=(i % 3 == 0)),
-        )
-    return p
-
-
-def test_parallel_compile_40_rules_identical_trees(spark, monkeypatch):
-    """(a) the speculative parallel compile of a reference-scale 40-rule
-    config produces EXPRESSION-IDENTICAL trees to the sequential path
-    (str(Column) equality up to alpha-renaming: Spark's lambda-variable
-    counter is a global JVM sequence, so the literal x_<n> numbering
-    differs by compile order even between two sequential compiles —
-    canonicalize by order of first appearance before comparing)."""
-    import re
-    import time
-
-    def canon(col) -> str:
-        s = str(col)
-        seen: dict = {}
-        return re.sub(
-            r"\b[a-z]_\d+\b",
-            lambda m: seen.setdefault(m.group(0), f"v{len(seen)}"),
-            s,
-        )
-
-    monkeypatch.setenv("TRAJECT_SPARK_PARALLEL_COMPILE", "0")
-    seq_fields, seq_skip = _forty_rule_pipeline().compile()
-    monkeypatch.setenv("TRAJECT_SPARK_PARALLEL_COMPILE", "1")
-    t0 = time.monotonic()
-    par_fields, par_skip = _forty_rule_pipeline().compile()
-    build = time.monotonic() - t0
-    assert len(par_fields) == len(seq_fields) == 40
-    assert [n for n, _ in par_fields] == [n for n, _ in seq_fields]
-    for (n, se), (_, pe) in zip(seq_fields, par_fields):
-        assert canon(se) == canon(pe), f"tree drift in field {n}"
-    assert seq_skip is None and par_skip is None
-    # bench note: 40-rule parallel build time (r10 floor ~2-4s on a
-    # qualified window; generous bound, min absorbs host stalls)
-    assert build < 60, build
-
-
-def test_parallel_compile_40_rules_clipboard_forces_sequential(spark):
-    """(b) a clipboard-touching rule ANYWHERE in the 40-rule list trips
-    the speculation and the whole pipeline compiles sequentially (the
-    compiled output is order-exact either way — asserted via the
-    clipboard actually carrying the earlier field's value)."""
-    from traject_spark.macros import literal
-
-    def stash(acc, ctx):
-        ctx.clipboard["t"] = acc
-        return acc
-
-    def unstash(acc, ctx):
-        return ctx.clipboard["t"]
-
-    p = _forty_rule_pipeline()
-    p.to_field("stashed", literal("X"), stash)
-    p.to_field("copy", unstash)
-    from tests.fixtures import BOOK
-    from tests.test_pipeline import source_df
-
     row = p.apply(source_df(spark, ("b", BOOK))).collect()[0]
     assert row["copy"] == ["X"] and row["stashed"] == ["X"]
+
+
+def test_macro_runs_once_per_compile(spark):
+    """Compilation runs every macro exactly once, so a macro with a side
+    effect (logging, a counter) sees one call per compile even when a
+    later rule reads the clipboard."""
+    from traject_spark.macros import literal
+
+    calls = []
+
+    def counted(acc, ctx):
+        calls.append(ctx.current_step)
+        return acc
+
+    def reads_clipboard(acc, ctx):
+        empty = F.array().cast("array<string>")
+        return F.concat(acc, ctx.clipboard.get("t", empty))
+
+    p = (
+        Pipeline()
+        .to_field("a", literal("1"), counted)
+        .to_field("b", literal("2"))
+        .to_field("c", literal("3"))
+        .to_field("d", reads_clipboard)
+    )
+    p.compile()
+    assert calls == ["to_field ['a']"]
+
+
+def test_non_identifier_source_column_matches_marc(spark):
+    """The flagship over a record column named ``my-marc``, or nested as
+    ``rec.marc``, maps exactly like the same records under ``marc``; the
+    kept source and the quarantine frame carry the user's column."""
+    from __spark_entry__ import flagship_pipeline
+
+    df = source_df(
+        spark, ("book", BOOK), ("the", THE_TITLE), ("alt", ALT_SCRIPT),
+        ("empty", EMPTY),
+    )
+
+    def rows(out, drop=()):
+        return [
+            {k: v for k, v in r.asDict().items() if k not in drop}
+            for r in out.orderBy("record_id").collect()
+        ]
+
+    want = rows(flagship_pipeline().apply(df))
+    assert any(r["title"] for r in want)
+    nested = df.select("record_id", F.struct("marc").alias("rec"))
+    cases = (
+        (df.withColumnRenamed("marc", "my-marc"), "my-marc", "my-marc"),
+        (nested, "rec.marc", "marc"),
+    )
+    for frame, src, shown in cases:
+        p = flagship_pipeline().settings(mapping_rescue="skip")
+        p.source_col = src
+        out = p.apply(frame, keep_source=True)
+        assert out.columns[:2] == ["record_id", shown]
+        assert rows(out, drop=(shown,)) == want, src
+        good, bad = p.apply_with_quarantine(frame)
+        assert rows(good) == want, src
+        assert bad.columns == ["record_id", "_error", shown]
+        assert p.source_col == src

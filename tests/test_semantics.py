@@ -379,50 +379,6 @@ def test_sortable_title_custom_spec_honors_indicators(spark):
     assert row["miss"] is None
 
 
-def test_marc_languages_sql_fastpath_parity(spark):
-    """The generated-SQL marc_languages twin (r10: one F.expr instead of
-    ~3k Py4J round trips, plus a direct string probe instead of the
-    array encode/split/slice) must match the generic Column path
-    element-for-element on every edge shape: packed >3-char 041a chunks,
-    880-with-$6 rewrite, 880-without-$6 drop, short 008 byte slice,
-    NULL subfield values, duplicate codes (distinct), map misses."""
-    from traject_spark import Pipeline
-    from traject_spark.macros import marc_languages
-    from traject_spark.marc.schema import MARC_SOURCE_SCHEMA, marc_record
-
-    recs = [
-        ("r1", marc_record(
-            controlfields=[("008", "880520s1990    xx" + " " * 18 + "eng d")],
-            datafields=[("041", "0", " ", [("a", "engfregerm"), ("d", "spa")])],
-        )),
-        ("r2", marc_record(
-            controlfields=[("008", "short")],
-            datafields=[
-                ("880", "0", " ", [("6", "041-01"), ("a", "heb")]),
-                ("880", "0", " ", [("a", "NO-SIX-DROPS")]),
-                ("041", "0", " ", [("d", None), ("a", "ger")]),
-            ],
-        )),
-        ("r3", marc_record(controlfields=[], datafields=[])),
-        ("r4", marc_record(
-            controlfields=[("008", "880520s1990    xx" + " " * 18 + "fre d")],
-            datafields=[("041", "0", " ", [("b", "unused"), ("a", "fre")])],
-        )),
-    ]
-    df = spark.createDataFrame(recs, MARC_SOURCE_SCHEMA)
-    fast = Pipeline().to_field("language", marc_languages()).apply(df)
-    slow = Pipeline().to_field(
-        "language", marc_languages(_sql_fastpath=False)
-    ).apply(df)
-    fr = {r["record_id"]: r["language"] for r in fast.collect()}
-    sr = {r["record_id"]: r["language"] for r in slow.collect()}
-    assert fr == sr, (fr, sr)
-    assert fr["r1"] == ["English", "French", "German", "Spanish"]
-    assert fr["r2"] == ["Hebrew", "German"]
-    # 008 contributes + 041a duplicate of 008 de-dups
-    assert fr["r4"] == ["French"]
-
-
 def test_translation_map_sql_probe_shape_guards():
     """sql_probe returns None for every map shape whose semantics the
     single-string probe cannot carry — those keep the Column path."""
@@ -454,143 +410,16 @@ def test_translation_map_sql_probe_quoting(spark):
     assert out == ["Gwich'in", "it's 'quoted'", None]
 
 
-def test_ident_safe_gates_sql_fastpath():
-    """ADVICE r10: the languages SQL fast path must engage only for
-    plain identifiers — a dotted name resolves a nested field via
-    F.col() but a top-level column via backtick-quoted SQL, so the two
-    paths would read DIFFERENT columns."""
-    from traject_spark.macros.semantics import _ident_safe
+def test_ident_safe():
+    """Only plain identifiers pass: a dotted name resolves a nested field
+    via F.col() but a top-level column via backtick-quoted SQL, so the
+    corpus operators' string-name SQL forms must not take it."""
+    from traject_spark.sqlutil import ident_safe
 
-    assert _ident_safe("marc")
-    assert _ident_safe("_src_2")
+    assert ident_safe("marc")
+    assert ident_safe("_src_2")
     for bad in ("a.b", "a`b", "a b", "a-b", "", "1col", "a\nb", "a;b"):
-        assert not _ident_safe(bad), bad
-
-
-def test_marc_formats_sql_fastpath_parity(spark):
-    """The generated-SQL marc_formats twin (r11: one F.expr instead of
-    ~1450 Py4J round trips) must match the Column builder value-for-value
-    over every classifier branch: genre two-byte pair vs one byte vs 007
-    fallback with NULL misses kept, manuscript, microform, online (007
-    'cr' and GMD-with-no-007c), RDA-338 print, GMD-suppressed print,
-    thesis Book replacement, Conference append, recording-suppresses-
-    Print, and the empty->default stage."""
-    from traject_spark import Pipeline
-    from traject_spark.macros import marc_formats
-    from traject_spark.marc.schema import MARC_SOURCE_SCHEMA, marc_record
-
-    recs = [
-        ("book_print", marc_record(leader="01234cam a2200301 a 4500")),
-        ("journal", marc_record(leader="01234cas a2200301 a 4500")),
-        ("thesis", marc_record(
-            leader="01234cam a2200301 a 4500",
-            datafields=[("502", " ", " ", [("a", "Thesis")])],
-        )),
-        ("conf_online", marc_record(
-            leader="01234cam a2200301 a 4500",
-            controlfields=[("007", "cr an 008mamaa")],
-            datafields=[("650", " ", "0",
-                         [("a", "Physics"), ("v", "Congresses.")])],
-        )),
-        ("recording", marc_record(leader="01234cjm a2200301 a 4500")),
-        ("video_gmd", marc_record(
-            leader="01234cgm a2200301 a 4500",
-            datafields=[("245", "0", "0",
-                         [("a", "T"), ("h", "[electronic resource]")])],
-        )),
-        ("microform_007", marc_record(
-            leader="01234czz a2200301 a 4500",
-            controlfields=[("007", "h d")],
-        )),
-        ("manuscript", marc_record(leader="01234ctm a2200301 a 4500")),
-        ("rda_338_volume", marc_record(
-            leader="01234czz a2200301 a 4500",
-            datafields=[("338", " ", " ",
-                         [("a", "volume"), ("2", "rdacarrier")])],
-        )),
-        ("rda_338_online", marc_record(
-            leader="01234czz a2200301 a 4500",
-            datafields=[("338", " ", " ",
-                         [("a", "online resource"), ("2", "rdacarrier")])],
-        )),
-        ("unknown_007_nil", marc_record(
-            leader="01234czz a2200301 a 4500",
-            controlfields=[("007", "z unmapped")],
-        )),
-        ("default_empty", marc_record(
-            leader="01234czz a2200301 a 4500",
-            datafields=[("245", "0", "0",
-                         [("a", "T"), ("h", "[microform]")])],
-        )),
-        ("null_leader", marc_record(leader=None)),
-    ]
-    df = spark.createDataFrame(recs, MARC_SOURCE_SCHEMA)
-    fast = Pipeline().to_field("format", marc_formats()).apply(df)
-    slow = Pipeline().to_field(
-        "format", marc_formats(_sql_fastpath=False)
-    ).apply(df)
-    fr = {r["record_id"]: r["format"] for r in fast.collect()}
-    sr = {r["record_id"]: r["format"] for r in slow.collect()}
-    assert fr == sr, {k: (fr[k], sr[k]) for k in fr if fr[k] != sr[k]}
-    # spot-pin a few absolute values so BOTH paths can't drift together
-    assert fr["book_print"] == ["Book", "Print"]
-    assert fr["thesis"] == ["Print", "Dissertation/Thesis"]
-    assert fr["recording"] == ["Musical Recording"]
-    assert fr["conf_online"] == ["Book", "Online", "Print", "Conference"]
-
-
-def test_marc_geo_sql_fastpath_parity(spark):
-    """The generated-SQL marc_geo_facet twin (r11: one F.expr instead of
-    ~1000 Py4J round trips) must match the Column path element-for-
-    element: 043a trailing-hyphen strip + map probe with misses dropped,
-    880-linked 043, 651a/691a FIRST-'. '-occurrence removal, one/two/
-    three $z shapes (two -> 'z2 (z1)' + posted z1), and whole-accumulator
-    distinct."""
-    from traject_spark import Pipeline
-    from traject_spark.macros import marc_geo_facet
-    from traject_spark.marc.schema import MARC_SOURCE_SCHEMA, marc_record
-
-    recs = [
-        ("hyphens", marc_record(datafields=[
-            ("043", " ", " ", [("a", "n-us---"), ("a", "zz-miss")]),
-        ])),
-        ("linked_880", marc_record(datafields=[
-            ("880", " ", " ", [("6", "043-01"), ("a", "e-fr---")]),
-        ])),
-        ("a_sub_first", marc_record(datafields=[
-            ("651", " ", "0", [("a", "Boston (Mass.). Maps. More")]),
-            ("691", " ", "0", [("a", "NoDotSpace")]),
-        ])),
-        ("z_shapes", marc_record(datafields=[
-            ("650", " ", "0", [("a", "Art"), ("z", "France"),
-                               ("z", "Paris.")]),
-            ("610", " ", "0", [("a", "X"), ("z", "OnlyOne.")]),
-            ("630", " ", "0", [("a", "Y"), ("z", "A"), ("z", "B"),
-                               ("z", "C")]),
-        ])),
-        ("dedup", marc_record(datafields=[
-            ("043", " ", " ", [("a", "n-us---")]),
-            ("651", " ", "0", [("a", "United States")]),
-        ])),
-        ("empty", marc_record()),
-    ]
-    df = spark.createDataFrame(recs, MARC_SOURCE_SCHEMA)
-    fast = Pipeline().to_field("geo", marc_geo_facet()).apply(df)
-    slow = Pipeline().to_field(
-        "geo", marc_geo_facet(_sql_fastpath=False)
-    ).apply(df)
-    fr = {r["record_id"]: r["geo"] for r in fast.collect()}
-    sr = {r["record_id"]: r["geo"] for r in slow.collect()}
-    assert fr == sr, {k: (fr[k], sr[k]) for k in fr if fr[k] != sr[k]}
-    # absolute pins so both paths can't drift together
-    assert fr["hyphens"] == ["United States"]
-    assert fr["linked_880"] == ["France"]
-    # the FIRST '\. *' occurrence is the dot inside '(Mass.)' (zero
-    # trailing spaces qualify), matching the reference's un-anchored sub
-    assert fr["a_sub_first"] == ["Boston (Mass). Maps. More", "NoDotSpace"]
-    assert fr["z_shapes"] == ["Paris (France)", "France", "OnlyOne",
-                              "A", "B", "C"]
-    assert fr["dedup"] == ["United States"]
+        assert not ident_safe(bad), bad
 
 
 def test_formats_sql_map_eligibility_guards():
@@ -683,8 +512,10 @@ def test_generated_sql_paths_stable_under_escaped_lexer(spark):
 
 
 def run_formats_ref(spark):
-    """BOOK's formats via the forced Column path (mode-independent)."""
-    return run(spark, BOOK, marc_formats(_sql_fastpath=False))
+    """BOOK's formats via the Column form (mode-independent)."""
+    from tests.test_macro_goldens import _formats_column
+
+    return run(spark, BOOK, _formats_column())
 
 
 def test_sql_str_lit_property_both_lexer_modes(spark):
@@ -735,11 +566,13 @@ def test_compiled_sql_texts_are_lexer_independent(spark):
     the session lexer says. All embedded regexes now render via
     sql_str_lit (chr()-spliced backslashes), so the compiled SQL is
     lexer-independent; this evaluates each compiled text directly under
-    both modes against the forced Column path."""
+    both modes against the Column form of formats."""
     from traject_spark.macros.formats import formats_sql
     from traject_spark.macros.semantics import _geo_sql, _languages_sql
     from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
     from traject_spark.translation_map import TranslationMap
+
+    from tests.test_macro_goldens import _formats_column
 
     # records exercising the regex-bearing branches: a 6xx $v
     # 'Congresses.' (formats), packed 041 (languages), 043 trailing
@@ -782,10 +615,10 @@ def test_compiled_sql_texts_are_lexer_independent(spark):
         finally:
             spark.conf.unset("spark.sql.parser.escapedStringLiterals")
     assert results["true"] == results["false"]
-    # and against the Column twins (mode-independent by construction)
+    # and against formats' Column form (mode-independent by construction)
     col_rows = run_many(spark, [
         (r, m) for r in recs
-        for m in (marc_formats(_sql_fastpath=False),)
+        for m in (_formats_column(),)
     ])
     for row, col_out in zip(results["false"], col_rows):
         assert sorted(x for x in row["formats"] if x is not None) \
@@ -797,156 +630,3 @@ def test_compiled_sql_texts_are_lexer_independent(spark):
     assert any("(" in g for g in (r0["geo"] or [])), r0["geo"]
 
 
-def test_pubdate_sql_fastpath_parity(spark):
-    """The r16 generated-SQL publication-date twin must match the Column
-    decision procedure on every branch: q-ranges (in/out of tolerance,
-    'u' sub-first), r/p date2 preference, u-digit estimation with 10^k
-    tolerance, type n suppression, short/missing 008, 264c-then-260c
-    fallback, and the min/max clamps."""
-    from traject_spark import Pipeline
-    from traject_spark.macros import marc_publication_date
-    from traject_spark.marc.schema import MARC_SOURCE_SCHEMA, marc_record
-
-    def f8(dtype, d1, d2=None):
-        base = "880520" + dtype + d1 + (d2 if d2 is not None else "")
-        return base
-
-    recs = [
-        ("q_in_tol", marc_record(controlfields=[("008", f8("q", "196u", "1970"))])),
-        ("q_out_tol", marc_record(controlfields=[("008", f8("q", "1900", "1990"))])),
-        ("q_equal", marc_record(controlfields=[("008", f8("q", "1960", "1960"))])),
-        ("r_d2", marc_record(controlfields=[("008", f8("r", "1955", "1960"))])),
-        ("p_zero_d2", marc_record(controlfields=[("008", f8("p", "1955", "0000"))])),
-        ("s_u_est", marc_record(controlfields=[("008", f8("s", "19uu", "    "))])),
-        ("s_u_toolong", marc_record(controlfields=[("008", f8("s", "1uuu", "    "))])),
-        ("type_n", marc_record(controlfields=[("008", f8("n", "1980", "1985"))])),
-        ("short_008", marc_record(controlfields=[("008", "88052")])),
-        ("no_008_264", marc_record(datafields=[
-            ("264", " ", "1", [("c", "published in 1999.")]),
-        ])),
-        ("no_008_260", marc_record(datafields=[
-            ("260", " ", " ", [("c", "c1944.")]),
-        ])),
-        ("both_fallbacks", marc_record(datafields=[
-            ("264", " ", "1", [("c", "no digits here")]),
-            ("260", " ", " ", [("c", "MCMLIV [1954]")]),
-        ])),
-        ("clamp_low", marc_record(controlfields=[("008", f8("s", "0300", "    "))])),
-        ("clamp_high", marc_record(controlfields=[("008", f8("s", "9999", "    "))])),
-        ("short_date1", marc_record(controlfields=[("008", f8("s", "19", ""))])),
-        ("empty", marc_record()),
-    ]
-    df = spark.createDataFrame(recs, MARC_SOURCE_SCHEMA)
-    for kwargs in ({}, {"estimate_tolerance": 120, "min_year": 1000,
-                    "max_year": 2030}, {"as_string": False}):
-        a = Pipeline().to_field(
-            "d", marc_publication_date(_sql_fastpath=True, **kwargs)
-        ).apply(df)
-        b = Pipeline().to_field(
-            "d", marc_publication_date(_sql_fastpath=False, **kwargs)
-        ).apply(df)
-        rows_a = {r["record_id"]: r["d"] for r in a.collect()}
-        rows_b = {r["record_id"]: r["d"] for r in b.collect()}
-        assert rows_a == rows_b, {
-            k: (rows_a[k], rows_b[k])
-            for k in rows_a if rows_a[k] != rows_b[k]
-        }
-
-
-def test_sortable_sql_fastpath_parity(spark):
-    """r16 generated-SQL twins of marc_sortable_title / _author must
-    match the Column path on the tricky shapes: ind2 non-filing slices
-    (0 / 4 / blank / beyond length), $k fallback, 880-linked 240/245,
-    missing fields, NULL subfield values, per-subfield trim chains."""
-    from traject_spark import Pipeline
-    from traject_spark.macros import marc_sortable_author, marc_sortable_title
-    from traject_spark.marc.schema import MARC_SOURCE_SCHEMA, marc_record
-
-    recs = [
-        ("plain", marc_record(datafields=[
-            ("100", "1", " ", [("a", "  Author, A.  ")]),
-            ("245", "1", "0", [("a", "Title :"), ("b", "sub /")]),
-        ])),
-        ("nonfiling", marc_record(datafields=[
-            ("245", "1", "4", [("a", "The Title"), ("b", "x.")]),
-        ])),
-        ("nonfiling_blank", marc_record(datafields=[
-            ("245", "1", " ", [("a", "A")]),
-        ])),
-        ("nonfiling_beyond", marc_record(datafields=[
-            ("245", "1", "9", [("a", "shrt")]),
-        ])),
-        ("k_fallback", marc_record(datafields=[
-            ("245", "1", "0", [("k", "kit title."), ("c", "by X")]),
-        ])),
-        ("via_240", marc_record(datafields=[
-            ("240", "1", "2", [("a", "L'uniform title.")]),
-            ("245", "1", "0", [("a", "ignored - 240 comes first")]),
-        ])),
-        ("linked_880", marc_record(datafields=[
-            ("880", "1", "0", [("6", "245-01"), ("a", "Alt [title] /")]),
-        ])),
-        ("null_vals", marc_record(datafields=[
-            ("245", "1", "0", [("a", None), ("b", "b only.")]),
-            ("100", " ", " ", [("a", None)]),
-        ])),
-        ("missing", marc_record(datafields=[
-            ("650", " ", "0", [("a", "No title here")]),
-        ])),
-        ("empty", marc_record()),
-    ]
-    df = spark.createDataFrame(recs, MARC_SOURCE_SCHEMA)
-    for name, mk in (
-        ("tsort", marc_sortable_title),
-        ("asort", marc_sortable_author),
-    ):
-        a = Pipeline().to_field(name, mk(_sql_fastpath=True)).apply(df)
-        b = Pipeline().to_field(name, mk(_sql_fastpath=False)).apply(df)
-        ra = {r["record_id"]: r[name] for r in a.collect()}
-        rb = {r["record_id"]: r[name] for r in b.collect()}
-        assert ra == rb, (name, {k: (ra[k], rb[k]) for k in ra if ra[k] != rb[k]})
-
-
-def test_lcsh_sql_fastpath_parity(spark):
-    """r16 generated-SQL lcsh twin: subdivision separators, first-
-    subfield prefix rule with the ORIGINAL index (a leading $6 shifts
-    it), non-alpha code skip, NULL subfield value skip, trailing period
-    strip, empty -> nothing, 880-linked subjects, multi-field order."""
-    from traject_spark import Pipeline
-    from traject_spark.macros import marc_lcsh_formatted
-    from traject_spark.marc.schema import MARC_SOURCE_SCHEMA, marc_record
-
-    recs = [
-        ("full", marc_record(datafields=[
-            ("650", " ", "0", [("a", "Topic"), ("x", "Hist."), ("z", "Geo"),
-                               ("v", "Maps.")]),
-            ("600", "1", "0", [("a", "Person, A."), ("d", "1900-1980"),
-                               ("t", "Works.")]),
-        ])),
-        ("leading_ctrl", marc_record(datafields=[
-            ("650", " ", "0", [("6", "880-01"), ("a", "Shifted"),
-                               ("x", "Sub.")]),
-        ])),
-        ("null_vals", marc_record(datafields=[
-            ("650", " ", "0", [("a", None), ("x", "OnlyX.")]),
-        ])),
-        ("all_numeric", marc_record(datafields=[
-            ("650", " ", "0", [("0", "id"), ("6", "link")]),
-        ])),
-        ("linked_880", marc_record(datafields=[
-            ("880", " ", "0", [("6", "650-02"), ("a", "Alt subject.")]),
-        ])),
-        ("empty", marc_record()),
-    ]
-    df = spark.createDataFrame(recs, MARC_SOURCE_SCHEMA)
-    for kwargs in ({}, {"subdivision_separator": "--",
-                        "other_separator": "~"}):
-        a = Pipeline().to_field(
-            "s", marc_lcsh_formatted(_sql_fastpath=True, **kwargs)
-        ).apply(df)
-        b = Pipeline().to_field(
-            "s", marc_lcsh_formatted(_sql_fastpath=False, **kwargs)
-        ).apply(df)
-        ra = {r["record_id"]: r["s"] for r in a.collect()}
-        rb = {r["record_id"]: r["s"] for r in b.collect()}
-        assert ra == rb, {k: (ra[k], rb[k]) for k in ra if ra[k] != rb[k]}

@@ -322,11 +322,21 @@ def _checkpoint_sigs(sig: DataFrame) -> DataFrame:
     tolerate that should precompute the signature column (``sig_col``),
     the durable posture. A size-aware warning (the ISO-2709 splitter
     pattern) fires when the OPTIMIZER'S input estimate exceeds
-    ``_SIG_CHECKPOINT_WARN_BYTES`` — driver-side metadata only, no job."""
+    ``_SIG_CHECKPOINT_WARN_BYTES`` — driver-side metadata only, no job.
+    An input without statistics (``createDataFrame``, an RDD) reports
+    Spark's default size, Long.MaxValue; that is no estimate, so it
+    does not warn."""
     try:
-        est = int(
-            sig._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        plan = sig._jdf.queryExecution().optimizedPlan()
+        unknown = sig.sparkSession._jsparkSession.sessionState().conf() \
+            .defaultSizeInBytes()
+        leaves = plan.collectLeaves()
+        est = int(plan.stats().sizeInBytes())
+        if any(
+            int(leaves.apply(i).stats().sizeInBytes()) >= unknown
+            for i in range(leaves.size())
+        ):
+            est = None
     except Exception:
         est = None
     if est is not None and est > _SIG_CHECKPOINT_WARN_BYTES:
@@ -338,7 +348,7 @@ def _checkpoint_sigs(sig: DataFrame) -> DataFrame:
             "memory+disk and is lost on executor failure. At this scale, "
             "materialize the signature column once (parquet/table) and pass "
             "sig_col= instead.",
-            ResourceWarning,
+            UserWarning,
             stacklevel=3,
         )
     return sig.localCheckpoint(eager=False)
@@ -415,8 +425,8 @@ def minhash_lsh_candidates(
     # payload-carrying SortAggregate into a narrow HashAggregate) was
     # measured and REJECTED: true duplicates collide in every band, so
     # score-first multiplies the per-pair agreement computation by up to
-    # ``bands`` — the same failure mode tools/ab_cosine_r15.py measured
-    # at 3x for the cosine path. De-dup the candidate rows first, score
+    # ``bands`` — the same failure mode measured at 3x for the cosine
+    # path (OPTIMIZATION_r15.md, embed_near_dup_lsh). De-dup the candidate rows first, score
     # each surviving pair once.
     pairs = (
         a.join(
@@ -914,7 +924,7 @@ def simhash_expr(text: Column | str, bits: int = 64) -> Column:
     instead of thousands of Py4J Column round trips per build; the
     Column path below stays as the reference implementation for
     arbitrary Column inputs. Values are identical (cross-checked 0-diff
-    in the focused formulation test and tools/ab_simhash_r15.py).
+    in the focused formulation test; OPTIMIZATION_r15.md, dedup_simhash).
 
     Formulation (r15 optimization): Spark higher-order functions are
     CodegenFallback — every lambda invocation is interpreted — so the
@@ -925,7 +935,7 @@ def simhash_expr(text: Column | str, bits: int = 64) -> Column:
     carry-free bit-spread product of one nibble of the hash (see
     _SIMHASH_SPREAD). Counts are extracted once per row afterwards and
     the identical majority votes taken, so signatures are BIT-IDENTICAL
-    (cross-checked 0-diff over the bench corpus, tools/ab_simhash_r15.py;
+    (cross-checked 0-diff over the bench corpus, OPTIMIZATION_r15.md;
     isolated lane min 1.287 -> 1.049s). Rows with more than
     _SIMHASH_MAX_FAST_TOKENS tokens (counter-saturation bound) take the
     original per-bit-pass path, same values.

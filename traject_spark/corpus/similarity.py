@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from traject_spark.expr import let2
+from traject_spark.sqlutil import ident_safe
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -172,8 +173,6 @@ def signs_expr(vec: Column | str, dim: int, bits: int, table: int) -> Column:
     Callers drop NULL buckets; a mismatch therefore EXCLUDES the row,
     visible in result counts rather than in runtime blowup."""
     if isinstance(vec, str):
-        from traject_spark.sqlutil import ident_safe
-
         if ident_safe(vec):
             return F.expr(_signs_sql(_q(vec), dim, bits, table))
         # nested-field names fall back to the Column path (ADVICE r15)
@@ -294,17 +293,6 @@ def _arr_sql(vals) -> str:
 
 def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_name_ok(name: str) -> bool:
-    """String-form inputs qualify for the generated-SQL fast path only
-    when they are plain top-level identifiers; a dotted name like
-    'payload.text' means a NESTED field to F.col but one (backtick-
-    quoted) top-level column to the SQL text — such names take the
-    Column path so both forms resolve identically (ADVICE r15)."""
-    from traject_spark.sqlutil import ident_safe
-
-    return ident_safe(name)
 
 
 def _valid_sql(vec_sql: str, dim: int) -> str:
@@ -439,7 +427,7 @@ def assign_cell_expr(vec: Column | str, centroids: list) -> Column:
     Py4J call, scores let-bound so the fold's two references evaluate
     the centroid scoring once; see fast-path note above _arr_sql)."""
     dim = len(centroids[0][1])
-    if isinstance(vec, str) and not _sql_name_ok(vec):
+    if isinstance(vec, str) and not ident_safe(vec):
         vec = F.col(vec)  # nested-field name: Column path (ADVICE r15)
     if isinstance(vec, str):
         vs = _q(vec)
@@ -472,7 +460,7 @@ def probe_cells_expr(vec: Column | str, centroids: list, nprobe: int) -> Column:
     ``probe_cells_udf``) — not the lowest-cid cells. ``vec`` as a
     column NAME takes the generated-SQL fast path."""
     dim = len(centroids[0][1])
-    if isinstance(vec, str) and not _sql_name_ok(vec):
+    if isinstance(vec, str) and not ident_safe(vec):
         vec = F.col(vec)  # nested-field name: Column path (ADVICE r15)
     if isinstance(vec, str):
         vs = _q(vec)
@@ -936,14 +924,14 @@ def cosine_near_dup(
             )
             .filter(F.col("id_a") < F.col("id_b"))
             # payload-carrying de-dup KEPT deliberately (r15 A/B,
-            # tools/ab_cosine_r15.py): moving it after scoring (narrow
+            # OPTIMIZATION_r15.md): moving it after scoring (narrow
             # HashAggregate instead of this SortAggregate of vectors)
             # measured 3x SLOWER — near-identical vectors collide in
             # ALL `tables` hash tables, so score-first multiplies the
             # dominant per-pair cost (the HOF dot) by ~tables. An
             # unrolled codegen dot was also measured and is slower
             # than the HOF dot (5.0s vs 3.2s min). A vectorized Arrow
-            # dot (r16 A/B, tools/ab_embed_dot_r16.py, bit-identical
+            # dot (r16 A/B, AB_FINDINGS_r16.md §3, bit-identical
             # scores) is ALSO slower: post-dedup only ~2k unique pairs
             # are scored, so the Python boundary's fixed cost exceeds
             # the interpreted-dot saving.

@@ -14,7 +14,6 @@ from traject_spark.macros.semantics import (
     marc_instrumentation_humanized,
     marc_instrument_codes_normalized,
     marc_publication_date,
-    publication_date_expr,
     marc_lcc_to_broad_category,
     marc_geo_facet,
     marc_era_facet,
@@ -36,7 +35,6 @@ __all__ = [
     "marc_instrumentation_humanized",
     "marc_instrument_codes_normalized",
     "marc_publication_date",
-    "publication_date_expr",
     "marc_lcc_to_broad_category",
     "marc_geo_facet",
     "marc_era_facet",

@@ -240,17 +240,17 @@ def formats_expr(marc: Column, default: str = "Other") -> Column:
 
 
 # ---------------------------------------------------------------------------
-# generated-SQL fast path (VERDICT r10 next-round #8)
+# generated SQL: what marc_formats builds
 #
 # The Column builder above costs ~1450 Py4J round trips (~0.5s of the
-# flagship's driver-side build); the SQL text below is the SAME
-# expression tree rendered as one F.expr call. let() has a direct SQL
-# form (the aggregate trick with NAMED lambda variables, so nesting is
+# flagship's driver-side build); the SQL text below is the same
+# classifier rendered as one F.expr call. let() has a direct SQL form
+# (the aggregate trick with NAMED lambda variables, so nesting is
 # unambiguous), and the genre maps are embedded from the same
 # TranslationMap load the Column path uses — a user map shadowing the
-# builtin flows into the SQL too. Value parity is pinned by
-# tests/test_semantics.py::test_marc_formats_sql_fastpath_parity and the
-# marc_formats oracle row.
+# builtin flows into the SQL too. The Column builder stays only for maps
+# the SQL literals cannot carry. Values are pinned by
+# tests/data/macro_goldens.json and the marc_formats oracle row.
 # ---------------------------------------------------------------------------
 
 def _sq(s: str) -> str:
@@ -280,7 +280,7 @@ def _sql_map_of_arrays(mapping: dict) -> str:
 
 
 def _genre_maps_sql_eligible() -> bool:
-    """The formats SQL fast path renders the genre maps as plain
+    """marc_formats' generated SQL renders the genre maps as plain
     try_element_at literals, which carry ONLY the simple shape: no
     ``__default__`` (lookup_expr applies it on every miss; a literal
     key never would) and no nil suppression entries (lookup_expr maps
@@ -301,9 +301,8 @@ def _genre_maps_sql_eligible() -> bool:
 
 def formats_sql(marc: str, default: str = "Other") -> str:
     """SQL text of ``formats_expr`` over source column ``marc``
-    (pre-quoted identifier). Each fragment cites the Column twin it
-    mirrors; keep the two in lockstep (the parity test diffs them
-    value-by-value over the synth corpus and edge shapes)."""
+    (pre-quoted identifier). Each fragment cites the Column helper it
+    mirrors; tests/data/macro_goldens.json pins both forms."""
     lmap = _sql_map_of_arrays(TranslationMap("marc_genre_leader").as_dict())
     cmap = _sql_map_of_arrays(TranslationMap("marc_genre_007").as_dict())
     leader = f"coalesce({marc}.leader, '')"
@@ -394,27 +393,18 @@ def formats_sql(marc: str, default: str = "Other") -> str:
     return sql_let(gmd_v, "g", sql_let(f007_v, "fv", assembled))
 
 
-def marc_formats(default: str = "Other", _sql_fastpath: bool = True):
-    """Macro form (marc_format_classifier.rb:17-22). On an
-    identifier-safe source column with SQL-eligible genre maps the
-    expression is built as generated SQL (one Py4J call instead of
-    ~1450 — see formats_sql); ``_sql_fastpath=False`` forces the Column
-    builder, which the parity test uses as the semantics reference."""
-    # one shared identifier gate (semantics._ident_safe carries the
-    # load-bearing rationale); map eligibility checked once at macro
-    # construction, not per compile
-    from traject_spark.macros.semantics import _ident_safe
-
-    sql_ok = _sql_fastpath and _genre_maps_sql_eligible()
+def marc_formats(default: str = "Other"):
+    """Macro form (marc_format_classifier.rb:17-22): the classifier as
+    one generated-SQL string (one Py4J call instead of ~1450, see
+    formats_sql); ``formats_expr`` when a user map shadowing the genre
+    maps is not SQL-probe eligible."""
+    # map eligibility checked once at macro construction, not per compile
+    sql_ok = _genre_maps_sql_eligible()
 
     def macro(acc: Column, ctx=None) -> Column:
-        src = getattr(ctx, "_pipeline", None)
-        src_col = getattr(src, "source_col", None) if src else None
-        # no lexer gate: formats_sql is lexer-independent (all literals
-        # via _sq; test_compiled_sql_texts_are_lexer_independent)
-        if sql_ok and src_col and _ident_safe(src_col):
+        if sql_ok:
             return F.concat(
-                acc, F.expr(formats_sql(f"`{src_col}`", default=default))
+                acc, F.expr(formats_sql(ctx.source_sql, default=default))
             )
         return F.concat(acc, formats_expr(ctx.marc, default=default))
 

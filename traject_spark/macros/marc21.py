@@ -10,7 +10,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from traject_spark.marc.extractor import _extract_sql, _ident_safe, marc_extract
+from traject_spark.marc.extractor import extract_values
 from traject_spark.marc.spec import parse_marc_spec
 from traject_spark.transforms import trim_punctuation_expr
 from traject_spark.translation_map import TranslationMap
@@ -26,7 +26,7 @@ EXTRACT_MARC_VALID_OPTIONS = {
 }
 
 
-def extract_marc(spec: str, _sql_fastpath: bool = True, **options):
+def extract_marc(spec: str, **options):
     """The workhorse macro (marc21.rb:62-93).
 
     Options applied IN ORDER to the whole accumulator
@@ -36,13 +36,11 @@ def extract_marc(spec: str, _sql_fastpath: bool = True, **options):
 
     Unknown options raise, mirroring marc21.rb:67-69.
 
-    Build fast path (r16): for the common spec shape (datafield-only,
-    no indicator filters, alternate_script='include') the extraction
-    tree is rendered as ONE generated-SQL string (`F.expr`) instead of
-    hundreds of Py4J round trips — the option wrappers stay tiny Column
-    calls on top. ``_sql_fastpath=False`` forces the generic Column
-    builder (the parity-test hook; both paths are value-identical,
-    pinned by tests + the marc_* oracle rows).
+    For the common spec shape (datafield-only, no indicator filters,
+    alternate_script='include') the extraction is ONE generated-SQL
+    string instead of hundreds of Py4J round trips; other shapes use the
+    Column builder (:func:`~traject_spark.marc.extractor.extract_values`).
+    The option wrappers are tiny Column calls on top.
     """
     unknown = set(options) - EXTRACT_MARC_VALID_OPTIONS
     if unknown:
@@ -65,25 +63,7 @@ def extract_marc(spec: str, _sql_fastpath: bool = True, **options):
     parsed_spec = parse_marc_spec(spec)
 
     def macro(acc: Column, ctx=None) -> Column:
-        vals = None
-        if _sql_fastpath:
-            src = getattr(ctx, "_pipeline", None)
-            src_col = (
-                getattr(src, "source_col", None) if src is not None else "marc"
-            )
-            if src_col and _ident_safe(src_col):
-                sql = _extract_sql(
-                    f"`{src_col}`", parsed_spec, separator, alternate_script
-                )
-                if sql is not None:
-                    vals = F.expr(sql)
-        if vals is None:
-            vals = marc_extract(
-                ctx.marc if ctx is not None else F.col("marc"),
-                parsed_spec,
-                separator=separator,
-                alternate_script=alternate_script,
-            )
+        vals = extract_values(ctx, parsed_spec, separator, alternate_script)
         # the reference applies options to the shared accumulator, i.e.
         # including values appended by earlier macros in the same rule
         out = F.concat(acc, vals)

@@ -15,25 +15,24 @@ from typing import Optional
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from traject_spark.expr import let, let2, let3, sql_let
+from traject_spark.expr import let, let2, sql_let
 from traject_spark.marc.extractor import (
+    _SQL_EMPTY,
+    _SQL_FIRST6,
+    _empty,
+    _extract_sql,
+    _sql_collect_subfields,
+    _sql_tag_match,
     collect_matching_lines,
     collect_subfields_expr,
+    extract_values,
     marc_extract,
-    _effective_tag,
 )
 from traject_spark.marc.spec import parse_marc_spec
-from traject_spark.transforms import (
-    ruby_string_strip_expr,
-    ruby_to_i_expr,
-    trim_punctuation_expr,
-)
+from traject_spark.transforms import ruby_to_i_expr, trim_punctuation_expr
 from traject_spark.sqlutil import sql_str_lit as _rx_lit
 
 from traject_spark.translation_map import TranslationMap
-
-# one shared empty-array helper — drifting copies otherwise
-from traject_spark.marc.extractor import _empty
 
 #: geo-facet regexes, shared between the Column path and the SQL
 #: compiler — rendered through sql_str_lit so the compiled text is
@@ -71,29 +70,12 @@ def oclcnum(spec: str = "035a"):
     parsed = parse_marc_spec(spec)
 
     def macro(acc: Column, ctx=None) -> Column:
-        vals = _vals_fastpath(ctx, parsed, separator=None)
+        vals = extract_values(ctx, parsed, separator=None)
         nums = F.transform(vals, lambda v: F.regexp_extract(v, OCLCPAT, 1))
         kept = F.filter(nums, lambda x: x.isNotNull() & (x != ""))
         return F.concat(acc, F.array_distinct(kept))
 
     return macro
-
-
-def _vals_fastpath(ctx, parsed, separator) -> Column:
-    """marc_extract with the r16 generated-SQL build fast path: one
-    F.expr when the spec shape qualifies (see extractor._extract_sql),
-    the generic Column tree otherwise — value-identical either way."""
-    src = getattr(ctx, "_pipeline", None) if ctx is not None else None
-    src_col = getattr(src, "source_col", None) if src is not None else "marc"
-    if src_col and _ident_safe(src_col):
-        sql = _extract_sql(f"`{src_col}`", parsed, separator)
-        if sql is not None:
-            return F.expr(sql)
-    return marc_extract(
-        ctx.marc if ctx is not None else F.col("marc"),
-        parsed,
-        separator=separator,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -111,14 +93,14 @@ def _nonfiling_slice(s: Column, ind2: Column) -> Column:
     )
 
 
-# --- SQL twins of the shared string transforms (r16 build fast path) ------
+# --- SQL forms of the shared string transforms -----------------------------
 
 #: same pattern strings the Column builders in transforms.py compose
 _STRIP_PAT = _rx_lit(r"\A[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r\x00]+\Z")
 
 
 def _sql_strip(v_sql: str) -> str:
-    """SQL twin of transforms.ruby_string_strip_expr."""
+    """SQL form of transforms.ruby_string_strip_expr."""
     return f"regexp_replace({v_sql}, {_STRIP_PAT}, '')"
 
 
@@ -128,7 +110,7 @@ _TRIM3 = _rx_lit(r"\A\[?([^\[\]]+)\]?\Z")
 
 
 def _sql_trim_punct(v_sql: str) -> str:
-    """SQL twin of transforms.trim_punctuation_expr (same four regexes
+    """SQL form of transforms.trim_punctuation_expr (same four regexes
     in the same order)."""
     v1 = f"regexp_replace({v_sql}, {_TRIM1}, '')"
     v2 = f"regexp_replace({v1}, {_TRIM2}, {_rx_lit('$1')})"
@@ -137,7 +119,7 @@ def _sql_trim_punct(v_sql: str) -> str:
 
 
 def _sql_nonfiling(s_sql: str, ind2_sql: str) -> str:
-    """SQL twin of _nonfiling_slice (same let2 shape)."""
+    """SQL form of _nonfiling_slice (same let2 shape)."""
     return sql_let(
         s_sql,
         "nfs",
@@ -150,8 +132,6 @@ def _sql_nonfiling(s_sql: str, ind2_sql: str) -> str:
     )
 
 
-from traject_spark.marc.extractor import _SQL_FIRST6  # noqa: E402
-
 _SQL_EFFTAG = (
     "CASE WHEN f.tag = '880' THEN "
     f"coalesce(substring({_SQL_FIRST6}, 1, 3), '880') ELSE f.tag END"
@@ -159,8 +139,8 @@ _SQL_EFFTAG = (
 
 
 def _simple_data_spec(s) -> bool:
-    """Gate shared by the sortable/lcsh SQL twins: plain datafield spec,
-    no indicator filters, not 880, not a control tag."""
+    """Specs the lcsh generated SQL takes: plain datafield spec, no
+    indicator filters, not 880, not a control tag."""
     from traject_spark.marc.serialize import CONTROL_TAGS
 
     return (
@@ -172,7 +152,7 @@ def _simple_data_spec(s) -> bool:
     )
 
 
-def marc_sortable_author(_sql_fastpath: bool = True):
+def marc_sortable_author():
     """Concat of first 100/110/111 (first+strip) and first 240-else-245
     title with ind2 non-filing chars stripped; ALWAYS appends one string,
     '' when nothing found (marc21_semantics.rb:66-88).
@@ -203,112 +183,43 @@ def marc_sortable_author(_sql_fastpath: bool = True):
             "fld",
             with_field,
         )
+        # [onexx, title].compact.join("   ") — concat_ws skips NULLs
         return f"array(concat_ws('   ', {onexx}, {title}))"
 
     def macro(acc: Column, ctx=None) -> Column:
-        src = getattr(ctx, "_pipeline", None) if ctx is not None else None
-        src_col = (
-            getattr(src, "source_col", None) if src is not None else "marc"
-        )
-        if _sql_fastpath and src_col and _ident_safe(src_col):
-            return F.concat(acc, F.expr(_sql(f"`{src_col}`")))
-        onexx_raw = F.get(_vals_fastpath(ctx, _onexx_spec, " "), 0)
-        onexx = ruby_string_strip_expr(onexx_raw)
-
-        def with_field(fld: Column) -> Column:
-            joined = F.array_join(
-                F.transform(
-                    fld["subfields"],
-                    lambda sf: ruby_string_strip_expr(
-                        trim_punctuation_expr(ruby_string_strip_expr(sf["value"]))
-                    ),
-                ),
-                " ",
-            )
-            return ruby_string_strip_expr(_nonfiling_slice(joined, fld["ind2"]))
-
-        title = let(
-            F.get(
-                F.filter(
-                    ctx.marc["datafields"],
-                    lambda f: _effective_tag(f).isin(["240", "245"]),
-                ),
-                0,
-            ),
-            with_field,
-        )
-        # [onexx, title].compact.join("   ") — concat_ws skips NULLs
-        return F.concat(acc, F.array(F.concat_ws("   ", onexx, title)))
+        return F.concat(acc, F.expr(_sql(ctx.source_sql)))
 
     return macro
 
 
-def marc_sortable_title(spec: str = "245ab", _sql_fastpath: bool = True):
+def marc_sortable_title(spec: str = "245ab"):
     """First 245ab (fallback first $k), ind2 non-filing chars stripped,
     trim_punctuation; nothing appended when no field
     (marc21_semantics.rb:92-118)."""
     (parsed,) = parse_marc_spec(spec)
+    # honor indicator filters a CUSTOM spec carries (the reference's
+    # hardcoded '245ab' never has them, but its collect_matching_lines
+    # would apply them if it did — the faithful generalization of our
+    # net-new spec parameter)
+    match = f"({_SQL_EFFTAG}) = '{parsed.tag}'"
+    if parsed.ind1 is not None:
+        match += f" AND f.ind1 = '{parsed.ind1}'"
+    if parsed.ind2 is not None:
+        match += f" AND f.ind2 = '{parsed.ind2}'"
+    joined = "get(" + _sql_collect_subfields(parsed, " ", fvar="fld") + ", 0)"
+    k = "get(filter(fld.subfields, sf -> sf.code = 'k'), 0).value"
+    with_field = _sql_trim_punct(
+        _sql_nonfiling(f"coalesce({joined}, {k})", "fld.ind2")
+    )
 
-    def _sql(marc_sql: str) -> str:
-        # mirror of the Column body below, rendered once (r16 build fast
-        # path); only reached for indicator-free datafield specs
-        from traject_spark.marc.extractor import _sql_collect_subfields
-
-        joined = (
-            "get(" + _sql_collect_subfields(parsed, " ", fvar="fld") + ", 0)"
-        )
-        k = (
-            "get(filter(fld.subfields, sf -> sf.code = 'k'), 0).value"
-        )
-        with_field = _sql_trim_punct(
-            _sql_nonfiling(f"coalesce({joined}, {k})", "fld.ind2")
-        )
+    def macro(acc: Column, ctx=None) -> Column:
         st = sql_let(
-            f"get(filter({marc_sql}.datafields, "
-            f"f -> ({_SQL_EFFTAG}) = '{parsed.tag}'), 0)",
+            f"get(filter({ctx.source_sql}.datafields, f -> {match}), 0)",
             "fld",
             with_field,
         )
-        return f"filter(array({st}), x -> x IS NOT NULL)"
-
-    def macro(acc: Column, ctx=None) -> Column:
-        src = getattr(ctx, "_pipeline", None) if ctx is not None else None
-        src_col = (
-            getattr(src, "source_col", None) if src is not None else "marc"
-        )
-        if (
-            _sql_fastpath
-            and _simple_data_spec(parsed)
-            and src_col
-            and _ident_safe(src_col)
-        ):
-            return F.concat(acc, F.expr(_sql(f"`{src_col}`")))
-        def with_field(fld: Column) -> Column:
-            joined = F.get(collect_subfields_expr(fld, parsed, " "), 0)
-            k = F.get(
-                F.filter(fld["subfields"], lambda sf: sf["code"] == "k"), 0
-            )["value"]
-            s = F.coalesce(joined, k)
-            return trim_punctuation_expr(_nonfiling_slice(s, fld["ind2"]))
-
-        def field_match(f: Column) -> Column:
-            # honor indicator filters a CUSTOM spec carries (the
-            # reference's hardcoded '245ab' never has them, but its
-            # collect_matching_lines would apply them if it did — the
-            # faithful generalization of our net-new spec parameter)
-            cond = _effective_tag(f) == parsed.tag
-            if parsed.ind1 is not None:
-                cond = cond & (f["ind1"] == parsed.ind1)
-            if parsed.ind2 is not None:
-                cond = cond & (f["ind2"] == parsed.ind2)
-            return cond
-
-        st = let(
-            F.get(F.filter(ctx.marc["datafields"], field_match), 0),
-            with_field,
-        )
         return F.concat(
-            acc, F.filter(F.array(st), lambda x: x.isNotNull())
+            acc, F.expr(f"filter(array({st}), x -> x IS NOT NULL)")
         )
 
     return macro
@@ -361,19 +272,12 @@ def extract_marc_filing_version(spec: str = "245abdefghknp", include_original: b
 _LANGUAGES_DEFAULT_SPEC = "008[35-37]:041a:041d"
 
 
-# one definition shared with the extractor's generated-SQL fast path
-# (moved there in r16; re-exported here for existing importers)
-from traject_spark.marc.extractor import _extract_sql, _ident_safe  # noqa: E402,F401
-
-
 def _languages_sql(marc_sql: str, probe_sql: str) -> str:
-    """Generated-SQL twin of the DEFAULT-spec marc_languages expression
-    tree (the r9 ANN fast-path pattern): the Column builder issues ~3k
-    Py4J round trips per compile (~1.3s measured r10 — rivaling the
-    600k-row execution); this renders the identical tree as ONE string
-    for ``F.expr``. Element-for-element parity with the Column path is
-    pinned by tests/test_semantics.py::test_marc_languages_sql_fastpath
-    — each piece mirrors a named helper:
+    """The DEFAULT-spec marc_languages expression as ONE generated-SQL
+    string for ``F.expr``: the Column builder issues ~3k Py4J round
+    trips per compile (~1.3s measured r10 — rivaling the 600k-row
+    execution). Values are pinned by tests/data/macro_goldens.json —
+    each piece mirrors a named helper:
 
     - ctrl: 008 byte-slice [35-37] (extractor._byteslice: NULL when the
       fixed field is shorter than the range start);
@@ -429,15 +333,13 @@ def _languages_sql(marc_sql: str, probe_sql: str) -> str:
 def marc_languages(
     spec: str = _LANGUAGES_DEFAULT_SPEC,
     translation_map: Optional[TranslationMap] = None,
-    _sql_fastpath: bool = True,
 ):
     """Byte-slice + subfield codes; packed >3-char values chunked into
     3-char codes; de-dup; translate (marc21_semantics.rb:195-223).
 
-    ``_sql_fastpath=False`` forces the generic Column builder — the
-    parity-test hook; production keeps the default (the generated-SQL
-    path applies only for the default spec + a simple map, and builds
-    in ~1 Py4J round trip instead of ~3k)."""
+    The default spec with a simple map builds as generated SQL in ~1
+    Py4J round trip instead of ~3k; a custom spec, or a map the SQL
+    probe cannot carry, uses the Column builder."""
     parsed = parse_marc_spec(spec)
     if translation_map is None:
         translation_map = TranslationMap("marc_languages")
@@ -446,7 +348,7 @@ def marc_languages(
 
     probe_sql = (
         translation_map.sql_probe("v")
-        if _sql_fastpath and spec == _LANGUAGES_DEFAULT_SPEC
+        if spec == _LANGUAGES_DEFAULT_SPEC
         else None
     )
 
@@ -462,15 +364,13 @@ def marc_languages(
         )
 
     def macro(acc: Column, ctx=None) -> Column:
-        src = getattr(ctx, "_pipeline", None)
-        src_col = getattr(src, "source_col", None) if src else None
         # no lexer gate: the compiled SQL renders every regex/text
         # literal via sql_str_lit, so it parses identically under both
         # string-lexer modes (pinned by
         # test_compiled_sql_texts_are_lexer_independent)
-        if probe_sql is not None and src_col and _ident_safe(src_col):
+        if probe_sql is not None:
             return F.concat(
-                acc, F.expr(_languages_sql(f"`{src_col}`", probe_sql))
+                acc, F.expr(_languages_sql(ctx.source_sql, probe_sql))
             )
         codes = collect_matching_lines(ctx.marc, parsed, data_fn)
         codes = F.array_distinct(codes)
@@ -581,118 +481,8 @@ def marc_instrument_codes_normalized(spec: str = "048"):
 # publication date (marc21_semantics.rb:316-394)
 # ---------------------------------------------------------------------------
 
-def publication_date_expr(
-    marc: Column,
-    estimate_tolerance: int = 15,
-    min_year: int = 500,
-    max_year: Optional[int] = None,
-) -> Column:
-    """The reference's single-date decision procedure as ONE Column
-    expression (long, nullable) — oracle-checkable SQL, no UDF.
-
-    Logic (marc21_semantics.rb:335-394):
-    - 008 with length >= 11: date_type = byte 6, date1 = bytes 7-10,
-      date2 = bytes 11-14 when length > 15 else date1;
-    - type q with date1 != date2: range midpoint ((d1.sub u->0) +
-      (d2.sub u->9))/2 if 0 < d2-d1 <= tolerance  [Ruby sub: FIRST 'u' only,
-      then #to_i prefix parse];
-    - else, type not in (n, q): prefer date2 for r/p when nonzero; every
-      'u' digit -> 0, midpoint via 10^ucount when within tolerance;
-    - fallback: first 4 digits found in 264c, then 260c;
-    - clamp to [min_year, max_year].
-    """
-    if max_year is None:
-        import datetime
-
-        max_year = datetime.date.today().year + 6
-
-    # Every shared piece is let-bound: the naive formulation duplicated the
-    # 008 subtree hundreds of times and took minutes to plan/codegen.
-    def from_008_body(f8: Column, dtype: Column, d1: Column, d2: Column) -> Column:
-        # q-range branch: Ruby sub() replaces only the FIRST 'u'.
-        # The dtype/d1!=d2 guards sit OUTSIDE the let bindings: CaseWhen
-        # only evaluates its value expression when the condition holds, so
-        # the two regex subs are skipped entirely for the (dominant)
-        # non-'q' records instead of running on every row
-        q_val = F.when(
-            (dtype == "q") & (d1 != d2),
-            let2(
-                ruby_to_i_expr(_ruby_sub_first(d1, "u", "0")),
-                ruby_to_i_expr(_ruby_sub_first(d2, "u", "9")),
-                lambda q1, q2: F.when(
-                    (q2 > q1) & ((q2 - q1) <= F.lit(estimate_tolerance)),
-                    F.floor((q1 + q2) / 2).cast("long"),
-                ),
-            ),
-        )
-        # single-date branch, same lazy-guard treatment; the 'u' counting
-        # and u->0 fill are char-level translate, not regex
-        date_str = F.when(
-            dtype.isin(["r", "p"]) & (ruby_to_i_expr(d2) != 0), d2
-        ).otherwise(d1)
-        single_val = F.when(
-            ~dtype.isin(["n", "q"]),
-            let(
-                date_str,
-                lambda ds: let2(
-                    F.length(ds) - F.length(F.translate(ds, "u", "")),
-                    ruby_to_i_expr(F.translate(ds, "u", "0")),
-                    lambda ucount, date_num: let(
-                        F.pow(F.lit(10.0), ucount.cast("double")).cast("long"),
-                        lambda delta: F.when(
-                            (ucount > 0) & (date_num != 0),
-                            F.when(
-                                delta <= F.lit(estimate_tolerance),
-                                (date_num + F.floor(delta / 2)).cast("long"),
-                            ),
-                        ).otherwise(F.when(date_num != 0, date_num)),
-                    ),
-                ),
-            ),
-        )
-        usable = f8.isNotNull() & (F.length(f8) >= 11)
-        return F.when(usable, F.coalesce(q_val, single_val))
-
-    f8_raw = F.get(
-        F.filter(marc["controlfields"], lambda f: f["tag"] == "008"), 0
-    )["value"]
-    from_008 = let(
-        f8_raw,
-        lambda f8: let3(
-            F.substring(f8, 7, 1),
-            F.substring(f8, 8, 4),
-            F.when(F.length(f8) > 15, F.substring(f8, 12, 4)).otherwise(
-                F.substring(f8, 8, 4)
-            ),
-            lambda dtype, d1, d2: from_008_body(f8, dtype, d1, d2),
-        ),
-    )
-
-    # --- 264c / 260c fallback: first 4-digit run anywhere ----------------
-    def four_digits(v: Column) -> Column:
-        return let(
-            F.regexp_extract(v, r"(\d{4})", 1),
-            lambda g: F.when(g.isNotNull() & (g != ""), g.cast("long")),
-        )
-
-    fallback = F.coalesce(
-        four_digits(F.get(marc_extract(marc, "264c", separator=None), 0)),
-        four_digits(F.get(marc_extract(marc, "260c", separator=None), 0)),
-    )
-
-    return let(
-        F.coalesce(from_008, fallback),
-        lambda found: F.when(
-            found.isNotNull()
-            & (found >= F.lit(min_year))
-            & (found <= F.lit(max_year)),
-            found,
-        ),
-    )
-
-
 def _sql_to_i(v_sql: str) -> str:
-    """SQL twin of transforms.ruby_to_i_expr (duplicated subtree like the
+    """SQL form of transforms.ruby_to_i_expr (duplicated subtree like the
     Column form — the regexp_extract appears twice there too)."""
     pat = _rx_lit(r"\A\s*([+-]?\d+)")
     d = f"regexp_extract({v_sql}, {pat}, 1)"
@@ -703,7 +493,7 @@ def _sql_to_i(v_sql: str) -> str:
 
 
 def _sql_sub_first(v_sql: str, pattern_no_groups: str, replacement: str) -> str:
-    """SQL twin of _ruby_sub_first (same wrapped pattern + $1<repl>$2
+    """SQL form of _ruby_sub_first (same wrapped pattern + $1<repl>$2
     replacement string)."""
     pat = _rx_lit(r"(?s)\A(.*?)" + f"(?:{pattern_no_groups})" + r"(.*)\Z")
     rep = _rx_lit("$1" + replacement + "$2")
@@ -713,13 +503,25 @@ def _sql_sub_first(v_sql: str, pattern_no_groups: str, replacement: str) -> str:
 def _pubdate_sql(
     marc_sql: str, estimate_tolerance: int, min_year: int, max_year: int
 ) -> str:
-    """Generated-SQL twin of :func:`publication_date_expr` — the biggest
-    single build cost of the flagship pipeline (~0.56s of Py4J round
-    trips per fresh compile, r16 probe) rendered as ONE parseable
-    string. Mirrors the Column tree piece for piece (the let bindings
-    become sql_let aggregates with named variables); value parity pinned
-    by tests/test_semantics.py::test_pubdate_sql_fastpath_parity and the
-    marc_pubdate oracle row."""
+    """The reference's single-date decision procedure as ONE generated-SQL
+    expression (bigint, nullable); shared pieces are sql_let-bound so
+    the 008 subtree is not copied per use. Values are pinned by
+    tests/data/macro_goldens.json and the marc_pubdate oracle row.
+
+    Logic (marc21_semantics.rb:335-394):
+    - 008 with length >= 11: date_type = byte 6, date1 = bytes 7-10,
+      date2 = bytes 11-14 when length > 15 else date1;
+    - type q with date1 != date2: range midpoint ((d1.sub u->0) +
+      (d2.sub u->9))/2 if 0 < d2-d1 <= tolerance  [Ruby sub: FIRST 'u'
+      only, then #to_i prefix parse];
+    - else, type not in (n, q): prefer date2 for r/p when nonzero; every
+      'u' digit -> 0, midpoint via 10^ucount when within tolerance;
+    - fallback: first 4 digits found in 264c, then 260c;
+    - clamp to [min_year, max_year].
+
+    The dtype guards sit OUTSIDE the let bindings: CASE WHEN evaluates
+    its value only when the condition holds, so the regex subs are
+    skipped for the (dominant) non-'q' records."""
     tol = int(estimate_tolerance)
 
     # --- 008 branch -------------------------------------------------------
@@ -804,10 +606,8 @@ def _pubdate_sql(
             "THEN CAST(g4 AS bigint) END",
         )
 
-    from traject_spark.marc.extractor import _extract_sql as _ex
-
-    f264 = f"get({_ex(marc_sql, parse_marc_spec('264c'), None)}, 0)"
-    f260 = f"get({_ex(marc_sql, parse_marc_spec('260c'), None)}, 0)"
+    f264 = f"get({_extract_sql(marc_sql, parse_marc_spec('264c'), None)}, 0)"
+    f260 = f"get({_extract_sql(marc_sql, parse_marc_spec('260c'), None)}, 0)"
     fallback = f"coalesce({four_digits(f264)}, {four_digits(f260)})"
 
     return sql_let(
@@ -824,40 +624,24 @@ def marc_publication_date(
     min_year: int = 500,
     max_year: Optional[int] = None,
     as_string: bool = True,
-    _sql_fastpath: bool = True,
 ):
-    """Macro form: appends the single date when found
-    (marc21_semantics.rb:316-332).  ``as_string`` keeps the accumulator
-    uniformly array<string> (writers serialize the digits); set False when
-    composing a typed column directly via publication_date_expr.
-
-    Build fast path (r16): the whole decision procedure renders as ONE
-    generated-SQL string (``_pubdate_sql``); ``_sql_fastpath=False``
-    forces the Column builder (parity-test hook)."""
+    """Appends the single date when found (marc21_semantics.rb:316-332),
+    built as one generated-SQL string (``_pubdate_sql``). ``as_string``
+    keeps the accumulator uniformly array<string> (writers serialize the
+    digits); False appends the typed bigint."""
     if max_year is None:
         import datetime
 
         max_year = datetime.date.today().year + 6
 
     def macro(acc: Column, ctx=None) -> Column:
-        src = getattr(ctx, "_pipeline", None) if ctx is not None else None
-        src_col = (
-            getattr(src, "source_col", None) if src is not None else "marc"
+        d_sql = _pubdate_sql(
+            ctx.source_sql, estimate_tolerance, min_year, max_year
         )
-        if _sql_fastpath and src_col and _ident_safe(src_col):
-            d_sql = _pubdate_sql(
-                f"`{src_col}`", estimate_tolerance, min_year, max_year
-            )
-            v_sql = f"CAST({d_sql} AS string)" if as_string else d_sql
-            return F.concat(
-                acc,
-                F.expr(f"filter(array({v_sql}), x -> x IS NOT NULL)"),
-            )
-        d = publication_date_expr(
-            ctx.marc, estimate_tolerance, min_year, max_year
+        v_sql = f"CAST({d_sql} AS string)" if as_string else d_sql
+        return F.concat(
+            acc, F.expr(f"filter(array({v_sql}), x -> x IS NOT NULL)")
         )
-        v = d.cast("string") if as_string else d
-        return F.concat(acc, F.filter(F.array(v), lambda x: x.isNotNull()))
 
     return macro
 
@@ -885,7 +669,7 @@ def marc_lcc_to_broad_category(
     )
 
     def macro(acc: Column, ctx=None) -> Column:
-        cands = _vals_fastpath(ctx, parsed, separator=None)
+        cands = extract_values(ctx, parsed, separator=None)
         kept = F.filter(cands, lambda v: v.rlike(LCC_REGEX))
         letters = F.transform(kept, lambda v: F.substring(F.ltrim(v), 1, 1))
         mapped = F.array_distinct(tmap.translate_array_expr(letters))
@@ -906,12 +690,11 @@ _GEO_Z_DEFAULT = "600:610:611:630:648:650:654:655:656:690:651:691"
 
 
 def _geo_sql(marc_sql: str, probe_sql: str) -> str:
-    """Generated-SQL twin of the DEFAULT-spec marc_geo_facet parts
+    """The DEFAULT-spec marc_geo_facet parts as ONE generated-SQL string
     (part1+part2+part3 concatenated; the caller wraps acc + distinct).
-    One F.expr instead of ~1000 Py4J round trips; value parity with the
-    Column path is pinned by
-    tests/test_semantics.py::test_marc_geo_sql_fastpath_parity. Each
-    fragment mirrors a named Column helper:
+    One F.expr instead of ~1000 Py4J round trips; values are pinned by
+    tests/data/macro_goldens.json. Each fragment mirrors a named Column
+    helper:
 
     - 043a codes via the merged tag match incl. the 880 $6 rewrite
       (extractor.match_cond), non-null $a values only
@@ -979,14 +762,15 @@ def _geo_sql(marc_sql: str, probe_sql: str) -> str:
         + sql_let(zs, "zs", z_body)
         + ", CAST(array() AS array<string>))))"
     )
-    return f"concat({part1}, {part2}, {part3})"
+    # marc.datafields = NULL (schema-legal in user parquet) nulls all
+    # three parts; contribute nothing rather than wipe the accumulator
+    return f"coalesce(concat({part1}, {part2}, {part3}), {_SQL_EMPTY})"
 
 
 def marc_geo_facet(
     geo_a_fields: str = _GEO_A_DEFAULT,
     geo_z_fields: str = _GEO_Z_DEFAULT,
     translation_map=None,
-    _sql_fastpath: bool = True,
 ):
     """043a codes (trailing hyphens stripped) through the geographic map;
     651a/691a with FIRST '. ' occurrence removed (reference uses
@@ -1015,27 +799,23 @@ def marc_geo_facet(
             ).otherwise(zs),
         )
 
-    # generated-SQL twin (VERDICT r10 #8): default specs + a
-    # probe-eligible map only; the probe embeds whatever map the SAME
-    # TranslationMap load produced, so user shadowing flows through
+    # generated SQL for the default specs + a probe-eligible map; the
+    # probe embeds whatever map the SAME TranslationMap load produced, so
+    # user shadowing flows through. Other inputs use the Column builder.
     probe_sql = (
         tmap.sql_probe("v")
-        if _sql_fastpath
-        and geo_a_fields == _GEO_A_DEFAULT
-        and geo_z_fields == _GEO_Z_DEFAULT
+        if geo_a_fields == _GEO_A_DEFAULT and geo_z_fields == _GEO_Z_DEFAULT
         else None
     )
 
     def macro(acc: Column, ctx=None) -> Column:
-        src = getattr(ctx, "_pipeline", None)
-        src_col = getattr(src, "source_col", None) if src else None
         # no lexer gate: the compiled SQL renders every regex/text
         # literal via sql_str_lit, so it parses identically under both
         # string-lexer modes (pinned by
         # test_compiled_sql_texts_are_lexer_independent)
-        if probe_sql is not None and src_col and _ident_safe(src_col):
+        if probe_sql is not None:
             return F.array_distinct(
-                F.concat(acc, F.expr(_geo_sql(f"`{src_col}`", probe_sql)))
+                F.concat(acc, F.expr(_geo_sql(ctx.source_sql, probe_sql)))
             )
         codes = marc_extract(ctx.marc, "043a", separator=None)
         part1 = F.flatten(
@@ -1115,14 +895,11 @@ def _lcsh_sql(
     subdivision_separator: str,
     other_separator: str,
 ) -> str:
-    """Generated-SQL twin of the lcsh per-field assembly (r16 build fast
-    path) for the merged single-group shape (all-subfield specs, no
-    indicator filters). Mirrors per_field + collect_matching_lines'
-    single-group path; parity pinned by
-    tests/test_semantics.py::test_lcsh_sql_fastpath_parity and the
+    """The lcsh per-field assembly as ONE generated-SQL string for the
+    merged single-group shape (all-subfield specs, no indicator
+    filters). Mirrors per_field + collect_matching_lines' single-group
+    path; values are pinned by tests/data/macro_goldens.json and the
     marc_lcsh oracle row."""
-    from traject_spark.marc.extractor import _SQL_EMPTY, _sql_tag_match
-
     subd = _rx_lit(subdivision_separator)
     other = _rx_lit(other_separator)
     code_pat = _rx_lit(r"\A[a-z]\Z")
@@ -1159,14 +936,15 @@ def marc_lcsh_formatted(
     spec: str = "600:610:611:630:648:650:651:654:662",
     subdivision_separator: str = " — ",
     other_separator: str = " ",
-    _sql_fastpath: bool = True,
 ):
     """Assemble each subject field into one pre-coordinated string:
     alphabetic subfields joined; $v/$x/$y/$z prefixed by the subdivision
     separator, others by ' ' except the record's FIRST subfield (index 0 —
     the original index, so a leading control subfield shifts it, matching
     assemble_lcsh's each_with_index); trailing period stripped; empty ->
-    nil (marc21_semantics.rb:572-596)."""
+    nil (marc21_semantics.rb:572-596). Specs of plain subject tags build
+    as generated SQL; subfield or indicator specs use the Column
+    builder."""
     parsed = parse_marc_spec(spec)
     subd = ["v", "x", "y", "z"]
 
@@ -1204,16 +982,12 @@ def marc_lcsh_formatted(
     )
 
     def macro(acc: Column, ctx=None) -> Column:
-        src = getattr(ctx, "_pipeline", None) if ctx is not None else None
-        src_col = (
-            getattr(src, "source_col", None) if src is not None else "marc"
-        )
-        if _sql_fastpath and eligible and src_col and _ident_safe(src_col):
+        if eligible:
             return F.concat(
                 acc,
                 F.expr(
                     _lcsh_sql(
-                        f"`{src_col}`",
+                        ctx.source_sql,
                         [s.tag for s in parsed],
                         subdivision_separator,
                         other_separator,

@@ -75,15 +75,6 @@ def _first_6(f: Column) -> Column:
     )["value"]
 
 
-def _effective_tag(f: Column) -> Column:
-    """880 -> first 3 bytes of first $6, falling back to '880' when absent
-    (lib/traject/marc_extractor_spec.rb:58-67)."""
-    return F.when(
-        f["tag"] == ALTERNATE_SCRIPT_TAG,
-        F.coalesce(F.substring(_first_6(f), 1, 3), F.lit(ALTERNATE_SCRIPT_TAG)),
-    ).otherwise(f["tag"])
-
-
 def _concat_arrays(parts: list[Column]) -> Column:
     if not parts:
         return _empty()
@@ -327,16 +318,12 @@ def collect_matching_lines(
     )
 
 
-# one shared definition (traject_spark.sqlutil), re-exported for callers
-from traject_spark.sqlutil import ident_safe as _ident_safe  # noqa: E402
-
-
 _SQL_EMPTY = "CAST(array() AS array<string>)"
 _SQL_FIRST6 = "get(filter(f.subfields, sf -> sf.code = '6'), 0).value"
 
 
 def _sql_tag_match(tags: list) -> str:
-    """SQL twin of ``match_cond`` for indicator-free non-880 specs under
+    """SQL form of ``match_cond`` for indicator-free non-880 specs under
     alternate_script='include' (the only shape :func:`_extract_sql`
     accepts): tag in tags OR an 880 whose first $6 links one of them."""
     tl = ", ".join(f"'{t}'" for t in tags)
@@ -347,7 +334,7 @@ def _sql_tag_match(tags: list) -> str:
 
 
 def _sql_collect_subfields(spec, separator: Optional[str], fvar: str = "f") -> str:
-    """SQL twin of :func:`collect_subfields_expr` (same null-drop,
+    """SQL form of :func:`collect_subfields_expr` (same null-drop,
     coalesce, and join rules; literals via sql_str_lit so the text is
     lexer-independent). ``fvar`` names the field lambda/let variable in
     scope at the call site."""
@@ -380,15 +367,13 @@ def _extract_sql(
     separator: Optional[str] = " ",
     alternate_script: Union[str, bool] = "include",
 ) -> Optional[str]:
-    """Generated-SQL twin of :func:`marc_extract` for the common shape —
-    datafield-only specs, no indicator filters, no literal-880 specs,
-    alternate_script='include' (the default) — rendered as ONE parseable
-    string so the flagship rules build in ~1 Py4J round trip instead of
-    hundreds (the r15 minhash/simhash/langid build-fast-path pattern).
-    Returns None when the spec is outside that shape (callers fall back
-    to the Column builder). Value parity is pinned by
-    tests/test_extractor.py::test_extract_sql_fastpath_parity plus the
-    marc_* oracle rows that route through it."""
+    """:func:`marc_extract` as ONE generated-SQL string for the common
+    shape — datafield-only specs, no indicator filters, no literal-880
+    specs, alternate_script='include' (the default) — so the flagship
+    rules build in ~1 Py4J round trip instead of hundreds. Returns None
+    when the spec is outside that shape (:func:`extract_values` then
+    uses the Column builder). Values are pinned by
+    tests/data/macro_goldens.json and the marc_* oracle rows."""
     if alternate_script not in ("include", True):
         return None
     specs = _resolve_specs(spec)
@@ -459,4 +444,22 @@ def marc_extract(
         spec,
         data_fn=lambda f, s: collect_subfields_expr(f, s, separator),
         alternate_script=alternate_script,
+    )
+
+
+def extract_values(
+    ctx,
+    spec,
+    separator: Optional[str] = " ",
+    alternate_script: Union[str, bool] = "include",
+) -> Column:
+    """:func:`marc_extract` over a pipeline context's record column: the
+    generated SQL where :func:`_extract_sql` renders the spec, the Column
+    builder for the shapes it does not (control, byte, indicator and
+    880 specs, alternate_script False/'only')."""
+    sql = _extract_sql(ctx.source_sql, spec, separator, alternate_script)
+    if sql is not None:
+        return F.expr(sql)
+    return marc_extract(
+        ctx.marc, spec, separator=separator, alternate_script=alternate_script
     )

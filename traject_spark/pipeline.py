@@ -21,8 +21,6 @@ Fidelity notes (SURVEY §4 traps):
 
 from __future__ import annotations
 
-import os
-import threading
 from typing import Callable, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -30,26 +28,14 @@ from pyspark.sql import functions as F
 
 from traject_spark.expr import let
 from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
+from traject_spark.sqlutil import ident_safe
 
 _EMPTY = "array<string>"
 
-#: shared worker pool for speculative parallel compilation. Module-level
-#: and lazily created: with Py4J's pinned-thread mode each Python thread
-#: owns a JVM connection, so a per-compile pool would leak connections.
-_COMPILE_POOL = None
-_COMPILE_POOL_LOCK = threading.Lock()
-
-
-def _compile_pool():
-    global _COMPILE_POOL
-    with _COMPILE_POOL_LOCK:
-        if _COMPILE_POOL is None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            _COMPILE_POOL = ThreadPoolExecutor(
-                max_workers=8, thread_name_prefix="traject-compile"
-            )
-    return _COMPILE_POOL
+#: plain name the record column is projected under when the user's
+#: column name (``my-marc``, nested ``rec.marc``) is not an identifier
+#: generated SQL can quote
+_SOURCE_ALIAS = "__traject_source__"
 
 
 def _concat_contributions(exprs: list) -> Column:
@@ -92,6 +78,18 @@ class PipelineContext:
     @property
     def record(self) -> Column:
         return F.col(self._pipeline.source_col)
+
+    @property
+    def source_sql(self) -> str:
+        """The record column as SQL text, for macros that build their
+        expression as one generated-SQL string (``F.expr``)."""
+        name = self._pipeline.source_col
+        if not ident_safe(name):
+            raise ValueError(
+                f"source column {name!r} is not a plain identifier; "
+                "compile through Pipeline.apply, which renames it"
+            )
+        return f"`{name}`"
 
     def output(self, name: str) -> Column:
         """Expression for field ``name`` as accumulated so far, with the
@@ -161,58 +159,6 @@ class PipelineContext:
                 ),
             )
         self._pipeline._error_exprs.append(err)
-
-
-class _SpeculativeAccess(BaseException):
-    """Raised when a to_field macro touches ORDER-DEPENDENT shared state
-    during a speculative parallel compile — the signal to throw the
-    parallel attempt away and recompile sequentially. BaseException, not
-    Exception, so a macro's own ``except Exception`` rescue cannot
-    swallow the tripwire and let an order-dependent result escape."""
-
-
-class _TripwireClipboard(dict):
-    """Clipboard stand-in for speculative compiles: ANY access aborts
-    the parallel attempt (clipboard is the documented cross-step
-    channel, so reads and writes are both ordering-dependent)."""
-
-    def _trip(self, *a, **k):
-        raise _SpeculativeAccess("clipboard")
-
-    __getitem__ = __setitem__ = __delitem__ = __contains__ = _trip
-    __iter__ = __len__ = __or__ = __ror__ = __ior__ = __eq__ = _trip
-    get = setdefault = pop = popitem = update = clear = _trip
-    keys = values = items = copy = _trip
-
-
-class _SpeculativeContext(PipelineContext):
-    """PipelineContext for speculative parallel compilation of ONE
-    to_field step. Pure expression building (ctx.marc/ctx.record,
-    settings reads) proceeds; every order-dependent channel — clipboard,
-    reading/writing other fields, skip conditions, materialization,
-    error registration — raises :class:`_SpeculativeAccess`, which the
-    compiler turns into a sequential recompile. Results from a tripped
-    attempt are never used, so a partially-built expression is
-    harmless garbage."""
-
-    def __init__(self, pipeline: "Pipeline"):
-        super().__init__(pipeline)
-        self.clipboard = _TripwireClipboard()
-
-    def output(self, name: str) -> Column:
-        raise _SpeculativeAccess("output")
-
-    def add_output(self, name: str, values: Column) -> None:
-        raise _SpeculativeAccess("add_output")
-
-    def skip_when(self, cond: Column) -> None:
-        raise _SpeculativeAccess("skip_when")
-
-    def materialize(self, expr: Column, hint: str = "mat") -> Column:
-        raise _SpeculativeAccess("materialize")
-
-    def record_error(self, err: Column) -> None:
-        raise _SpeculativeAccess("record_error")
 
 
 class Pipeline:
@@ -314,30 +260,28 @@ class Pipeline:
         """Run every step once, building the field-expression table.
 
         Returns ([(field_name, final Column)], skip_condition_or_None).
-
-        Expression building is driver-side Py4J traffic — the flagship
-        12-rule pipeline is ~18k round trips (~4.5s), comparable to
-        EXECUTING it over 600k rows — and it is latency-bound (socket
-        waits release the GIL). When every step is an independent
-        ``to_field``, the steps compile SPECULATIVELY in parallel on a
-        small thread pool; any step that touches an order-dependent
-        channel (clipboard, other fields, skip!, materialize/rescue)
-        trips :class:`_SpeculativeAccess` and the whole pipeline
-        recompiles sequentially, so the COMPILED EXPRESSIONS are
-        order-exact in every case. Caveat: on a tripped attempt the
-        non-tripping macros ran once speculatively and run again
-        sequentially — a macro with Python-level side effects beyond
-        the ctx (logging, module-level counters) observes two
-        invocations per compile; keep macros pure w.r.t. everything but
-        ctx, or disable with ``TRAJECT_SPARK_PARALLEL_COMPILE=0``.
-        Results merge in registration order either way.
+        Steps run in registration order, each macro exactly once.
+        ``source_col`` must be a plain identifier here; ``apply`` sees
+        to that for any record column.
         """
         self._field_exprs = {}
         self._skip_conds = []
         self._error_exprs = []
         self._materialized = []
-        if not self._compile_steps_parallel():
-            self._compile_steps_sequential()
+        ctx = PipelineContext(self)
+        for step in self._steps:
+            if step[0] == "to_field":
+                _, names, macros = step
+                ctx.current_step = f"to_field {names}"
+                acc = F.array().cast(_EMPTY)
+                for macro in macros:
+                    acc = macro(acc, ctx)
+                for n in names:
+                    self._add_field_expr(n, acc)
+            else:
+                _, fn = step
+                ctx.current_step = "each_record"
+                fn(ctx)
 
         fields = []
         for name, exprs in self._field_exprs.items():
@@ -354,78 +298,6 @@ class Pipeline:
             skip = cond if skip is None else (skip | cond)
         return skip
 
-    def _compile_steps_sequential(self) -> None:
-        ctx = PipelineContext(self)
-        for step in self._steps:
-            if step[0] == "to_field":
-                _, names, macros = step
-                ctx.current_step = f"to_field {names}"
-                acc = F.array().cast(_EMPTY)
-                for macro in macros:
-                    acc = macro(acc, ctx)
-                for n in names:
-                    self._add_field_expr(n, acc)
-            else:
-                _, fn = step
-                ctx.current_step = "each_record"
-                fn(ctx)
-        ctx.current_step = None
-
-    def _compile_steps_parallel(self) -> bool:
-        """Try the speculative parallel compile; True on success.
-
-        Eligible only when the pipeline is PURE to_field steps (an
-        each_record between rules is an ordering barrier by contract)
-        and big enough for the pool to pay for itself. Any tripwire or
-        macro error abandons the attempt — errors then re-raise from the
-        sequential pass with the reference's step ordering intact."""
-        if os.environ.get("TRAJECT_SPARK_PARALLEL_COMPILE", "1") == "0":
-            return False
-        # re-entry guard: a macro that compiles a sub-pipeline from
-        # inside a pool thread would re-submit to the same 8-worker pool
-        # and can deadlock once every worker blocks on a nested
-        # f.result() — nested compiles go sequential
-        if threading.current_thread().name.startswith("traject-compile"):
-            return False
-        if len(self._steps) < 4 or any(
-            s[0] != "to_field" for s in self._steps
-        ):
-            return False
-
-        def build(step):
-            _, names, macros = step
-            ctx = _SpeculativeContext(self)
-            ctx.current_step = f"to_field {names}"
-            acc = F.array().cast(_EMPTY)
-            for macro in macros:
-                acc = macro(acc, ctx)
-            return acc
-
-        futures = [
-            _compile_pool().submit(build, step) for step in self._steps
-        ]
-        try:
-            results = [f.result() for f in futures]
-        except (_SpeculativeAccess, Exception):
-            # tripwire or macro error: wait out the stragglers (their
-            # half-built expressions are garbage either way), then let
-            # the sequential pass produce the result — or re-raise the
-            # error — with exact step ordering. ONLY these two: a
-            # KeyboardInterrupt/SystemExit in the main thread must
-            # abort the job, not silently restart compilation
-            for f in futures:
-                f.cancel()
-                if not f.cancelled():
-                    try:
-                        f.result()
-                    except (_SpeculativeAccess, Exception):
-                        pass
-            return False
-        for step, acc in zip(self._steps, results):
-            for n in step[1]:
-                self._add_field_expr(n, acc)
-        return True
-
     # -- execution ---------------------------------------------------------
     def apply(
         self,
@@ -435,9 +307,10 @@ class Pipeline:
     ) -> DataFrame:
         """Compile and apply: one narrow select (+ skip filter)."""
         prev_source = self.source_col
+        user_source = self._adapted_source(df)
         # adapt PER CALL — restored afterwards so a later apply() on a
         # frame that does carry the configured column is unaffected
-        self.source_col = self._adapted_source(df)
+        df, self.source_col = self._with_plain_source(df)
         try:
             fields, skip = self.compile()
             cols: list[Column] = []
@@ -455,7 +328,7 @@ class Pipeline:
             for k in keep or []:
                 cols.append(F.col(k))
             if keep_source:
-                cols.append(F.col(self.source_col))
+                cols.append(F.col(user_source))
             cols.extend(expr for _, expr in fields)
             out = df
             if self._materialized:
@@ -497,6 +370,17 @@ class Pipeline:
         present = [c for c in ("marc", "xml") if c in df.columns]
         return present[0] if len(present) == 1 else self.source_col
 
+    def _with_plain_source(self, df: DataFrame) -> tuple[DataFrame, str]:
+        """``df`` and the name to compile its record column under: the
+        adapted column itself when it is a plain identifier, else a copy
+        projected as ``_SOURCE_ALIAS``. Generated SQL quotes one
+        top-level name, so ``my-marc`` or a nested ``rec.marc`` would
+        not resolve there."""
+        src = self._adapted_source(df)
+        if ident_safe(src):
+            return df, src
+        return df.withColumn(_SOURCE_ALIAS, F.col(src)), _SOURCE_ALIAS
+
     def _error_col(self) -> Optional[Column]:
         if not self._error_exprs:
             return None
@@ -530,6 +414,8 @@ class Pipeline:
             raise ValueError(
                 'apply_with_quarantine requires settings(mapping_rescue="skip")'
             )
+        user_source = self._adapted_source(df)
+        df, _ = self._with_plain_source(df)
         good = self.apply(df, keep=keep)
         if self._materialized:
             # the good and bad outputs are SEPARATE plans: without a
@@ -561,7 +447,7 @@ class Pipeline:
             (err if err is not None else F.lit(None).cast("string"))
             .alias("_error")
         )
-        cols.append(F.col(self._adapted_source(df)))
+        cols.append(F.col(user_source))
         # missing-only: when df is the checkpointed base from above, the
         # hidden columns are already present and must be REUSED (a plain
         # withColumns would overwrite them with the expressions and
@@ -611,7 +497,7 @@ class Pipeline:
                 rescue_with(bad)
             else:
                 good = self.apply(df)
-                base = df
+                base, _ = self._with_plain_source(df)
                 if on_skipped is not None and self._materialized:
                     # share ONE evaluation of the nondeterministic
                     # rescued-UDF columns between the output and the
@@ -619,7 +505,7 @@ class Pipeline:
                     # mechanism): recomputing them per frame could land
                     # a record in none/two of the frames when a UDF
                     # fails transiently
-                    base = df.withColumns(
+                    base = base.withColumns(
                         dict(self._materialized)
                     ).localCheckpoint(eager=False)
                     good = self.apply(base)
