@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Benchmark harness (BASELINE.md targets B1-B5 + corpus operators).
+"""Benchmark harness (BASELINE.md targets B1-B4 + corpus operators).
 
 Runs headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
@@ -10,7 +10,6 @@ B1 map_full_pipeline   600k synthetic MARC x full multi-field pipeline
 B2 map_minimum_slice   600k x extract_marc("245ab") + NDJSON sink
 B3 map_translation     600k x marc_languages (translation-map heavy)
 B4 sink_solr_mock      600k docs batched POSTs to a local mock Solr
-B5 rel_*               relational sanity on lineitem/customer/events
 plus dedup/simhash/minhash/similarity/text-stats corpus operators.
 """
 
@@ -929,51 +928,6 @@ def b_corpus_curate_cluster(spark):
     )
 
 
-def b_rel_pricing(spark):
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    noop(
-        li.groupBy("l_returnflag", "l_linestatus").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("sum_base"),
-        )
-    )
-
-
-def b_rel_top_nations(spark):
-    cust = spark.read.parquet(f"{SF_DIR}/customer.parquet")
-    nation = spark.read.parquet(f"{SF_DIR}/nation.parquet")
-    noop(
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("c_acctbal").alias("bal"))
-    )
-
-
-def b_rel_events_hourly(spark):
-    # time the PRODUCTION operator (decimal-exact sums), not a hand-
-    # rolled cheaper double-sum equivalent
-    from traject_spark.streaming.ops import hourly_rollup, read_events_batch
-
-    noop(hourly_rollup(read_events_batch(spark, SF_DIR)))
-
-
-def b_rel_sessionize(spark):
-    from traject_spark.streaming import batch_sessionize
-
-    noop(batch_sessionize(spark, SF_DIR))
-
-
-def b_stream_hourly(spark):
-    from traject_spark.streaming import (
-        hourly_rollup, read_events_stream, run_stream_to_table,
-    )
-
-    run_stream_to_table(
-        hourly_rollup(read_events_stream(spark, SF_DIR)), "bench_hourly"
-    )
-
-
 _IVF_CENTROIDS: list | None = None
 
 
@@ -1102,11 +1056,6 @@ BENCHES = {
     "corpus_curate_e2e": b_corpus_curate,
     "corpus_curate_cluster": b_corpus_curate_cluster,
     "embed_topk": b_embed_topk,
-    "rel_pricing_summary": b_rel_pricing,
-    "rel_top_nations": b_rel_top_nations,
-    "rel_events_hourly": b_rel_events_hourly,
-    "rel_sessionize": b_rel_sessionize,
-    "stream_events_hourly": b_stream_hourly,
     "ann_ivf_train": b_ann_ivf_train,
     "ann_ivf_topk": b_ann_ivf,
     "embed_near_dup_lsh": b_embed_near_dup_lsh,
@@ -1310,7 +1259,7 @@ def main() -> None:
     ]
     selected_names = {name for name, _ in selected}
     # setup/warmup gated on what the selection actually touches — a
-    # BENCH_ONLY=rel_* iteration run must not pay minutes of MARC corpus
+    # BENCH_ONLY=text_* iteration run must not pay minutes of MARC corpus
     # materialization + full-size pipeline warmup it never reads
     marc_benches = {
         "map_full_pipeline", "map_minimum_slice", "map_translation",

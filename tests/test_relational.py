@@ -1,61 +1,6 @@
-"""Skew-handling helpers (traject_spark.relational)."""
+"""Dedup, MinHash, SimHash, langid and witness operators (traject_spark.corpus)."""
 
 from pyspark.sql import functions as F
-
-from traject_spark.relational import salted_join
-
-
-def test_salted_join_matches_plain_join(spark):
-    # 10k rows all hitting ONE hot key + a long tail
-    left = spark.range(10_000).select(
-        F.when(F.col("id") < 9_000, F.lit(7)).otherwise(F.col("id") % 50)
-        .alias("k"),
-        F.col("id").alias("v"),
-    )
-    right = spark.range(50).select(
-        F.col("id").alias("k"), (F.col("id") * 100).alias("w")
-    )
-    plain = salted_join(left, right, ["k"], salt=1)  # degenerates to join
-    salted = salted_join(left, right, ["k"], salt=8)
-    a = sorted((r["k"], r["v"], r["w"]) for r in plain.collect())
-    b = sorted((r["k"], r["v"], r["w"]) for r in salted.collect())
-    assert a == b and len(a) == 10_000
-
-
-def test_salted_join_left_outer(spark):
-    left = spark.range(100).select((F.col("id") % 5).alias("k"), "id")
-    right = spark.range(3).select(F.col("id").alias("k"), F.lit("x").alias("w"))
-    out = salted_join(left, right, ["k"], how="left", salt=4).collect()
-    assert len(out) == 100
-    assert all(r["w"] is None for r in out if r["k"] >= 3)
-    assert all(r["w"] == "x" for r in out if r["k"] < 3)
-
-
-def test_salted_join_rejects_right_preserving_flavors(spark):
-    """Right/full outer would emit each unmatched right row `salt` times
-    (the right side is replicated across salt values) — refuse them."""
-    import pytest
-
-    left = spark.range(10).select((F.col("id") % 3).alias("k"), "id")
-    right = spark.range(5).select(F.col("id").alias("k"), F.lit("x").alias("w"))
-    for how in ("right", "rightouter", "full", "outer", "full_outer", "cross"):
-        with pytest.raises(ValueError):
-            salted_join(left, right, ["k"], how=how, salt=4)
-    # left-preserving flavors all remain accepted
-    assert salted_join(left, right, ["k"], how="left_semi", salt=4).count() == 10
-    assert salted_join(left, right, ["k"], how="left_anti", salt=4).count() == 0
-
-
-def test_salted_join_spreads_hot_key(spark):
-    left = spark.range(1000).select(F.lit(1).alias("k"), F.col("id").alias("v"))
-    right = spark.range(2).select(F.col("id").alias("k"), F.lit("y").alias("w"))
-    salted = left.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(8))
-    )
-    n_salts = salted.select("_salt").distinct().count()
-    assert n_salts == 8  # the hot key's rows spread over all salt buckets
-    out = salted_join(left, right, ["k"], salt=8)
-    assert out.count() == 1000
 
 
 def test_exact_dedup_null_text_rows_are_not_duplicates(spark):
@@ -91,37 +36,6 @@ def test_langid_null_text_is_null(spark):
     df = spark.createDataFrame([(None,), ("the of and",)], "text string")
     out = [r["g"] for r in df.select(langid_expr(F.col("text")).alias("g")).collect()]
     assert out == [None, "en"]
-
-
-def test_bucketed_join_is_shuffle_free(spark):
-    """Two tables bucketed with the same keys/count join with NO
-    Exchange in the physical plan — the amortized-shuffle layout for
-    repeatedly-joined 100 TB tables."""
-    from traject_spark.relational import bucketed_join, write_bucketed
-
-    left = spark.range(1000).select(
-        (F.col("id") % 100).alias("k"), F.col("id").alias("v")
-    )
-    right = spark.range(100).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("w")
-    )
-    write_bucketed(left, "t_bk_left", ["k"], 4)
-    write_bucketed(right, "t_bk_right", ["k"], 4)
-    try:
-        joined = bucketed_join(spark, "t_bk_left", "t_bk_right", ["k"])
-        # disable broadcast so the join planner must pick sort-merge,
-        # the strategy that exploits bucketing
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, plan[:1500]
-            assert joined.count() == 1000
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bk_left")
-        spark.sql("DROP TABLE IF EXISTS t_bk_right")
 
 
 def test_minhash_near_dup_witness_linear_output(spark):

@@ -3,11 +3,11 @@
 Every ``mapInPandas`` parser/fan-out in this repo yields pandas frames
 whose rows it builds in Python first. Yielding one frame per input
 batch makes task memory proportional to INPUT size (a 110 MB binary
-MARC file is ~190k nested dicts; one input batch of videos is
-gigabytes of frames) — the r12 sf1 soak measured the binary reader at
-17x time for 10x data from exactly this. :func:`batched_rows` is the
-one shared flush policy: bounded by row count and, when rows carry
-payloads of wildly varying size, by approximate bytes.
+MARC file is ~190k nested dicts) — the r12 sf1 soak measured the
+binary reader at 17x time for 10x data from exactly this.
+:func:`batched_rows` is the one shared flush policy: bounded by row
+count and, when rows carry payloads of wildly varying size, by
+approximate bytes.
 
 Yields nothing for an empty input — load-bearing: an empty pandas
 DataFrame defaults object columns to float64, which Arrow cannot cast
@@ -24,8 +24,8 @@ __all__ = ["batched_rows", "DEFAULT_CHUNK_ROWS", "DEFAULT_CHUNK_BYTES"]
 #: rows per output batch: small enough that ~KB records stay ~10s of MB
 DEFAULT_CHUNK_ROWS = 10_000
 
-#: byte flush threshold for payload-bearing rows (frames, media):
-#: 10k multi-MB frames would still be tens of GB on a row-count bound
+#: byte flush threshold for payload-bearing rows: 10k multi-MB
+#: payloads would still be tens of GB on a row-count bound
 DEFAULT_CHUNK_BYTES = 64 << 20
 
 

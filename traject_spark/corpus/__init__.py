@@ -1,6 +1,6 @@
 """Large-scale training-data pipeline operators (beyond the reference
-surface): deduplication, similarity search, text analysis, multimodal
-column plumbing.
+surface): deduplication, similarity search, text analysis, PII and
+benchmark decontamination.
 
 These are first-class engine components designed for the 100 TB path:
 - text statistics are pure narrow Column expressions (no shuffle);

@@ -130,11 +130,26 @@ def brute_force_topk(
     return _rank_topk(scored, k)
 
 
-def _hyperplane(dim: int, bit: int, table: int) -> list[float]:
-    """Deterministic pseudo-random unit-ish hyperplane (splitmix-style);
-    the LCG itself is shared with multimodal's fake features (_rng)."""
-    from traject_spark.corpus._rng import lcg_unit_floats
+# LCG stepping for the hyperplanes. The sequence decides LSH bucket
+# membership, so these constants must never change: doing so silently
+# re-buckets every LSH layout written to disk.
+_MULT = 6364136223846793005
+_INC = 1442695040888963407
+_MASK = 0xFFFFFFFFFFFFFFFF
 
+
+def lcg_unit_floats(state: int, n: int) -> list[float]:
+    """``n`` deterministic floats in [-1, 1) from integer seed ``state``."""
+    out = []
+    state &= _MASK
+    for _ in range(n):
+        state = (state * _MULT + _INC) & _MASK
+        out.append(((state >> 11) / float(1 << 53)) * 2.0 - 1.0)
+    return out
+
+
+def _hyperplane(dim: int, bit: int, table: int) -> list[float]:
+    """Deterministic pseudo-random unit-ish hyperplane (splitmix-style)."""
     seed = table * 1_000_003 + bit * 8191 + 0x9E3779B9
     return lcg_unit_floats(seed, dim)
 

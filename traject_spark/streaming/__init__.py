@@ -2,47 +2,26 @@
 
 The reference's only incremental-ingest path is the OAI-PMH harvester
 (`lib/traject/oai_pmh_nokogiri_reader.rb:72-99` — a pull loop, not
-event-time streaming). On Spark we get a real streaming engine for free,
-so this module exposes the pipeline + corpus operators over
-``readStream``/``writeStream``:
+event-time streaming). On Spark the same mapping runs over
+``readStream``/``writeStream`` with three operators:
 
-- file-source streams over the driver's parquet tables,
-- event-time windowed rollups with watermarks (late-data policy),
-- streaming exact-dedup (``dropDuplicates`` keyed state),
-- native ``session_window`` sessionization (batch + streaming, same expr),
-- an ``applyInPandasWithState`` custom stateful operator,
-- ``foreachBatch`` bridging to any batch writer (e.g. the Solr sink).
-
-Scale posture: all stateful ops are keyed (state sharded by the shuffle
-hash of the key), watermarks bound state size, and ``availableNow``
-triggers give bounded backfill runs over historical data — the same code
-serves 100 TB backfill and live tailing.
+- ``stream_marc_to_solr``: marc-in-json NDJSON -> pipeline ->
+  ``foreachBatch`` into the batch Solr sink (the CLI's
+  ``-s streaming=true`` path);
+- ``stream_dedup``: streaming exact-dedup (``dropDuplicates`` keyed
+  state, first arrival wins);
+- ``run_stream_to_table``: run a bounded ``availableNow`` stream into an
+  in-memory table.
 """
 
 from traject_spark.streaming.ops import (
-    batch_sessionize,
-    events_schema,
-    hourly_rollup,
-    read_events_stream,
     run_stream_to_table,
-    sessionize_stream,
-    read_events_batch,
     stream_dedup,
-    stream_dedup_watermarked,
     stream_marc_to_solr,
-    stream_user_totals,
 )
 
 __all__ = [
-    "batch_sessionize",
-    "events_schema",
-    "hourly_rollup",
-    "read_events_stream",
     "run_stream_to_table",
-    "sessionize_stream",
-    "read_events_batch",
     "stream_dedup",
-    "stream_dedup_watermarked",
     "stream_marc_to_solr",
-    "stream_user_totals",
 ]

@@ -1,208 +1,26 @@
-"""Streaming operators over the driver's `events` table.
+"""Streaming operators: the CLI's NDJSON -> pipeline -> Solr ingest,
+exact dedup over a stream, and a bounded-run harness.
 
-Every operator here is expressed once as a DataFrame transform usable in
-BOTH batch and streaming mode (the Structured Streaming promise): the
-correctness gate checks the batch twin against DuckDB, and the streaming
-tests assert stream-run == batch-run on the same input.
-
-ts note: the driver's parquet stores `ts` as naive timestamp[us]; Spark
-would read it as TIMESTAMP_NTZ, whose epoch extraction is session-timezone
-dependent. The schemas here instead declare the column LONG, which the
-parquet reader fills with the raw INT64 micros-since-epoch — a
-timezone-free instant we convert with ``timestamp_micros`` (UTC semantics,
-matching DuckDB's naive-as-UTC reading in the oracle).
+- ``stream_marc_to_solr``: ``readStream`` marc-in-json NDJSON through the
+  same narrow mapping select as batch, ``foreachBatch`` into the batch
+  Solr sink (the CLI's ``-s streaming=true`` path).
+- ``stream_dedup``: ``dropDuplicates`` keyed state, first arrival wins.
+- ``run_stream_to_table``: drain a bounded (``availableNow``) stream into
+  an in-memory table, the local test/correctness harness.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-
-def events_schema() -> StructType:
-    """Schema of events.parquet with ts as raw micros (see module note)."""
-    return StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", LongType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
-
-
-def _with_event_time(df: DataFrame) -> DataFrame:
-    return df.withColumn("ts", F.timestamp_micros(F.col("ts")))
-
-
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events table.
-
-    ``maxFilesPerTrigger`` would bound micro-batch size on a real tail;
-    with ``availableNow`` the source plans one bounded backfill run.
-    """
-    # file-stream source wants a directory or glob, not a bare file path
-    raw = (
-        spark.readStream.schema(events_schema())
-        .format("parquet")
-        .load(f"{sf_dir}/events.[p]arquet")
-    )
-    return _with_event_time(raw)
-
-
-def read_events_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = spark.read.schema(events_schema()).parquet(f"{sf_dir}/events.parquet")
-    return _with_event_time(raw)
-
-
-def hourly_rollup(events: DataFrame, late: str = "2 hours") -> DataFrame:
-    """Event-time tumbling-window rollup (streaming twin of the batch
-    ``rel_events_hourly`` query). Watermark bounds window state: late
-    events beyond ``late`` are dropped, finalized windows are evicted."""
-    ev = events.withWatermark("ts", late) if events.isStreaming else events
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("hour_epoch"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-SESSION_GAP = "30 minutes"
-
-
-def sessionize(events: DataFrame, gap: str = SESSION_GAP,
-               late: str = "1 hour") -> DataFrame:
-    """Native ``session_window`` gaps-and-islands sessionization — one
-    expression valid in batch and streaming. Events of one user separated
-    by < gap merge into one session; state is keyed by (user, session) and
-    merged by the streaming session-window state store.
-
-    ``late`` bounds out-of-order tolerance (the watermark). Size it to at
-    least the expected disorder of the source: events later than it are
-    DROPPED by the streaming run while the batch twin would include
-    them — the stream==batch parity claim only holds within the horizon.
-    """
-    ev = events.withWatermark("ts", late) if events.isStreaming else events
-    return (
-        ev.groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("sw.start")).alias("session_start"),
-            F.unix_timestamp(F.col("sw.end")).alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def batch_sessionize(spark: SparkSession, sf_dir: str,
-                     gap: str = SESSION_GAP) -> DataFrame:
-    return sessionize(read_events_batch(spark, sf_dir), gap)
-
-
-def sessionize_stream(spark: SparkSession, sf_dir: str,
-                      gap: str = SESSION_GAP,
-                      late: str = "1 hour") -> DataFrame:
-    return sessionize(read_events_stream(spark, sf_dir), gap, late)
 
 
 def stream_dedup(df: DataFrame, *keys: str) -> DataFrame:
     """Streaming exact-dedup: keyed state holds one entry per seen key,
-    first arrival wins (the streaming twin of corpus.exact_dedup). On an
-    unbounded stream prefer ``stream_dedup_watermarked`` — this variant's
-    state grows with distinct keys forever."""
+    first arrival wins (the streaming twin of corpus.exact_dedup). State
+    grows with the number of distinct keys seen and is never evicted."""
     return df.dropDuplicates(list(keys))
-
-
-def stream_dedup_watermarked(
-    df: DataFrame, *keys: str, ts_col: str = "ts", late: str = "1 hour"
-) -> DataFrame:
-    """Bounded-state streaming dedup: ``dropDuplicatesWithinWatermark``
-    evicts per-key state once the watermark passes it, so state is
-    O(keys-per-watermark-window), not O(all keys ever) — the only dedup
-    shape that survives an unbounded 100 TB stream. Duplicates arriving
-    within the watermark horizon are suppressed; later re-occurrences
-    (after eviction) pass through, which is the documented trade."""
-    ev = df.withWatermark(ts_col, late) if df.isStreaming else df
-    if ev.isStreaming:
-        return ev.dropDuplicatesWithinWatermark(list(keys))
-    return ev.dropDuplicates(list(keys))
-
-
-def stream_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-user
-    running (n_events, total_value) carried across micro-batches.
-
-    Demonstrates the arbitrary-stateful escape hatch the reference's
-    ``each_record`` closures would need (reference has no analog — its
-    state is per-record only). State is sharded by user hash; Arrow
-    batches keep the Python boundary vectorized.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("total_value", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("total", DoubleType()),
-        ]
-    )
-
-    def update(key, pdfs: Iterator, state: GroupState):
-        import pandas as pd
-
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        # state carries the RAW running sum; rounding only on emit —
-        # round-then-store would compound the rounding error across
-        # micro-batches and drift from the batch twin
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def stream_marc_to_solr(
