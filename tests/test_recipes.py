@@ -45,6 +45,21 @@ def test_annotate_documents_single_projection_and_gates(spark):
     assert "Exchange" not in plan, plan[:1500]
 
 
+def test_annotate_documents_build_py4j_budget(spark, py4j_calls):
+    """The default annotate build is one SQL projection over the
+    builders' session functions: a handful of JVM calls once they are
+    registered (the Column-tree build made about 2,000)."""
+    from traject_spark.corpus import annotate_documents
+
+    df = _corpus(spark)
+    annotate_documents(df)  # registers the session functions
+    n, out = py4j_calls(lambda: annotate_documents(df))
+    assert n <= 50, n
+    assert out.columns == [
+        "id", "text", "n_tokens", "quality", "lang", "fp", "msig"
+    ]
+
+
 def test_curate_documents_mark(spark, tmp_path):
     from traject_spark.corpus import curate_documents
 
@@ -191,6 +206,7 @@ def test_annotate_gate_expr_paper_gates(spark):
     )
     out = annotate_documents(df, min_tokens=5, gate_expr=gate)
     assert [r["id"] for r in out.collect()] == [1]
+    assert out.columns == ["id", "text", "n_tokens", "quality", "lang", "fp", "msig"]
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 

@@ -194,7 +194,22 @@ def test_witness_clusters_deep_chain_and_guards(spark):
     edges = [(i, i - 1) for i in range(1, 41)]  # depth-40 chain
     edges += [(5, 7), (9, 9)]  # upward + self edge: must be ignored
     wit = spark.createDataFrame(edges, "id long, witness_id long")
-    out = {r["id"]: r["cluster_id"] for r in witness_clusters(wit).collect()}
+    jss = spark._jsparkSession
+    store, bus = jss.sharedState().statusStore(), jss.sparkContext().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        return store.executionsList().size()
+
+    stats: dict = {}
+    before = executions()
+    labels = witness_clusters(wit, stats=stats)
+    # ceil(log2(40)) = 6 doubling rounds + the round that advances nothing
+    assert stats == {"rounds": 7, "converged": True}
+    # one execution for the min-parent checkpoint, then ONE per round:
+    # the advanced-pointer count rides the round's checkpoint job
+    assert executions() - before == 1 + stats["rounds"]
+    out = {r["id"]: r["cluster_id"] for r in labels.collect()}
     assert all(out[i] == 0 for i in range(41))
     # two disjoint components stay disjoint
     wit2 = spark.createDataFrame(
@@ -202,6 +217,29 @@ def test_witness_clusters_deep_chain_and_guards(spark):
     )
     out2 = {r["id"]: r["cluster_id"] for r in witness_clusters(wit2).collect()}
     assert out2[2] == 0 and out2[12] == 10 and out2[0] == 0 and out2[10] == 10
+
+
+def test_band_explode_and_agreement_py4j_budget(spark, py4j_calls):
+    """Banding and signature agreement are SQL text over the fixed
+    internal column names: a few JVM calls, not one per Column node."""
+    from traject_spark.corpus.dedup import _band_explode, _sig_agreement
+
+    sig = spark.createDataFrame(
+        [(1, [1, 2, 3, 4]), (2, [1, 2, 3, 5])], "id long, sig array<bigint>"
+    )
+    n, banded = py4j_calls(lambda: (
+        _band_explode(sig, 4, 2), _sig_agreement("sig", "sig", 4)
+    ))
+    assert n <= 20, n
+    rows = banded[0].collect()
+    assert [(r["id"], r["band"]) for r in rows] == [(1, 0), (1, 1), (2, 0), (2, 1)]
+    assert rows[0]["band_hash"] == rows[2]["band_hash"]
+    assert rows[1]["band_hash"] != rows[3]["band_hash"]
+    pair = sig.alias("a").join(sig.alias("b"), F.col("a.id") < F.col("b.id"))
+    est = pair.select(
+        _sig_agreement("a.sig", "b.sig", 4).alias("est")
+    ).collect()
+    assert est[0]["est"] == 0.75
 
 
 def test_near_dup_operators_exclude_null_text(spark):

@@ -156,34 +156,31 @@ def test_simhash_packed_formulation_matches_per_bit_path(spark, monkeypatch):
             )
 
 
-def test_minhash_sql_fast_path_matches_column_path(spark):
-    """r15: minhash_signature_expr's generated-SQL build fast path
-    (column-name input) must produce identical signatures to the Column
-    reference path on every value shape, for non-default num_hashes and
-    ngram too."""
+def test_minhash_name_and_column_inputs_match_goldens(spark):
+    """minhash_signature_expr takes a column name or a Column; both reach
+    the one session function and give the recorded signatures on every
+    golden text, for non-default num_hashes and ngram too."""
+    import json
+
+    from tests.test_corpus_goldens import GOLDEN_PATH, TEXTS
     from traject_spark.corpus.dedup import minhash_signature_expr
 
-    texts = [
-        (0, None),
-        (1, ""),
-        (2, "one two"),
-        (3, "a b c d e f g a b c"),
-        (4, "café naïve Führung 東京 данные"),
-        (5, " ".join(f"tok{i % 7}" for i in range(100))),
-        (6, "x\ty z"),
-    ]
-    df = spark.createDataFrame(texts, "doc_id: long, text: string")
-    for num_hashes, ngram in ((32, 3), (8, 2)):
+    with open(GOLDEN_PATH, encoding="utf-8") as fh:
+        goldens = json.load(fh)
+    df = spark.createDataFrame(TEXTS, "text_id string, text string")
+    for num_hashes, ngram in ((64, 3), (32, 3), (8, 2)):
+        want = goldens[f"minhash_{num_hashes}_{ngram}"]
         rows = df.select(
+            "text_id",
             minhash_signature_expr(F.col("text"), num_hashes, ngram).alias(
-                "col_path"
+                "col"
             ),
-            minhash_signature_expr("text", num_hashes, ngram).alias(
-                "sql_path"
-            ),
+            minhash_signature_expr("text", num_hashes, ngram).alias("name"),
         ).collect()
         for r in rows:
-            assert r["col_path"] == r["sql_path"], (num_hashes, ngram, r)
+            assert r["col"] == r["name"] == want[r["text_id"]], (
+                num_hashes, ngram, r["text_id"],
+            )
 
 
 def test_langid_sql_fast_path_matches_column_path(spark):

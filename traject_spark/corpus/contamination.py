@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from traject_spark.corpus.dedup import shingles_expr
+from traject_spark.corpus.dedup import _SHINGLES
 
 
 def _shingle_rows(
@@ -52,14 +52,22 @@ def _shingle_rows(
     NULL text -> NULL shingles -> explode drops the row: missing text
     is never contaminated (same invariant as the near-dup family).
     """
-    gram = F.explode(shingles_expr(F.col(text_col), n)).alias("gram")
-    cols = ([F.col(id_col).alias("id")] if id_col else []) + [gram]
-    out = df.select(*cols)
-    if hash_shingles:
-        out = out.select(
-            *([F.col("id")] if id_col else []),
-            F.xxhash64(F.col("gram")).alias("gram"),
+    ids = ["id"] if id_col else []
+    # projected, then exploded (Spark does not inline SQL functions in a
+    # generator). explode_outer + the NULL filter above it, not explode:
+    # explode of a projected column gets a size(sh) > 0 filter pushed
+    # under the projection, which would shingle every document twice
+    out = (
+        df.select(
+            *([F.col(id_col).alias("id")] if id_col else []),
+            _SHINGLES(F.col(text_col), F.lit(n), spark=df.sparkSession)
+            .alias("sh"),
         )
+        .select(*ids, F.explode_outer("sh").alias("gram"))
+        .filter(F.col("gram").isNotNull())
+    )
+    if hash_shingles:
+        out = out.select(*ids, F.xxhash64(F.col("gram")).alias("gram"))
     return out
 
 

@@ -30,11 +30,12 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from traject_spark.expr import let
-from traject_spark.corpus.textstats import tokens_expr, fingerprint_expr
+from traject_spark.expr import let, sql_let
+from traject_spark.corpus.textstats import _FINGERPRINT, tokens_expr
+from traject_spark.sqlutil import SessionFunction, sql_ref
 
 
 # ---------------------------------------------------------------------------
@@ -59,7 +60,9 @@ def exact_dedup(
     is null, and a plain groupBy would collapse them into one cluster —
     they group under a per-row key instead, each its own 1-doc cluster.
     """
-    fp = fingerprint_expr(F.col(text_col), normalize)
+    fp = _FINGERPRINT(
+        F.col(text_col), F.lit(bool(normalize)), spark=df.sparkSession
+    )
     # fingerprint is RECOVERED from the group key instead of aggregated
     # (r15): _gk equals the fingerprint for every non-null-text row and
     # the \x00-prefixed sentinel otherwise, so min(fingerprint) carried
@@ -121,7 +124,9 @@ def apply_exact_dedup(
     fp = (
         F.col(fp_col)
         if fp_col
-        else fingerprint_expr(F.col(text_col), normalize)
+        else _FINGERPRINT(
+            F.col(text_col), F.lit(bool(normalize)), spark=df.sparkSession
+        )
     )
     w = Window.partitionBy(
         _null_safe_group_key(fp, id_col)
@@ -137,6 +142,22 @@ def apply_exact_dedup(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
+#: distinct word ``ngram``-gram shingles of ``text``, as SQL text over
+#: the two parameter names
+_SHINGLES_SQL = "CASE WHEN text IS NOT NULL THEN " + sql_let(
+    "split(text, ' ')",
+    "tk",
+    "array_distinct(CASE WHEN size(tk) >= ngram THEN "
+    "transform(sequence(0, size(tk) - ngram), "
+    "i -> array_join(slice(tk, i + 1, ngram), ' ')) "
+    "ELSE array(array_join(tk, ' ')) END)",
+) + " END"
+
+_SHINGLES = SessionFunction(
+    "traject_shingles", "text STRING, ngram INT", _SHINGLES_SQL
+)
+
+
 def shingles_expr(text: Column, n: int = 3) -> Column:
     """Word n-gram shingles as strings (distinct). NULL text -> NULL
     (NOT ``[null]`` — that constant would make every NULL-text document
@@ -145,57 +166,25 @@ def shingles_expr(text: Column, n: int = 3) -> Column:
     exact_dedup enforces via its null-safe group key). Empty text keeps
     its ``[""]`` shingle: empty documents ARE duplicates of each other,
     consistent with exact_dedup merging them."""
-    return F.when(
-        text.isNotNull(),
-        let(
-            tokens_expr(text),
-            lambda toks: F.array_distinct(
-                F.when(
-                    F.size(toks) >= n,
-                    F.transform(
-                        F.sequence(F.lit(0), F.size(toks) - n),
-                        lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-                    ),
-                ).otherwise(F.array(F.array_join(toks, " ")))
-            ),
-        ),
-    )
+    return _SHINGLES(text, F.lit(n))
 
 
-def _shingles_sql(text_sql: str, n: int) -> str:
-    """SQL-text twin of :func:`shingles_expr` (same guards, same empty-
-    text [''] shingle, same distinct)."""
-    from traject_spark.expr import sql_let
-
-    return (
-        f"CASE WHEN {text_sql} IS NOT NULL THEN "
-        + sql_let(
-            f"split({text_sql}, ' ')",
-            "tk",
-            f"array_distinct(CASE WHEN size(tk) >= {n} THEN "
-            f"transform(sequence(0, size(tk) - {n}), "
-            f"i -> array_join(slice(tk, i + 1, {n}), ' ')) "
-            "ELSE array(array_join(tk, ' ')) END)",
-        )
-        + " END"
-    )
-
-
-def _minhash_sql(text_sql: str, num_hashes: int, ngram: int) -> str:
-    """SQL-text twin of the Column path of
-    :func:`minhash_signature_expr` — one parsed string instead of
-    ~num_hashes Py4J transform/array_min constructions per build (r15;
-    same rationale as :func:`_simhash_sql`)."""
-    from traject_spark.expr import sql_let
-
+def _minhash_fn(num_hashes: int) -> SessionFunction:
+    """The ``num_hashes``-seed signature function: per seed, the min
+    xxhash64 over the shingle array (one session function per width)."""
+    num_hashes = int(num_hashes)
     mins = ", ".join(
         f"array_min(transform(sh, s -> xxhash64(s, {seed})))"
         for seed in range(num_hashes)
     )
-    return sql_let(
-        _shingles_sql(text_sql, ngram),
-        "sh",
-        f"CASE WHEN sh IS NOT NULL THEN array({mins}) END",
+    return SessionFunction(
+        f"traject_minhash_{num_hashes}",
+        "text STRING, ngram INT",
+        sql_let(
+            _SHINGLES_SQL,
+            "sh",
+            f"CASE WHEN sh IS NOT NULL THEN array({mins}) END",
+        ),
     )
 
 
@@ -205,43 +194,16 @@ def minhash_signature_expr(
     """array<bigint> MinHash signature: per seed, min over shingle hashes.
 
     xxhash64(shingle, seed) is a JVM built-in — the whole signature is
-    narrow array algebra, no UDF, no shuffle.
-
-    ``text`` may be a column NAME (string) — the build fast path: the
-    whole signature is emitted as one parsed SQL string
-    (:func:`_minhash_sql`) instead of per-seed Py4J Column round trips;
-    the Column path stays as the reference implementation for arbitrary
-    inputs. Values identical (pinned by the formulation parity test).
+    narrow array algebra, no UDF, no shuffle. ``text`` is a Column or a
+    column name (read as ``F.col(name)``, so nested fields resolve).
 
     NULL text -> NULL signature (not an array OF nulls, whose band hashes
     would still collide into one constant bucket); the pair operators
     exclude NULL signatures from candidate generation.
     """
     if isinstance(text, str):
-        from traject_spark.corpus.similarity import _q
-        from traject_spark.sqlutil import ident_safe
-
-        if ident_safe(text):
-            return F.expr(_minhash_sql(_q(text), num_hashes, ngram))
-        # dotted / exotic names: F.col resolves nested fields where the
-        # backtick-quoted SQL text would read one top-level column —
-        # fall back to the Column path so both input forms agree
-        # (ADVICE r15)
         text = F.col(text)
-    return let(
-        shingles_expr(text, ngram),
-        lambda sh: F.when(
-            sh.isNotNull(),
-            F.array(
-                *[
-                    F.array_min(
-                        F.transform(sh, lambda s: F.xxhash64(s, F.lit(seed)))
-                    )
-                    for seed in range(num_hashes)
-                ]
-            ),
-        ),
-    )
+    return _minhash_fn(num_hashes)(text, F.lit(ngram))
 
 
 def _check_bands(num_hashes: int, bands: int) -> None:
@@ -296,8 +258,9 @@ def _signatures(
     return _checkpoint_sigs(
         df.filter(F.col(text_col).isNotNull()).select(
             F.col(id_col).alias("id"),
-            # name form -> the generated-SQL build fast path (r15)
-            minhash_signature_expr(text_col, num_hashes, ngram).alias("sig"),
+            _minhash_fn(num_hashes)(
+                F.col(text_col), F.lit(ngram), spark=df.sparkSession
+            ).alias("sig"),
         )
     )
 
@@ -356,40 +319,24 @@ def _checkpoint_sigs(sig: DataFrame) -> DataFrame:
 
 def _band_explode(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, sig) -> one row per (id, sig, band, band_hash)."""
-    rows_per_band = num_hashes // bands
-    return sig.select(
+    rows = num_hashes // bands
+    return sig.selectExpr(
         "id",
         "sig",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(
-                        F.array_join(
-                            F.transform(
-                                F.slice(
-                                    F.col("sig"),
-                                    b * rows_per_band + 1,
-                                    rows_per_band,
-                                ),
-                                lambda x: x.cast("string"),
-                            ),
-                            ",",
-                        )
-                    ).alias("band_hash"),
-                ),
-            )
-        ).alias("bh"),
-    ).select("id", "sig", "bh.band", "bh.band_hash")
+        f"inline(transform(sequence(0, {bands - 1}), b -> named_struct("
+        "'band', b, 'band_hash', xxhash64(array_join(transform("
+        f"slice(sig, b * {rows} + 1, {rows}), x -> CAST(x AS STRING)), ','))"
+        ")))",
+    )
 
 
-def _sig_agreement(a, b, num_hashes: int):
-    """Estimated Jaccard: fraction of agreeing signature positions."""
-    return F.round(
-        F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda e: e))
-        / F.lit(float(num_hashes)),
-        4,
+def _sig_agreement(a: str, b: str, num_hashes: int) -> Column:
+    """Estimated Jaccard: fraction of agreeing positions of the
+    signature columns named ``a`` and ``b``."""
+    return F.expr(
+        f"round(size(filter(zip_with({sql_ref(a)}, {sql_ref(b)}, "
+        "(x, y) -> x = y), "
+        f"e -> e)) / {float(num_hashes)!r}D, 4)"
     )
 
 
@@ -678,12 +625,14 @@ def witness_clusters(
     round of ``parent := parent(parent)`` halves every chain's remaining
     depth. Convergence needs ceil(log2(max chain depth)) rounds: the
     default ``max_iters=20`` covers chains a million hops deep. Each
-    round is ONE left self-join shuffled on id plus an existence check —
-    O(E) per round, O(E log D) total, no driver-side graph. The
-    existence check is a count() ACTION, so the driver runs up to
-    ``max_iters`` small jobs (+1 convergence probe when the budget is
-    exhausted); if the budget runs out before the deepest chain
-    resolves, a RuntimeWarning flags that labels are intermediate.
+    round is ONE left self-join shuffled on id — O(E) per round,
+    O(E log D) total, no driver-side graph — and ONE action: the round's
+    ``localCheckpoint`` job also counts the pointers that advanced, via
+    ``DataFrame.observe``, and a round that advanced none ends the loop.
+    The driver runs up to ``max_iters`` such jobs (+1 convergence probe
+    when the budget is exhausted); if the budget runs out before the
+    deepest chain resolves, a RuntimeWarning flags that labels are
+    intermediate.
 
     Lineage is truncated per round with ``localCheckpoint`` (without it
     the self-join plan doubles every iteration and planning time
@@ -723,6 +672,8 @@ def witness_clusters(
     for _ in range(max_iters):
         rounds += 1
         a, b = parents.alias("a"), parents.alias("b")
+        # the advanced-pointer count rides the checkpoint's own job
+        seen = Observation()
         step = (
             a.join(b, F.col("a.parent") == F.col("b.id"), "left")
             .select(
@@ -731,6 +682,10 @@ def witness_clusters(
                 F.coalesce(F.col("b.parent"), F.col("a.parent")).alias(
                     "parent"
                 ),
+            )
+            .observe(
+                seen,
+                F.count_if(F.col("parent") != F.col("old")).alias("advanced"),
             )
             .localCheckpoint()
         )
@@ -742,9 +697,8 @@ def witness_clusters(
         # checkpoint), and Spark's ContextCleaner reclaims the blocks
         # asynchronously on driver GC. Peak pinned storage is therefore a
         # few |E|-row copies between GC cycles, not rounds+1 forever.
-        advanced = step.filter(F.col("parent") != F.col("old")).limit(1)
         parents = step.select("id", "parent")
-        if advanced.count() == 0:
+        if seen.get["advanced"] == 0:
             converged = True
             break
     if not converged:
@@ -1219,7 +1173,9 @@ def ngram_jaccard_pairs(
     """
     sh = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("id"),
-        shingles_expr(F.col(text_col), ngram).alias("sh"),
+        _SHINGLES(
+            F.col(text_col), F.lit(ngram), spark=df.sparkSession
+        ).alias("sh"),
         *([F.col(bucket_col).alias("bucket")] if bucket_col else []),
     )
     if pairs is None:

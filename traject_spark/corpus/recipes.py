@@ -13,12 +13,12 @@ operators were built for.
 
 Plan shape (the 100 TB story):
 
-- The annotate+filter stage is ONE narrow projection: every derived
-  column is computed inside a single ``let``-bound struct and the row
-  filter is an explode of a 0/1-element array built in that same
-  projection — a separate ``.filter`` on computed columns would
-  re-evaluate the whole expression tree for the predicate (measured 2x
-  on the NDJSON parse; see ``traject_spark/expr.py``).
+- The annotate+filter stage is ONE narrow stage: one projection
+  computes every derived column once, and the row filter is an explode
+  of a 0/1-element array built from those columns — a separate
+  ``.filter`` on computed columns would be pushed under the projection
+  and re-evaluate the whole expression tree for the predicate (measured
+  2x on the NDJSON parse; see ``traject_spark/expr.py``).
 - Stage boundaries MATERIALIZE to parquet (``work_dir``) exactly where
   a frame has more than one consumer: the annotated frame when a
   ``benchmark`` is given (decontaminate reads it twice), and the
@@ -47,20 +47,23 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from traject_spark.expr import let
 from traject_spark.corpus.dedup import (
     _check_bands,
+    _minhash_fn,
     apply_exact_dedup,
     minhash_near_dup_witness,
-    minhash_signature_expr,
     witness_clusters,
 )
 from traject_spark.corpus.textstats import (
-    fingerprint_expr,
-    langid_expr,
-    quality_score_expr,
-    token_count_expr,
+    _FINGERPRINT,
+    _LANGID,
+    _QUALITY,
+    _TOKEN_COUNT,
 )
+from traject_spark.sqlutil import sql_ref, sql_str_lit
+
+#: the optional ``gate_expr``, projected with the annotations
+_GATE = "__traject_gate__"
 
 
 def annotate_documents(
@@ -90,55 +93,63 @@ def annotate_documents(
     row that documents must satisfy — the hook for the credible paper
     gates, e.g. ``gopher_quality_expr(F.col('text'))['passes']
     & gopher_repetition_expr(F.col('text'))['passes']
-    & c4_quality_expr(F.col('text'))['passes']``. It rides inside the
-    same explode-in-projection filter, so even a heavy struct gate is
-    evaluated exactly once per row in the one narrow scan (NULL gates
-    drop the row, like any failed gate).
+    & c4_quality_expr(F.col('text'))['passes']``. It is projected with
+    the annotations and read by the explode's filter, so even a heavy
+    struct gate is evaluated exactly once per row in the one narrow scan
+    (NULL gates drop the row, like any failed gate).
+
+    The stage is SQL text over the builders' session functions
+    (``traject_token_count``, ``traject_quality_score``,
+    ``traject_langid``, ``traject_fingerprint``,
+    ``traject_minhash_<num_hashes>``), registered in ``df``'s session:
+    one projection computes every annotation once, and the explode
+    keeps the rows that pass. Spark does not inline SQL functions
+    inside a generator, so the two cannot be one operator.
     """
-    text = F.col(text_col)
-    lang = langid_expr(text)
-
-    def payload(n, q, lg):
-        cols = [
-            F.col(id_col).alias("id"),
-            text.alias("text"),
-            n.alias("n_tokens"),
-            q.alias("quality"),
-            lg.alias("lang"),
-            fingerprint_expr(text).alias("fp"),
-        ]
-        if with_minhash:
-            cols.append(
-                # name form -> the generated-SQL build fast path (r15)
-                minhash_signature_expr(text_col, num_hashes, ngram).alias(
-                    "msig"
-                )
-            )
-        return F.struct(*cols)
-
-    def gated(n, q, lg):
-        keep = text.isNotNull() & (n >= min_tokens) & (q >= min_quality)
-        if langs is not None:
-            keep = keep & lg.isin(list(langs))
-        if gate_expr is not None:
-            # coalesce: a NULL gate (NULL text reaching a struct gate)
-            # must DROP the row, not poison keep into NULL
-            keep = keep & F.coalesce(gate_expr, F.lit(False))
-        # slice(arr,1,0) is the typed empty array — no hand-written cast
-        # to drift out of sync with the payload struct's actual types
-        return let(
-            F.array(payload(n, q, lg)),
-            lambda arr: F.when(keep, arr).otherwise(F.slice(arr, 1, 0)),
+    spark = df.sparkSession
+    t = sql_ref(text_col)
+    cols = {
+        "id": sql_ref(id_col),
+        "text": t,
+        "n_tokens": _TOKEN_COUNT.sql(spark, t),
+        # quality_score_expr's default length gate
+        "quality": _QUALITY.sql(spark, t, "50", "100000"),
+        "lang": _LANGID.sql(spark, t),
+        "fp": _FINGERPRINT.sql(spark, t, "true"),
+    }
+    if with_minhash:
+        cols["msig"] = _minhash_fn(num_hashes).sql(
+            spark, t, str(int(ngram))
         )
-
-    gate = let(
-        token_count_expr(text),
-        lambda n: let(
-            quality_score_expr(text),
-            lambda q: let(lang, lambda lg: gated(n, q, lg)),
-        ),
+    row = ", ".join(f"'{k}', {k}" for k in cols)
+    keep = [
+        "text IS NOT NULL",
+        f"n_tokens >= {min_tokens}",
+        f"quality >= {float(min_quality)!r}D",
+    ]
+    if langs is not None:
+        keep.append(
+            f"lang IN ({', '.join(sql_str_lit(x) for x in langs)})"
+            if langs else "false"
+        )
+    if gate_expr is not None:
+        # a NULL gate (NULL text reaching a struct gate) drops the row
+        # like any failed gate
+        df = df.withColumn(_GATE, gate_expr)
+        cols[_GATE] = _GATE
+        keep.append(_GATE)
+    # explode's input is an expression, not a projected column: Spark
+    # would add a size(arr) > 0 filter on a column and push it under the
+    # projection, computing every value twice. A dropped row's array is
+    # NULL, which explodes to nothing.
+    return (
+        df.selectExpr(*(f"{v} AS {k}" for k, v in cols.items()))
+        .selectExpr(
+            f"explode(CASE WHEN {' AND '.join(keep)} "
+            f"THEN array(named_struct({row})) END) AS r"
+        )
+        .selectExpr("r.*")
     )
-    return df.select(F.explode(gate).alias("r")).select("r.*")
 
 
 def _check_default_work_dir_ok(master: str) -> None:
@@ -230,7 +241,7 @@ def curate_documents(
         # corpus-sized write + scan at 100 TB for nothing (r9 review).
         ann_path = f"{work_dir}/annotated.parquet"
         annotated.write.mode("overwrite").parquet(ann_path)
-        annotated = spark.read.parquet(ann_path)
+        annotated = spark.read.schema(annotated.schema).parquet(ann_path)
 
     if benchmark is not None:
         # AFTER the stage-boundary materialization: decontaminate reads
@@ -256,7 +267,7 @@ def curate_documents(
         # witness over the materialized narrow (id, msig) projection
         surv_path = f"{work_dir}/survivors.parquet"
         survivors.write.mode("overwrite").parquet(surv_path)
-        survivors = spark.read.parquet(surv_path)
+        survivors = spark.read.schema(survivors.schema).parquet(surv_path)
         wit = minhash_near_dup_witness(
             survivors,
             id_col="id",
@@ -295,7 +306,7 @@ def curate_documents(
             # the result now reads from output_path; the corpus-sized
             # intermediates in our own temp dir are dead weight
             shutil.rmtree(work_dir, ignore_errors=True)
-        return spark.read.parquet(output_path)
+        return spark.read.schema(out.schema).parquet(output_path)
     if created_work_dir:
         # the lazy result still reads the intermediates — defer cleanup
         # to interpreter exit (callers who need tighter control pass

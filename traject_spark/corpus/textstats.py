@@ -1,11 +1,15 @@
 """Text-analysis operators: token counting, quality scoring, language ID,
 document fingerprinting.
 
-All pure Column expressions (JVM-side, whole-stage codegen, no UDF/shuffle)
-— at 100 TB these run at scan speed. Each has an exact ANSI-SQL twin used
-by the DuckDB oracle in ``__spark_entry__``; keep semantics SQL-expressible
-(simple space tokenization, fixed stopword lists) so the correctness gate
-stays meaningful.
+All JVM-side expressions (whole-stage codegen, no UDF/shuffle) — at
+100 TB these run at scan speed. The curate-path builders
+(``token_count_expr``, ``quality_score_expr``, ``langid_expr``,
+``fingerprint_expr``) are session SQL functions (``SessionFunction``):
+one SQL body each, inlined by Spark wherever the returned Column is
+used. Each operator has an exact ANSI-SQL twin used by the DuckDB oracle
+in ``__spark_entry__``; keep semantics SQL-expressible (simple space
+tokenization, fixed stopword lists) so the correctness gate stays
+meaningful.
 """
 
 from __future__ import annotations
@@ -15,7 +19,8 @@ from typing import Optional
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from traject_spark.expr import let
+from traject_spark.expr import let, sql_let
+from traject_spark.sqlutil import SessionFunction, sql_str_lit
 
 #: small fixed stopword list (quality scoring + language id)
 EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is"]
@@ -29,13 +34,24 @@ def tokens_expr(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def token_count_expr(text: Column) -> Column:
-    # explicit NULL-text guard: under Spark 3.x legacy defaults
-    # (spark.sql.legacy.sizeOfNull=true) size(NULL) is -1, not NULL —
-    # the when() pins NULL-in -> NULL-out on every supported version
-    return F.when(
-        text.isNotNull(), F.size(tokens_expr(text)).cast("long")
+def _count_in_sql(toks: str, words: list[str]) -> str:
+    return (
+        f"CAST(size(filter({toks}, w -> w IN "
+        f"({', '.join(sql_str_lit(x) for x in words)}))) AS BIGINT)"
     )
+
+
+# CASE WHEN text IS NOT NULL: size(NULL) is -1, not NULL, under
+# spark.sql.legacy.sizeOfNull; the guard pins NULL-in -> NULL-out
+_TOKEN_COUNT = SessionFunction(
+    "traject_token_count", "text STRING",
+    "CASE WHEN text IS NOT NULL THEN CAST(size(split(text, ' ')) AS BIGINT) END",
+)
+
+
+def token_count_expr(text: Column) -> Column:
+    """Number of single-space tokens (BIGINT); NULL text -> NULL."""
+    return _TOKEN_COUNT(text)
 
 
 def _count_in(tokens: Column, words: list[str]) -> Column:
@@ -70,79 +86,67 @@ def punct_ratio_expr(text: Column) -> Column:
     )
 
 
+_QUALITY = SessionFunction(
+    "traject_quality_score", "text STRING, min_tokens BIGINT, max_tokens BIGINT",
+    # tokenizes ONCE: the count and the stopword ratio share one split
+    sql_let("split(text, ' ')", "toks", sql_let(
+        "CAST(size(toks) AS BIGINT)", "n", sql_let(
+            f"round({_count_in_sql('toks', EN_STOPWORDS)} "
+            "/ greatest(size(toks), 1), 4)", "swr",
+            "round(CASE WHEN n >= min_tokens AND n <= max_tokens THEN 0.5D "
+            "ELSE 0.0D END + CASE WHEN swr >= 0.05D AND swr <= 0.6D "
+            "THEN 0.5D ELSE 0.0D END, 4)",
+        ),
+    )),
+)
+
+
 def quality_score_expr(text: Column, min_tokens: int = 50, max_tokens: int = 100000) -> Column:
     """Heuristic quality score in [0,1]: length gate x stopword signal.
 
     A document scores 1.0 when it has a plausible token count AND a
     plausible stopword ratio; components degrade independently. 4dp.
-    Tokenizes ONCE: both the count and the stopword ratio derive from a
-    single let-bound split, not two copies of the split subtree.
     """
-    return let(
-        tokens_expr(text),
-        lambda toks: let(
-            F.size(toks).cast("long"),
-            lambda n: let(
-                F.round(
-                    _count_in(toks, EN_STOPWORDS)
-                    / F.greatest(F.size(toks), F.lit(1)),
-                    4,
-                ),
-                lambda swr: F.round(
-                    F.when((n >= min_tokens) & (n <= max_tokens), F.lit(0.5)).otherwise(F.lit(0.0))
-                    + F.when((swr >= 0.05) & (swr <= 0.6), F.lit(0.5)).otherwise(F.lit(0.0)),
-                    4,
+    return _QUALITY(text, F.lit(min_tokens), F.lit(max_tokens))
+
+
+# each marker count is let-bound once, so the CASE chain compares bound
+# variables instead of re-scanning the token array per comparison; the
+# outer guard pins NULL text -> NULL guess under legacy sizeOfNull too
+_LANGID = SessionFunction(
+    "traject_langid", "text STRING",
+    "CASE WHEN text IS NOT NULL THEN " + sql_let(
+        "split(text, ' ')", "toks",
+        sql_let(_count_in_sql("toks", EN_STOPWORDS), "e", sql_let(
+            _count_in_sql("toks", DE_MARKERS), "d", sql_let(
+                _count_in_sql("toks", FR_MARKERS), "f", sql_let(
+                    _count_in_sql("toks", ES_MARKERS), "s", sql_let(
+                        "greatest(e, d, f, s)", "mx",
+                        "CASE WHEN mx IS NULL THEN CAST(NULL AS STRING) "
+                        "WHEN mx = 0 THEN 'und' WHEN e = mx THEN 'en' "
+                        "WHEN d = mx THEN 'de' WHEN f = mx THEN 'fr' "
+                        "ELSE 'es' END",
+                    ),
                 ),
             ),
-        ),
-    )
+        )),
+    ) + " END",
+)
 
 
 def langid_expr(text: Column) -> Column:
     """Marker-word language guess: highest marker count wins, ties broken
     en > de > fr > es; 'und' when no markers hit."""
-    # outer when(): on Spark 3.x legacy sizeOfNull, size(filter(NULL))
-    # is -1 and every count would tie at -1 ('en'); the explicit text
-    # guard pins NULL-text -> NULL guess on every supported version
-    # (the mx.isNull() branch inside _argmax_lang covers Spark 4 alone)
-    return F.when(
-        text.isNotNull(),
-        let(
-            tokens_expr(text),
-            lambda toks: _argmax_lang(
-                _count_in(toks, EN_STOPWORDS),
-                _count_in(toks, DE_MARKERS),
-                _count_in(toks, FR_MARKERS),
-                _count_in(toks, ES_MARKERS),
-            ),
-        ),
-    )
+    return _LANGID(text)
 
 
-def _argmax_lang(en: Column, de: Column, fr: Column, es: Column) -> Column:
-    # each count is a token-array scan; let-bind them (and the max) so
-    # the when-chain references bound variables instead of re-evaluating
-    # every count subtree per comparison (greatest + 4 comparisons would
-    # otherwise scan the token array ~16x per row instead of 4)
-    from traject_spark.expr import let3
+_WS_RUN = sql_str_lit(r"\s+")
 
-    def pick(e: Column, d: Column, f: Column, s: Column) -> Column:
-        return let(
-            F.greatest(e, d, f, s),
-            lambda mx: (
-                # NULL text -> NULL guess: without the guard every when()
-                # condition is NULL (falsy) and control would fall through
-                # to the otherwise branch, mislabeling missing text as 'es'
-                F.when(mx.isNull(), F.lit(None).cast("string"))
-                .when(mx == 0, F.lit("und"))
-                .when(e == mx, F.lit("en"))
-                .when(d == mx, F.lit("de"))
-                .when(f == mx, F.lit("fr"))
-                .otherwise(F.lit("es"))
-            ),
-        )
-
-    return let(en, lambda e: let3(de, fr, es, lambda d, f, s: pick(e, d, f, s)))
+_FINGERPRINT = SessionFunction(
+    "traject_fingerprint", "text STRING, normalize BOOLEAN",
+    "md5(CASE WHEN normalize THEN trim(regexp_replace(lower(text), "
+    f"{_WS_RUN}, ' ')) ELSE text END)",
+)
 
 
 def fingerprint_expr(text: Column, normalize: bool = True) -> Column:
@@ -151,10 +155,7 @@ def fingerprint_expr(text: Column, normalize: bool = True) -> Column:
     exact-dedup key (web-scraped corpora routinely differ only by a
     trailing newline; without the trim those are distinct fingerprints
     and exact dedup silently misses them)."""
-    t = text
-    if normalize:
-        t = F.trim(F.regexp_replace(F.lower(t), r"\s+", " "))
-    return F.md5(t)
+    return _FINGERPRINT(text, F.lit(bool(normalize)))
 
 
 # ---------------------------------------------------------------------------

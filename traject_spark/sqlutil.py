@@ -32,8 +32,9 @@ behaves identically under both lexer modes.
 from __future__ import annotations
 
 import re as _re
+import weakref
 
-__all__ = ["sql_str_lit", "ident_safe"]
+__all__ = ["sql_str_lit", "ident_safe", "sql_ref", "SessionFunction"]
 
 
 def ident_safe(name: str) -> bool:
@@ -44,6 +45,62 @@ def ident_safe(name: str) -> bool:
     anything beyond ``[A-Za-z_][A-Za-z0-9_]*`` must take the generic
     path (callers fall back to ``F.col(name)``)."""
     return bool(_re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name))
+
+
+def sql_ref(name: str) -> str:
+    """SQL text for the column ``F.col(name)`` reads: each dot-separated
+    part backtick-quoted, so ``rec.text`` stays a nested-field reference
+    and ``my-col`` a plain one. A name that already carries backticks is
+    SQL-quoted by its author and passes through unchanged."""
+    if "`" in name:
+        return name
+    return ".".join("`" + part + "`" for part in name.split("."))
+
+
+class SessionFunction:
+    """A builder whose one implementation is SQL text: ``body`` over
+    ``params``, registered as the temporary SQL function ``name`` the
+    first time a session needs it.
+
+    Spark inlines a SQL function's body into every plan that calls it,
+    so the plan is the one the body would give written out in place,
+    while the caller pays one JVM call for ``F.call_function`` instead
+    of one per node of a Column tree. Temporary functions belong to one
+    session (``spark.newSession()`` starts with none), so registration
+    is tracked per session object. Names carry the reserved
+    ``traject_`` prefix.
+
+    Spark inlines SQL functions in projections, filters, aggregates,
+    joins and windows, but refuses them inside a generator (``explode``)
+    or a sort, and cannot bind a higher-order-function lambda variable
+    to a parameter: project the call first, then explode or sort the
+    projected column."""
+
+    _registered: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+    def __init__(self, name: str, params: str, body: str):
+        self.name, self.params, self.body = name, params, body
+
+    def sql(self, spark, *args: str) -> str:
+        """``name(args)`` call text for SQL run in ``spark``."""
+        done = SessionFunction._registered.setdefault(spark, set())
+        # two threads may both register: CREATE OR REPLACE is idempotent
+        if self.name not in done:
+            spark.sql(
+                f"CREATE OR REPLACE TEMPORARY FUNCTION {self.name}"
+                f"({self.params}) RETURN {self.body}"
+            )
+            done.add(self.name)
+        return f"{self.name}({', '.join(args)})"
+
+    def __call__(self, *cols, spark=None):
+        """The call as a Column, registered in ``spark`` (default: the
+        active session)."""
+        from pyspark.sql import SparkSession
+        from pyspark.sql import functions as F
+
+        self.sql(spark or SparkSession.active())
+        return F.call_function(self.name, *cols)
 
 
 def sql_str_lit(s: str) -> str:
