@@ -784,7 +784,7 @@ def q_dedup_simhash_planted(spark, sf_dir):
     identical 64-bit signatures, hence hamming distance 0 — they MUST
     agree on every pigeonhole band and surface through the banding join
     with distance exactly 0. The general hamming<=3 retrieval stays
-    covered by bench.py + pytest planted-distance tests (xxhash64 has no
+    covered by the pytest planted-distance tests (xxhash64 has no
     DuckDB twin, so arbitrary distances aren't SQL-predictable)."""
     from traject_spark.corpus import simhash_near_dup
 
@@ -1044,8 +1044,10 @@ def q_embed_near_dup(spark, sf_dir):
 
 def flagship_pipeline() -> Pipeline:
     """THE 12-rule full indexing pipeline (the reference's demo_config.rb
-    shape) — single definition shared by ``entry()`` and bench.py's B1,
-    so the benchmark always measures exactly the contract pipeline."""
+    shape) — single definition shared by ``entry()``, perfbench's
+    ``marc8_index_ndjson`` workload and bench.py's ``map_full_pipeline``
+    lane, so the benchmarks always measure exactly the contract
+    pipeline."""
     return (
         Pipeline()
         .to_field("title", extract_marc("245ab", trim_punctuation=True))

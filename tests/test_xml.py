@@ -813,12 +813,24 @@ def test_extract_xpath_attribute_wildcard(spark):
     assert sorted(row["vals"]) == ["1", "2", "3"]
 
 
+def test_batched_rows_bounds_by_count():
+    """The shared flush policy behind the readers' mapInPandas fan-outs:
+    bounded by rows, order kept, nothing yielded for empty input."""
+    from traject_spark.arrowutil import batched_rows
+
+    batches = list(batched_rows(iter(range(25_000)), list, chunk_rows=10_000))
+    assert [len(b) for b in batches] == [10_000, 10_000, 5_000]
+    assert batches[0][0] == 0 and batches[2][-1] == 24_999  # order kept
+
+    assert list(batched_rows(iter([]), list)) == []
+
+
 def test_split_batches_are_bounded(spark, tmp_path):
     """End-to-end twin of the bounded-batch property: a single 25k-
     record file splits correctly through the chunked path. The batch-
     size bound itself is pinned by the shared helper's unit test
-    (test_bench_helpers.py::test_batched_rows_bounds_by_count_and_bytes
-    — all four mapInPandas fan-outs route through batched_rows)."""
+    (test_batched_rows_bounds_by_count above — the readers' mapInPandas
+    fan-outs route through batched_rows)."""
     recs = "".join(
         f"<rec><id>{i}</id></rec>" for i in range(25_000)
     )

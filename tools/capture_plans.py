@@ -1,43 +1,51 @@
 #!/usr/bin/env python
-"""Capture .explain('formatted') for every noop-sinked bench lane.
+"""Capture .explain('formatted') for every noop-sinked bench.py lane.
 
-Writes plans/<tag>/<lane>_<suffix>.txt for each lane whose bench function
-times a `noop(df)` — the capture monkeypatches bench.noop to record the
-DataFrame and dump its formatted plan instead of executing it, so the
-captured plan is EXACTLY the timed query's plan (same fixture paths, same
-operator calls). Lanes that time a non-noop action (JSON sink, Solr POSTs,
-streaming run, curate write) have no single output frame to explain; they
-are listed in the MANIFEST as skipped.
+Writes plans/<tag>/<lane>_<suffix>.txt for each lane whose function times
+a `noop(df)`: the capture replaces bench.noop so it records the DataFrame
+instead of executing it, so the captured plan is EXACTLY the timed query's
+plan (same inputs, same operator calls). Lanes that time another action
+(Solr POSTs, the curate write) have no single output frame to explain;
+the MANIFEST lists them as skipped. Earlier captures are kept under
+history/plans/.
 
-Usage:
-  SPARK_GRAFT_TARGET_RECORDS=2000 python tools/capture_plans.py r15 before
-(small target keeps fixture setup cheap; plan SHAPE is scale-independent)
+Usage (a small scale keeps input setup cheap; plan shape does not depend
+on scale):
+  SPARK_GRAFT_SF_DIR=<dir>/sf0.001 python tools/capture_plans.py <tag> before
 """
 
 from __future__ import annotations
 
+import argparse
+import atexit
 import os
+import shutil
 import sys
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import bench  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "r15"
-    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
-    only = {s for s in sys.argv[3].split(",") if s} if len(sys.argv) > 3 else None
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", tag,
-    )
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("tag", help="output subdirectory under plans/")
+    ap.add_argument("suffix", help="file name suffix, e.g. before/after")
+    ap.add_argument("lanes", nargs="?", default="",
+                    help="comma-separated lane names (default: all)")
+    args = ap.parse_args()
+    only = {s for s in args.lanes.split(",") if s}
+    out_dir = os.path.join(REPO, "plans", args.tag)
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = bench.session()
-    captured: dict[str, object] = {}
-    skipped: list[str] = []
-
+    work = tempfile.mkdtemp(prefix="capture_plans_")
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    spark = bench.session(work)
+    inp = bench.Inputs(spark, work)
+    captured: dict = {}
+    skipped: list = []
     current = {"name": None}
 
     def capture_noop(df) -> None:
@@ -45,36 +53,35 @@ def main() -> None:
 
     bench.noop = capture_noop
 
-    for name, fn in bench.BENCHES.items():
-        if only is not None and name not in only:
+    for name, fn in bench.LANES:
+        if only and name not in only:
             continue
         current["name"] = name
-        before = set(captured)
         try:
-            fn(spark)
+            fn(spark, inp)
         except Exception as e:  # non-noop lanes execute for real; tolerate
             print(f"capture {name}: error {e}", file=sys.stderr)
-        if name not in captured and not (set(captured) - before):
+        if name not in captured:
             skipped.append(name)
             continue
         df = captured[name]
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        path = os.path.join(out_dir, f"{name}_{args.suffix}.txt")
         with open(path, "w", encoding="utf-8") as fh:
             fh.write(plan)
         print(f"wrote {path} ({len(plan)} chars)")
 
-    manifest = os.path.join(out_dir, f"MANIFEST_{suffix}.txt")
+    manifest = os.path.join(out_dir, f"MANIFEST_{args.suffix}.txt")
     with open(manifest, "w", encoding="utf-8") as fh:
         fh.write(
             "captured: " + ", ".join(sorted(captured)) + "\n"
-            "skipped (no noop sink — action is a real write/stream/HTTP "
+            "skipped (no noop sink — action is a real write or HTTP "
             "path with no single output frame): " + ", ".join(skipped) + "\n"
         )
     print(f"wrote {manifest}")
-    spark.stop()
+    bench.host.stop_session(spark)
 
 
 if __name__ == "__main__":

@@ -18,36 +18,38 @@ C. uncapped (cap off) throughput keeps the sf1 floor (>= 100k docs/s on
 D. write_json with max_records_per_file=50k emits ceil-per-task file
    counts: between rows/50k and rows/50k + n_partitions part files.
 
-Prints one JSON line (record as BENCH_sf1_sink_r{N}.json).
+The corpus is bench.py's synthetic MARC corpus at 6M records, built from
+the documents under ``$SPARK_GRAFT_SF_DIR``; the session is bench.py's
+host-sized one. Prints one JSON line.
 """
 
+import atexit
 import glob
 import json
 import math
 import os
+import shutil
 import sys
+import tempfile
 import time
-
-os.environ.setdefault("SPARK_GRAFT_TARGET_RECORDS", "6000000")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import http.server
-import threading
+import bench  # noqa: E402
 
-import bench
-from bench import _NullSolr, session, synth_marc
+RECORDS = 6_000_000
 
 
 def main() -> None:
-    spark = session()
-    n_target = bench.TARGET_RECORDS
+    work = tempfile.mkdtemp(prefix="soak_sink_")
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    spark = bench.session(work)
     from traject_spark import Pipeline
     from traject_spark.macros import extract_marc
     from traject_spark.writers import solr_json_writer, write_json
 
     t0 = time.time()
-    src = synth_marc(spark)
+    src = bench.Inputs(spark, work, records=RECORDS).marc()
     p = Pipeline().to_field("title", extract_marc("245ab"))
     out = p.apply(src)
     n_rows = out.count()  # also warms the scan + JIT off the clock
@@ -59,21 +61,16 @@ def main() -> None:
     )
 
     def run_sink(max_docs_per_sec):
-        srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _NullSolr)
-        threading.Thread(target=srv.serve_forever, daemon=True).start()
-        try:
+        with bench.null_solr() as url:
             t = time.time()
             solr_json_writer(
                 out,
-                f"http://127.0.0.1:{srv.server_address[1]}/solr/core",
+                url,
                 batch_size=100,
                 max_skipped=None,
                 max_docs_per_sec=max_docs_per_sec,
             )
             return time.time() - t
-        finally:
-            srv.shutdown()
-            srv.server_close()
 
     # C: cap off — sf1 throughput floor
     sec_off = run_sink(None)
@@ -87,7 +84,7 @@ def main() -> None:
 
     # A+B: per-partition cap sized so the CLUSTER-WIDE ceiling is ~half
     # the uncapped rate; concurrency = min(partitions, cores)
-    concurrent = min(n_parts, bench.CPUS)
+    concurrent = min(n_parts, bench.host.cpus())
     cap = rate_off / (2 * concurrent)
     sec_on = run_sink(cap)
     rate_on = n_rows / sec_on
@@ -108,7 +105,7 @@ def main() -> None:
 
     # D: max_records_per_file file-count discipline
     per_file = 50_000
-    out_dir = bench._tmpdir("soak_json_") + "/out"
+    out_dir = os.path.join(work, "json_out")
     t = time.time()
     write_json(out, out_dir, max_records_per_file=per_file)
     sec_json = time.time() - t
@@ -150,7 +147,7 @@ def main() -> None:
             }
         )
     )
-    spark.stop()
+    bench.host.stop_session(spark)
 
 
 if __name__ == "__main__":

@@ -243,8 +243,8 @@ def _signatures(
     on every invocation — in-query reuse, not a cache across runs; see
     :func:`_checkpoint_sigs` for the executor-loss failure mode and the
     size warning). Isolated bench: dedup_witness_clusters 4.54 → 3.68s,
-    dedup_minhash_lsh 3.59 → 3.32s (OPTIMIZATION_r15.md). The explicit
-    ``sig_col`` path stays the durable-storage posture for clusters
+    dedup_minhash_lsh 3.59 → 3.32s (history/OPTIMIZATION_r15.md). The
+    explicit ``sig_col`` path stays the durable-storage posture for clusters
     where executor-local checkpoint storage is not wanted."""
     # filter on the RAW column, never on the computed signature: a filter
     # over the aliased expression re-evaluates the whole signature tree
@@ -373,8 +373,8 @@ def minhash_lsh_candidates(
     # measured and REJECTED: true duplicates collide in every band, so
     # score-first multiplies the per-pair agreement computation by up to
     # ``bands`` — the same failure mode measured at 3x for the cosine
-    # path (OPTIMIZATION_r15.md, embed_near_dup_lsh). De-dup the candidate rows first, score
-    # each surviving pair once.
+    # path (history/OPTIMIZATION_r15.md, embed_near_dup_lsh). De-dup the
+    # candidate rows first, score each surviving pair once.
     pairs = (
         a.join(
             b,
@@ -878,7 +878,8 @@ def simhash_expr(text: Column | str, bits: int = 64) -> Column:
     instead of thousands of Py4J Column round trips per build; the
     Column path below stays as the reference implementation for
     arbitrary Column inputs. Values are identical (cross-checked 0-diff
-    in the focused formulation test; OPTIMIZATION_r15.md, dedup_simhash).
+    in the focused formulation test; history/OPTIMIZATION_r15.md,
+    dedup_simhash).
 
     Formulation (r15 optimization): Spark higher-order functions are
     CodegenFallback — every lambda invocation is interpreted — so the
@@ -889,8 +890,8 @@ def simhash_expr(text: Column | str, bits: int = 64) -> Column:
     carry-free bit-spread product of one nibble of the hash (see
     _SIMHASH_SPREAD). Counts are extracted once per row afterwards and
     the identical majority votes taken, so signatures are BIT-IDENTICAL
-    (cross-checked 0-diff over the bench corpus, OPTIMIZATION_r15.md;
-    isolated lane min 1.287 -> 1.049s). Rows with more than
+    (cross-checked 0-diff over the bench corpus,
+    history/OPTIMIZATION_r15.md; isolated lane min 1.287 -> 1.049s). Rows with more than
     _SIMHASH_MAX_FAST_TOKENS tokens (counter-saturation bound) take the
     original per-bit-pass path, same values.
 

@@ -939,14 +939,14 @@ def cosine_near_dup(
             )
             .filter(F.col("id_a") < F.col("id_b"))
             # payload-carrying de-dup KEPT deliberately (r15 A/B,
-            # OPTIMIZATION_r15.md): moving it after scoring (narrow
+            # history/OPTIMIZATION_r15.md): moving it after scoring (narrow
             # HashAggregate instead of this SortAggregate of vectors)
             # measured 3x SLOWER — near-identical vectors collide in
             # ALL `tables` hash tables, so score-first multiplies the
             # dominant per-pair cost (the HOF dot) by ~tables. An
             # unrolled codegen dot was also measured and is slower
             # than the HOF dot (5.0s vs 3.2s min). A vectorized Arrow
-            # dot (r16 A/B, AB_FINDINGS_r16.md §3, bit-identical
+            # dot (r16 A/B, history/AB_FINDINGS_r16.md §3, bit-identical
             # scores) is ALSO slower: post-dedup only ~2k unique pairs
             # are scored, so the Python boundary's fixed cost exceeds
             # the interpreted-dot saving.

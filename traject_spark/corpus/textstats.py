@@ -831,8 +831,8 @@ def gopher_repetition_expr(text: Column, use_arrow: bool = False) -> Column:
     (:func:`_repetition_signals_py` under a pandas_udf) instead of the
     JVM sorted-run aggregates — the three per-row n-gram array builds +
     sorts are the dominant cost of a full-struct scan, and the Arrow
-    pass measured 3.6x faster on the bench corpus (AB_FINDINGS_r16.md);
-    values are bit-identical (full-corpus 0-diff parity test + the
+    pass measured 3.6x faster on the bench corpus
+    (history/AB_FINDINGS_r16.md); values are bit-identical (full-corpus 0-diff parity test + the
     DuckDB oracle row runs this path). RECOMMENDED for full-struct
     scans. Default False because the Column form composes everywhere a
     pandas UDF cannot: inside higher-order functions / ``let`` bindings

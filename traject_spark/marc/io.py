@@ -29,7 +29,7 @@ The OUTPUT side builds ``pyarrow.RecordBatch`` objects directly
 (``_marc_batches``): the previous ``mapInPandas`` emission paid Spark's
 pandas-Series-to-Arrow conversion on the nested struct column, measured
 at ~2x the whole remaining lane cost on the 600k-record NDJSON bench
-(isolated A/B, OPTIMIZATION_r15.md: mapInPandas 4.55s vs direct
+(isolated A/B, history/OPTIMIZATION_r15.md: mapInPandas 4.55s vs direct
 RecordBatches 2.41s min) — ``pa.array(list_of_dicts, type=struct)`` is
 one C-path conversion, per guide §4.1/§4.2 (r15 optimization round).
 """
@@ -70,7 +70,7 @@ def _marc_batches(rows: Iterator) -> Iterator:
     instead of routing Python dicts through a pandas object column —
     Spark's pandas→Arrow conversion of a nested struct Series was ~2x
     the cost of the entire remaining lane (see module docstring; A/B in
-    OPTIMIZATION_r15.md). Batch bounding (rows per batch) and the
+    history/OPTIMIZATION_r15.md). Batch bounding (rows per batch) and the
     yield-nothing-for-empty-input policy are unchanged — both come from
     ``batched_rows``.
     """

@@ -44,8 +44,9 @@ real MARC-8 fields) take a one-probe fast path; the state machine
 measures ~21k rec/s single-threaded on a worst-case all-diacritic
 record (~660k rec/s across 32 executor threads) — decode runs inside
 the Arrow-batched binary parse, never the hot mapping path. Measured
-end-to-end by the ``ingest_iso2709_marc8`` bench lane: ~110k rec/s on
-the 600k-record synthetic corpus at local[32] (LOCKS.json).
+end-to-end by the ``ingest_iso2709_marc8`` bench lane: ~100k rec/s on
+the 600k-record synthetic corpus at local[32] on a 32-core host
+(history/BENCH_full_last.json: min 5.91 s).
 """
 
 from __future__ import annotations
@@ -361,7 +362,7 @@ def marc8_to_unicode(
         # regex-sub machinery (Python callback per match, scan setup per
         # call) was ~20% of the whole MARC-8 ingest parse cost when run
         # unconditionally on every plain-ASCII value (r15 profile,
-        # OPTIMIZATION_r15.md §ingest_iso2709_marc8)
+        # history/OPTIMIZATION_r15.md §ingest_iso2709_marc8)
         text = raw.decode("ascii")
         return _expand_ncr(text) if "&#x" in text else text
     g0, g1 = CODE_BASIC_LATIN, CODE_ANSEL

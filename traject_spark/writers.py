@@ -456,7 +456,7 @@ def solr_json_writer(
       is set (the pacing schedule is serial by definition). Default 1:
       against a loopback mock the server's request handling is the
       bottleneck and extra in-flight batches only add contention
-      (measured r16, AB_FINDINGS_r16.md: 600k docs / batch 100 / 32
+      (measured r16, history/AB_FINDINGS_r16.md: 600k docs / batch 100 / 32
       partitions — concurrency 1: 2.66s min, 2: 2.92, 4: 3.49; a
       per-partition pool only pays when the endpoint parallelizes).
 
