@@ -1,7 +1,23 @@
 """Shared MARC record fixtures, modeled on the reference's purpose-named
 test records (test/test_support/*) but authored independently."""
 
+import os
+
 from traject_spark.marc.schema import marc_record
+
+# A traject v3.8 checkout, whose own test fixtures some tests read.
+# Those tests skip, or fall back to a stand-in under tests/data/
+# (FIXTURES.md, "In-repo stand-ins"), where it is absent.
+REFERENCE = "/root/reference"
+REFERENCE_SUPPORT = os.path.join(REFERENCE, "test", "test_support")
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+
+
+def reference_or_local(name, local):
+    """The reference fixture ``test_support/<name>`` where the checkout
+    has it, else the in-repo stand-in ``tests/data/<local>``."""
+    ref = os.path.join(REFERENCE_SUPPORT, name)
+    return ref if os.path.exists(ref) else os.path.join(DATA, local)
 
 # A "manufacturing consent"-style record: typical book with title/author/
 # isbn/oclc/subjects — mirrors the role of the reference's

@@ -1,13 +1,23 @@
 """CLI tests — the behavioral port of the reference's command-line surface
 (lib/traject/command_line.rb): -c config, -t type, -w writer, -o output,
-marcout, commit, after_processing ordering."""
+marcout, commit, after_processing ordering.
+
+The reference fixtures these tests read are inputs only: where traject's
+checkout is absent each resolves to an in-repo stand-in (FIXTURES.md,
+"In-repo stand-ins") that carries the same asserted fields."""
 
 import json
 import os
 
 import pytest
 
-MC = "/root/reference/test/test_support/manufacturing_consent.marc"
+from tests.fixtures import reference_or_local
+
+# one record, 001 2710183, 245ab "Manufacturing consent : the political
+# economy of the mass media /", 008[35-37] "eng" (stand-in: fixtures.BOOK)
+MC = reference_or_local("manufacturing_consent.marc", "book.marc")
+OAI_SAMPLE = reference_or_local("sample-oai-pmh.xml", "sample-oai-pmh.xml")
+UTF8_JSON = reference_or_local("test_data.utf8.json", "four_records.json")
 
 
 CONFIG = """
@@ -142,7 +152,7 @@ to_field("creator", extract_xpath("//dc:creator",
 
 
 def test_cli_xml_indexer_oai_sample(spark, tmp_path):
-    """-i xml + nokogiri.each_record_xpath over the reference's OAI
+    """-i xml + nokogiri.each_record_xpath over an OAI-PMH ListRecords
     sample — the NokogiriIndexer CLI flavor."""
     conf = tmp_path / "xml_config.py"
     conf.write_text(XML_CONFIG)
@@ -151,8 +161,7 @@ def test_cli_xml_indexer_oai_sample(spark, tmp_path):
         spark,
         ["-c", str(conf), "-i", "xml",
          "-s", "nokogiri.each_record_xpath=//oai:record",
-         "-o", out, "-w", "json",
-         "/root/reference/test/test_support/sample-oai-pmh.xml"],
+         "-o", out, "-w", "json", OAI_SAMPLE],
     )
     assert rc == 0
     lines = []
@@ -440,7 +449,7 @@ def test_cli_stdin_matches_file_input(spark, tmp_path, monkeypatch):
         'to_field("title", extract_marc("245ab", trim_punctuation=True))\n'
     )
     for src, mtype in [
-        ("/root/reference/test/test_support/test_data.utf8.json", "json"),
+        (UTF8_JSON, "json"),
         (MC, "binary"),
     ]:
         via_file = str(tmp_path / f"file_{mtype}")

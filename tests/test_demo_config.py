@@ -1,16 +1,29 @@
 """End-to-end run of the ported demo_config (the reference's flagship
 sample configuration, test_support/demo_config.rb) over the reference's
-own 30-record corpus test_data.utf8.mrc, through the real CLI path."""
+own 30-record corpus test_data.utf8.mrc, through the real CLI path.
+
+Reference-only: all four tests skip where test_data.utf8.mrc,
+emptyish_record.marc or manufacturing_consent.marc of a traject v3.8
+checkout is absent (the assertions are facts about those files), and
+run unchanged where they are present."""
 
 import json
 import os
 
 import pytest
 
-DATA = "/root/reference/test/test_support/test_data.utf8.mrc"
-EMPTYISH = "/root/reference/test/test_support/emptyish_record.marc"
-MC = "/root/reference/test/test_support/manufacturing_consent.marc"
+from tests.fixtures import REFERENCE_SUPPORT
+
+DATA = os.path.join(REFERENCE_SUPPORT, "test_data.utf8.mrc")
+EMPTYISH = os.path.join(REFERENCE_SUPPORT, "emptyish_record.marc")
+MC = os.path.join(REFERENCE_SUPPORT, "manufacturing_consent.marc")
 CONF = os.path.join(os.path.dirname(__file__), "demo_config.py")
+
+_MISSING = [p for p in (DATA, EMPTYISH, MC) if not os.path.exists(p)]
+pytestmark = pytest.mark.skipif(
+    bool(_MISSING),
+    reason=f"reference fixtures {' and '.join(_MISSING)} not present",
+)
 
 
 @pytest.fixture(scope="module")

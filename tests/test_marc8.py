@@ -17,6 +17,8 @@ from traject_spark.marc.marc8 import (
 )
 from traject_spark.marc.serialize import from_iso2709, to_iso2709
 
+from tests.fixtures import REFERENCE_SUPPORT
+
 
 # ---------------------------------------------------------------------------
 # decoder units
@@ -310,13 +312,11 @@ def test_marc8_decoder_parity_with_marc8_to_unicode():
 # goldens against the reference's OWN MARC-8 fixtures
 # ---------------------------------------------------------------------------
 
-REF_SUPPORT = "/root/reference/test/test_support"
-
 
 def _ref_record(name):
     import os
 
-    path = os.path.join(REF_SUPPORT, name)
+    path = os.path.join(REFERENCE_SUPPORT, name)
     if not os.path.exists(path):
         pytest.skip(f"reference fixture {name} not present")
     from traject_spark.marc.serialize import split_iso2709_stream

@@ -1,11 +1,15 @@
 """Transformation-macro semantics (reference: transformation.rb tests +
 trim_punctuation cases from test/indexer/macros/marc21/ *)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from traject_spark import transforms as T
 from traject_spark.translation_map import TranslationMap
+
+from tests.fixtures import REFERENCE
 
 
 def eval_exprs(spark, **exprs):
@@ -798,6 +802,17 @@ def test_sql_probe_matches_lookup_semantics_random_maps(spark):
             assert row["hit"] == want, (trial, row["v"], row["hit"], want)
 
 
+REF_MAPS = os.path.join(REFERENCE, "test", "translation_maps")
+REF_BENCH_MAPS = os.path.join(REFERENCE, "index_bench", "translation_maps")
+
+
+# Reference-only: asserts the content of traject's own map files (e.g. the
+# 317-entry ht/country_map), so it skips where either map directory is
+# absent and runs unchanged where a traject v3.8 checkout is present.
+@pytest.mark.skipif(
+    not (os.path.isdir(REF_MAPS) and os.path.isdir(REF_BENCH_MAPS)),
+    reason=f"reference maps {REF_MAPS} and {REF_BENCH_MAPS} not present",
+)
 def test_ruby_translation_maps_reference_fixtures():
     """.rb translation maps load through the safe literal-subset
     evaluator (NO eval), against the reference's own fixtures
@@ -809,7 +824,7 @@ def test_ruby_translation_maps_reference_fixtures():
 
     from traject_spark.translation_map import RubyMapError, TranslationMap
 
-    lp = ["/root/reference/test/translation_maps"]
+    lp = [REF_MAPS]
     m = TranslationMap("ruby_map", load_path=lp)
     assert m.as_dict() == {
         "key1": "value1",
@@ -830,7 +845,7 @@ def test_ruby_translation_maps_reference_fixtures():
     # a real-world 317-entry literal map
     big = TranslationMap(
         "ht/country_map",
-        load_path=["/root/reference/index_bench/translation_maps"],
+        load_path=[REF_BENCH_MAPS],
     )
     assert big.lookup("xr") == "Czech Republic"
     assert len(big.as_dict()) == 317

@@ -2,6 +2,7 @@
 harvest pagination.  Mirrors test/nokogiri_reader_test.rb and
 test/oai_pmh_nokogiri_reader_test.rb shapes (golden values inline)."""
 
+import os
 import textwrap
 
 import pytest
@@ -14,6 +15,8 @@ from traject_spark.xmlrec import (
     localname_path,
     read_xml_records,
 )
+
+from tests.fixtures import REFERENCE_SUPPORT, reference_or_local
 
 DOC = textwrap.dedent("""\
     <collection xmlns:dc="http://purl.org/dc/elements/1.1/">
@@ -300,10 +303,24 @@ def test_oai_pmh_restartable_harvest(spark, tmp_path):
 
 # --- reference-fixture golden: extra_xpath_hooks + namespaces -------------
 
-OAI_SAMPLE = "/root/reference/test/test_support/sample-oai-pmh.xml"
-NS_SAMPLE = "/root/reference/test/test_support/namespace-test.xml"
+OAI_SAMPLE = os.path.join(REFERENCE_SUPPORT, "sample-oai-pmh.xml")
+OAI_PAGES = [
+    os.path.join(REFERENCE_SUPPORT, "oai-pmh-one-record-first.xml"),
+    os.path.join(REFERENCE_SUPPORT, "oai-pmh-one-record-2.xml"),
+]
+# the stand-in declares its record prefix on the root only, so a split
+# record that lost the declaration would not parse
+NS_SAMPLE = reference_or_local("namespace-test.xml", "namespace-root.xml")
 
 
+# Reference-only: asserts the literal resumptionToken of traject's own OAI
+# sample, so it skips where that file is absent and runs unchanged where
+# a traject v3.8 checkout is present. extra_xpath_hooks is checked on
+# in-repo input by test_hooks_scrape_outside_records_only.
+@pytest.mark.skipif(
+    not os.path.exists(OAI_SAMPLE),
+    reason=f"reference fixture {OAI_SAMPLE} not present",
+)
 def test_extra_xpath_hooks_resumption_token(spark):
     """nokogiri_reader_test.rb:59-72 on the reference's own OAI sample."""
     from traject_spark.xmlrec.io import read_xml_records
@@ -338,6 +355,14 @@ def test_namespace_test_records_split(spark):
         assert root.tag.endswith("}record") or root.tag == "record"
 
 
+# Reference-only: harvests traject's own two OAI-PMH pages, so it skips
+# where they are absent and runs unchanged where a traject v3.8 checkout
+# is present. Harvest paging is checked on in-repo pages by
+# test_oai_pmh_pagination.
+@pytest.mark.skipif(
+    not all(os.path.exists(p) for p in OAI_PAGES),
+    reason=f"reference fixtures {' and '.join(OAI_PAGES)} not present",
+)
 def test_harvest_oai_pmh_reference_fixtures(spark):
     """Two-page harvest over the reference's own OAI-PMH fixture pages
     (oai-pmh-one-record-first.xml follows 'dummy_resumption' to
@@ -345,12 +370,8 @@ def test_harvest_oai_pmh_reference_fixtures(spark):
     from traject_spark.xmlrec.io import harvest_oai_pmh
 
     pages = {
-        None: open(
-            "/root/reference/test/test_support/oai-pmh-one-record-first.xml"
-        ).read(),
-        "dummy_resumption": open(
-            "/root/reference/test/test_support/oai-pmh-one-record-2.xml"
-        ).read(),
+        None: open(OAI_PAGES[0]).read(),
+        "dummy_resumption": open(OAI_PAGES[1]).read(),
     }
     calls = []
 
