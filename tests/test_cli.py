@@ -948,3 +948,43 @@ def test_cli_convert_refuses_missing_output_and_overwrite(spark, tmp_path):
             ["-x", "convert", "-t", "json", "-o", str(tmp_path / "pq2"),
              "-s", "convert.max_records_per_file=0", ndj],
         )
+
+
+def test_cli_debug_sql_prints_runnable_projection(spark, tmp_path, capsys):
+    """-s debug.sql=true prints Pipeline.to_sql() to stderr; that text,
+    fed to selectExpr over the same input, gives the rows the run
+    wrote."""
+    from traject_spark.cli import read_input
+
+    conf = tmp_path / "config.py"
+    conf.write_text(
+        'to_field("title", extract_marc("245ab", trim_punctuation=True))\n'
+        'to_field("lang", marc_languages())\n'
+        'to_field("format", marc_formats())\n'
+    )
+    out = str(tmp_path / "out")
+    rc = run_cli(
+        spark, ["-c", str(conf), "-s", "debug.sql=true", "-o", out, MC]
+    )
+    assert rc == 0
+    (line,) = [
+        ln for ln in capsys.readouterr().err.splitlines()
+        if ln.startswith("debug.sql ")
+    ]
+    printed = json.loads(line[len("debug.sql "):])
+    assert printed["filter"] is None and printed["hidden"] == []
+    df = read_input(spark, {}, [MC])
+    rows = [
+        {k: v for k, v in r.asDict().items() if v is not None}
+        for r in df.selectExpr(*printed["select"]).collect()
+    ]
+    written = []
+    for f in os.listdir(out):
+        if f.startswith("part-"):
+            with open(os.path.join(out, f)) as fh:
+                written += [json.loads(ln) for ln in fh if ln.strip()]
+    assert rows == written
+    assert written[0]["title"] == [
+        "Manufacturing consent : the political economy of the mass media"
+    ]
+    assert written[0]["lang"] == ["English"]

@@ -290,6 +290,8 @@ CASES = [
     ("ext_100_pipe", extract_marc, {"spec": "100", "separator": "|"}),
     ("ext_264c_nosep", extract_marc, {"spec": "264c", "separator": None}),
     ("ext_first_default", extract_marc, {"spec": "245a", "first": True, "default": "none"}),
+    # a float default reads as Spark casts it: "1.0E-4", not Python's "0.0001"
+    ("ext_float_default", extract_marc, {"spec": "245a", "default": 0.0001}),
     ("ext_dups", extract_marc, {"spec": "650a", "allow_duplicates": True}),
     ("ext_041a_map", extract_marc, {"spec": "041a", "translation_map": "marc_languages"}),
     # extract_marc: Column fallbacks (control, byte, indicator, 880, alt-script)

@@ -501,3 +501,139 @@ def test_non_identifier_source_column_matches_marc(spark):
         assert rows(good) == want, src
         assert bad.columns == ["record_id", "_error", shown]
         assert p.source_col == src
+
+
+# --- the Column bridge: Column macros inside a text-composed pipeline -------
+
+
+def test_user_column_macro_after_text_macro(spark):
+    """A user macro returning a Column composes after a text macro: it
+    is handed the accumulator as F.expr(text), and its Column is read
+    back through a hidden column."""
+
+    def upcase(acc, ctx):
+        return F.transform(acc, lambda v: F.upper(v))
+
+    def wraps_builtin(acc, ctx):
+        # a built-in text macro called the Column way
+        return F.reverse(extract_marc("100a")(acc, ctx))
+
+    p = (
+        Pipeline()
+        .to_field("t", extract_marc("245a"), upcase)
+        .to_field("w", literal("a"), wraps_builtin)
+    )
+    out = p.apply(source_df(spark, ("b", BOOK), ("e", EMPTY)))
+    rows = {r.record_id: (r.t, r.w) for r in out.collect()}
+    assert rows == {
+        "b": (["MANUFACTURING CONSENT :"], ["Herman, Edward S.", "a"]),
+        "e": (None, ["a"]),
+    }
+    assert out.columns == ["record_id", "t", "w"]
+    assert p._materialized == []
+
+
+def test_builtin_macro_called_without_context_says_so(spark):
+    """A built-in text macro called the Column way projects its input as
+    a hidden column, which needs the pipeline's context."""
+    with pytest.raises(TypeError, match="PipelineContext"):
+        literal("x")(F.array(), None)
+
+
+def test_bridged_columns_project_once_per_dependency_level(spark):
+    """Hidden columns that do not read each other share one projection:
+    ten rules that each chain three Column transforms add three
+    projections (strip, first_only, default), not thirty."""
+    p = Pipeline()
+    specs = ["245a", "100a", "260b", "020a", "650a",
+             "700a", "300a", "250a", "490a", "035a"]
+    for i, spec in enumerate(specs):
+        p.to_field(f"f{i}", extract_marc(spec), T.strip(), T.first_only(),
+                   T.default("none"))
+    out = p.apply(source_df(spark, ("b", BOOK)))
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    # three hidden-column levels and the select
+    assert analyzed.count("Project [") == 4
+    row = out.collect()[0]
+    assert [row[f"f{i}"] for i in range(10)] == [
+        ["Manufacturing consent :"], ["Herman, Edward S."],
+        ["Pantheon Books,"], ["0394549260 :"], ["Mass media"],
+        ["Chomsky, Noam."], ["xx, 412 p. ;"], ["none"], ["none"],
+        ["(OCoLC)17508918"],
+    ]
+
+
+def test_each_record_column_output_and_skip(spark):
+    """each_record reads an earlier field (ctx.output), writes a Column
+    with add_output and skips on a Column predicate."""
+
+    def step(ctx):
+        t = ctx.output("t")
+        ctx.add_output("n", F.array(F.size(t).cast("string")))
+        ctx.skip_when(F.size(t) == 0)
+
+    p = (
+        Pipeline()
+        .to_field("t", extract_marc("245ab"))
+        .each_record(step)
+        .to_field("t2", literal("x"))
+    )
+    df = source_df(spark, ("b", BOOK), ("the", THE_TITLE), ("e", EMPTY))
+    rows = {r.record_id: r.asDict() for r in p.apply(df).collect()}
+    assert rows == {
+        "b": {
+            "record_id": "b",
+            "t": [
+                "Manufacturing consent : the political economy of the "
+                "mass media /"
+            ],
+            "n": ["1"],
+            "t2": ["x"],
+        },
+        "the": {
+            "record_id": "the",
+            "t": ["The fateful triangle : essays."],
+            "n": ["1"],
+            "t2": ["x"],
+        },
+    }
+    skipped = []
+    p.process_with(df, on_skipped=lambda s: skipped.extend(
+        r.record_id for r in s.collect()
+    ))
+    assert skipped == ["e"]
+
+
+def test_rescued_udf_through_bridge_quarantines(spark):
+    """A rescued transform_udf (a Column macro) after a text macro:
+    errored records leave the output and land in the quarantine frame
+    with the step named in the message; only the rescued struct is
+    materialized."""
+
+    def shout(v):
+        if "fateful" in v:
+            raise ValueError("no fate")
+        return v.upper()
+
+    p = (
+        Pipeline()
+        .settings(mapping_rescue="skip")
+        .to_field("t", extract_marc("245a"), T.transform_udf(shout))
+        .to_field("id", extract_marc("001"))
+    )
+    df = source_df(spark, ("b", BOOK), ("the", THE_TITLE))
+    good, bad = p.apply_with_quarantine(df)
+    assert [r.asDict() for r in good.collect()] == [
+        {"record_id": "b", "t": ["MANUFACTURING CONSENT :"],
+         "id": ["2710183"]},
+    ]
+    (row,) = bad.collect()
+    assert row.record_id == "the"
+    assert row._error == (
+        "ValueError: no fate (while executing to_field ['t'])"
+    )
+    assert row.marc.datafields[0].tag == "245"
+    assert bad.columns == ["record_id", "_error", "marc"]
+    assert len(p._materialized) == 1
+    plain = p.apply(df)
+    assert [r.record_id for r in plain.collect()] == ["b"]

@@ -178,3 +178,43 @@ def test_marc8_ingest_plan_is_narrow(spark, tmp_path):
     plan = _plan(df)
     assert "Exchange" not in plan, plan[:2000]
     assert df.count() == 4
+
+
+def test_flagship_apply_py4j_budget(spark, py4j_calls):
+    """The flagship ``apply``, compile included, hands Spark SQL text:
+    a handful of JVM calls (one ``selectExpr``, the source checks)
+    instead of one per ``F.*`` node. Deterministic, unlike the wall-time
+    bound above: a macro or glue step that goes back to building Column
+    trees adds hundreds of round trips."""
+    from __spark_entry__ import flagship_pipeline
+    from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
+
+    df = spark.createDataFrame([], MARC_SOURCE_SCHEMA)
+    n, out = py4j_calls(lambda: flagship_pipeline().apply(df))
+    assert n <= 50, n
+    assert len(out.columns) == 13
+
+
+def test_demo_config_apply_py4j_budget(spark, py4j_calls):
+    """The ported demo_config bridges nine Columns (two Column
+    transforms, an each_record add_output, extraction fallbacks) and
+    keeps Column-built macros (serialized_marc, the series, era and
+    instrumentation facets). Its apply, config load and compile
+    included, made 15,040 round trips when every macro built Column
+    trees and about 9,200 with text macros and the bridge; a text macro
+    that goes back to Column trees crosses the bound.
+    (``test_pipeline.py::test_bridged_columns_project_once_per_dependency_level``
+    pins the bridge's projection count.)"""
+    import os
+
+    from traject_spark import Pipeline
+    from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
+
+    conf = os.path.join(os.path.dirname(__file__), "demo_config.py")
+    df = spark.createDataFrame([], MARC_SOURCE_SCHEMA)
+    # the first apply in a session registers the SQL functions some
+    # macros call; count a warm one
+    Pipeline().load_config_file(conf).apply(df)
+    n, out = py4j_calls(lambda: Pipeline().load_config_file(conf).apply(df))
+    assert n <= 10_000, n
+    assert "title3_t" in out.columns

@@ -566,7 +566,10 @@ def test_compiled_sql_texts_are_lexer_independent(spark):
     the session lexer says. All embedded regexes now render via
     sql_str_lit (chr()-spliced backslashes), so the compiled SQL is
     lexer-independent; this evaluates each compiled text directly under
-    both modes against the Column form of formats."""
+    both modes against the Column form of formats, then the whole
+    flagship ``Pipeline.to_sql()`` text (with quoted field names and
+    quote/backslash literals added) under escapedStringLiterals and
+    ansi.doubleQuotedIdentifiers."""
     from traject_spark.macros.formats import formats_sql
     from traject_spark.macros.semantics import _geo_sql, _languages_sql
     from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
@@ -628,5 +631,57 @@ def test_compiled_sql_texts_are_lexer_independent(spark):
     assert "Conference" in " ".join(r0["formats"] or [""]) or True
     assert r0["langs"] == ["English", "French"]
     assert any("(" in g for g in (r0["geo"] or [])), r0["geo"]
+
+    # the whole flagship to_sql() text, plus field names that need
+    # quoting and literals carrying a quote and a backslash, under each
+    # lexer knob
+    from __spark_entry__ import flagship_pipeline
+    from traject_spark import extract_marc
+    from traject_spark.macros import literal
+
+    p = (
+        flagship_pipeline()
+        .to_field("a b", literal("1"))
+        .to_field("x`y", extract_marc("245ab", separator="'\\"))
+        .to_field("ünï", extract_marc("999a", default="it's \\ here"))
+    )
+    select, where = p.to_sql()
+    assert where is None
+    rows = {}
+    for knob in (
+        None,
+        "spark.sql.parser.escapedStringLiterals",
+        "spark.sql.ansi.doubleQuotedIdentifiers",
+    ):
+        if knob:
+            spark.conf.set(knob, "true")
+        try:
+            rows[knob] = [
+                r.asDict() for r in
+                df.selectExpr(*select).orderBy("record_id").collect()
+            ]
+        finally:
+            if knob:
+                spark.conf.unset(knob)
+    want = rows[None]
+    assert all(got == want for got in rows.values())
+    applied = p.apply(df).orderBy("record_id").collect()
+    assert [r.asDict() for r in applied] == want
+    assert [r["a b"] for r in want] == [["1"], ["1"], ["1"]]
+    assert [r["x`y"] for r in want] == [
+        None,
+        ["Manufacturing consent :'\\the political economy of the mass "
+         "media /"],
+        None,
+    ]
+    assert [r["ünï"] for r in want] == [["it's \\ here"]] * 3
+    assert [r["language"] for r in want] == [
+        ["English", "French"], ["English"], None,
+    ]
+    assert [r["title"] for r in want] == [
+        None,
+        ["Manufacturing consent : the political economy of the mass media"],
+        None,
+    ]
 
 

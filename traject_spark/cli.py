@@ -21,12 +21,14 @@ scope (``to_field``, ``each_record``, ``after_processing``, ``settings``,
 input through the format reader chosen by ``marc_source.type`` (``-t``),
 applies the compiled pipeline, and writes via the writer selected by
 ``writer_class_name`` (``-w``) — json (NDJSON, default), csv, delimited,
-debug, or solr.
+debug, or solr. ``-s debug.sql=true`` prints the SQL the pipeline
+compiles to (``Pipeline.to_sql``) to stderr before the run.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import shutil
 import sys
@@ -45,6 +47,7 @@ BOOL_SETTINGS = {
     "solr_writer.commit_on_close",
     "marcout.allow_oversized",
     "marc_source.xml_strict",
+    "debug.sql",
 }
 
 WRITER_SHORTCUTS = {
@@ -711,6 +714,21 @@ def command_commit(settings: dict) -> bool:
     return True
 
 
+def print_sql(pipeline, df: DataFrame) -> None:
+    """``-s debug.sql=true``: one stderr line ``debug.sql {json}`` with
+    the ``selectExpr`` list and ``filter`` predicate ``apply`` issues
+    over ``df`` (``Pipeline.to_sql``), and the hidden columns the text
+    reads when a Column macro was bridged in (empty for text-only
+    pipelines, whose text runs as is over ``df``)."""
+    select, where = pipeline.to_sql(df)
+    hidden = [name for name, _ in pipeline._hidden]
+    print(
+        "debug.sql "
+        + json.dumps({"select": select, "filter": where, "hidden": hidden}),
+        file=sys.stderr,
+    )
+
+
 def make_session(master: str) -> SparkSession:
     return (
         SparkSession.builder.master(master)
@@ -788,6 +806,8 @@ def main(argv: Optional[list] = None, spark: Optional[SparkSession] = None) -> i
             pipeline.run_after_processing()
             return 0 if ok else 1
         df = read_input(spark, settings, args.files, indexer=args.indexer)
+        if str(settings.get("debug.sql", "")).lower() == "true":
+            print_sql(pipeline, df)
         ok = write_output(pipeline.apply(df), pipeline, settings)
         pipeline.run_after_processing()  # indexer.rb:646-655 ordering
         return 0 if ok else 1

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from traject_spark.expr import let, let2, sql_let
+from traject_spark.expr import SqlMacro, let, let2, sql_let
 from traject_spark.translation_map import TranslationMap
 
 # one shared empty-array helper — drifting copies otherwise
@@ -244,7 +244,7 @@ def formats_expr(marc: Column, default: str = "Other") -> Column:
 #
 # The Column builder above costs ~1450 Py4J round trips (~0.5s of the
 # flagship's driver-side build); the SQL text below is the same
-# classifier rendered as one F.expr call. let() has a direct SQL form
+# classifier rendered as text for the text macro. let() has a direct SQL form
 # (the aggregate trick with NAMED lambda variables, so nesting is
 # unambiguous), and the genre maps are embedded from the same
 # TranslationMap load the Column path uses — a user map shadowing the
@@ -394,18 +394,18 @@ def formats_sql(marc: str, default: str = "Other") -> str:
 
 
 def marc_formats(default: str = "Other"):
-    """Macro form (marc_format_classifier.rb:17-22): the classifier as
-    one generated-SQL string (one Py4J call instead of ~1450, see
-    formats_sql); ``formats_expr`` when a user map shadowing the genre
-    maps is not SQL-probe eligible."""
+    """Macro form (marc_format_classifier.rb:17-22): a text macro over
+    the classifier's generated SQL (formats_sql); ``formats_expr``
+    through the pipeline's Column bridge when a user map shadowing the
+    genre maps is not SQL-probe eligible."""
     # map eligibility checked once at macro construction, not per compile
     sql_ok = _genre_maps_sql_eligible()
 
-    def macro(acc: Column, ctx=None) -> Column:
+    def sql(acc: str, ctx) -> str:
         if sql_ok:
-            return F.concat(
-                acc, F.expr(formats_sql(ctx.source_sql, default=default))
-            )
-        return F.concat(acc, formats_expr(ctx.marc, default=default))
+            formats = formats_sql(ctx.source_sql, default=default)
+        else:
+            formats = ctx.column_sql(formats_expr(ctx.marc, default=default))
+        return f"concat({acc}, {formats})"
 
-    return macro
+    return SqlMacro(sql)

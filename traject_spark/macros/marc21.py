@@ -10,9 +10,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from traject_spark.marc.extractor import extract_values
+from traject_spark.expr import SQL_EMPTY, SqlMacro, sql_let
+from traject_spark.macros.semantics import _sql_trim_punct
+from traject_spark.marc.extractor import extract_values_sql
 from traject_spark.marc.spec import parse_marc_spec
-from traject_spark.transforms import trim_punctuation_expr
+from traject_spark.sqlutil import sql_str_lit, sql_string_of
 from traject_spark.translation_map import TranslationMap
 
 EXTRACT_MARC_VALID_OPTIONS = {
@@ -36,11 +38,13 @@ def extract_marc(spec: str, **options):
 
     Unknown options raise, mirroring marc21.rb:67-69.
 
-    For the common spec shape (datafield-only, no indicator filters,
-    alternate_script='include') the extraction is ONE generated-SQL
-    string instead of hundreds of Py4J round trips; other shapes use the
-    Column builder (:func:`~traject_spark.marc.extractor.extract_values`).
-    The option wrappers are tiny Column calls on top.
+    A text macro: the extraction is generated SQL for the common spec
+    shape (datafield-only, no indicator filters,
+    alternate_script='include') and the Column builder through the
+    pipeline's bridge for the rest
+    (:func:`~traject_spark.marc.extractor.extract_values_sql`); the
+    option wrappers are text on top, a translation map through
+    ``TranslationMap.sql_probe`` when it qualifies.
     """
     unknown = set(options) - EXTRACT_MARC_VALID_OPTIONS
     if unknown:
@@ -57,41 +61,43 @@ def extract_marc(spec: str, **options):
     tmap = options.get("translation_map")
     if tmap is not None and not isinstance(tmap, TranslationMap):
         tmap = TranslationMap(tmap)
+    probe = tmap.sql_probe("v") if tmap is not None else None
 
     # parse NOW: spec errors surface at definition time, like the
     # reference's config-load validation (marc_extractor_spec.rb:192-194)
     parsed_spec = parse_marc_spec(spec)
 
-    def macro(acc: Column, ctx=None) -> Column:
-        vals = extract_values(ctx, parsed_spec, separator, alternate_script)
+    def sql(acc: str, ctx) -> str:
+        vals = extract_values_sql(ctx, parsed_spec, separator, alternate_script)
         # the reference applies options to the shared accumulator, i.e.
         # including values appended by earlier macros in the same rule
-        out = F.concat(acc, vals)
+        out = f"concat({acc}, {vals})"
         if first:
             # Array(accumulator[0]) in the reference (marc21.rb first!):
             # a NIL first element becomes [], NOT [nil] — so :default can
             # still fire (e.g. an out-of-range byteslice yields null). A
             # bare slice(out, 1, 1) would keep [null] and block it.
-            out = F.filter(F.slice(out, 1, 1), lambda x: x.isNotNull())
-        if tmap is not None:
-            out = tmap.translate_array_expr(out)
+            out = f"filter(slice({out}, 1, 1), x -> x IS NOT NULL)"
+        if probe is not None:
+            out = f"filter(transform({out}, v -> {probe}), x -> x IS NOT NULL)"
+        elif tmap is not None:
+            out = ctx.column_sql(tmap.translate_array_expr(F.expr(out)))
         if trim:
-            out = F.transform(out, trim_punctuation_expr)
+            out = f"transform({out}, v -> {_sql_trim_punct('v')})"
         if not allow_duplicates:
-            out = F.array_distinct(out)
+            out = f"array_distinct({out})"
         if has_default:
-            # cast: a non-string default (e.g. default=0) would build an
-            # array<int> branch that fails analysis against the string
-            # accumulator; None stays a null element (the reference
-            # appends nil on has_key?(:default), marc21.rb:136-138, and
-            # output post-processing drops it)
-            out = F.when(
-                F.size(out) == 0,
-                F.array(F.lit(default_value).cast("string")),
-            ).otherwise(out)
+            # a non-string default renders as its string form (the
+            # accumulator is array<string>); None stays a null element
+            # (the reference appends nil on has_key?(:default),
+            # marc21.rb:136-138, and output post-processing drops it)
+            fill = sql_string_of(default_value)
+            out = sql_let(
+                out, "d", f"CASE WHEN size(d) = 0 THEN array({fill}) ELSE d END"
+            )
         return out
 
-    return macro
+    return SqlMacro(sql)
 
 
 def extract_all_marc_values(
@@ -99,39 +105,35 @@ def extract_all_marc_values(
 ):
     """All subfield values of data fields with from <= tag <= to, one
     joined string per field (marc21.rb:213-238)."""
-
-    def macro(acc: Column, ctx=None) -> Column:
-        fields = F.filter(
-            ctx.marc["datafields"],
-            lambda f: f["tag"].between(from_tag, to_tag),
+    vals = "transform(f.subfields, sf -> sf.value)"
+    if separator is None:
+        # guard NULL subfields arrays (schema-legal in user parquet): a
+        # NULL contribution would null the whole record's flatten; the
+        # joined branch below is already safe (size(NULL) > 0 is NULL ->
+        # the empty ELSE)
+        per_field = f"coalesce({vals}, {SQL_EMPTY})"
+    else:
+        per_field = (
+            f"CASE WHEN size({vals}) > 0 THEN "
+            f"array(array_join({vals}, {sql_str_lit(separator)})) "
+            f"ELSE {SQL_EMPTY} END"
         )
+    tag_range = (
+        f"(f.tag >= {sql_str_lit(from_tag)}) AND (f.tag <= {sql_str_lit(to_tag)})"
+    )
 
-        def per_field(f: Column) -> Column:
-            vals = F.transform(f["subfields"], lambda sf: sf["value"])
-            if separator is None:
-                # guard NULL subfields arrays (schema-legal in user
-                # parquet): a NULL contribution would null the whole
-                # record's flatten; the joined branch below is already
-                # safe (size(NULL) > 0 is NULL -> otherwise-empty)
-                return F.coalesce(vals, F.array().cast("array<string>"))
-            return F.when(
-                F.size(vals) > 0, F.array(F.array_join(vals, separator))
-            ).otherwise(F.array().cast("array<string>"))
-
+    def sql(acc: str, ctx) -> str:
         # coalesce the OUTER array too: marc.datafields = NULL is
         # schema-legal in user parquet, and transform(NULL) -> NULL
         # would ride concat() and wipe earlier macros' contributions to
-        # the same field (every other macro guards this via the
-        # extractor's coalesce)
-        return F.concat(
-            acc,
-            F.coalesce(
-                F.flatten(F.transform(fields, per_field)),
-                F.array().cast("array<string>"),
-            ),
+        # the same field
+        fields = f"filter({ctx.source_sql}.datafields, f -> {tag_range})"
+        return (
+            f"concat({acc}, coalesce(flatten(transform({fields}, "
+            f"f -> {per_field})), {SQL_EMPTY}))"
         )
 
-    return macro
+    return SqlMacro(sql)
 
 
 def serialized_marc(

@@ -1,8 +1,11 @@
 """MARC21 semantic derivation macros.
 
 Ports of lib/traject/macros/marc21_semantics.rb — opinionated,
-deterministic record->values functions, each compiled to intra-row Column
-expressions (no UDF, no shuffle).  Every function cites the reference
+deterministic record->values functions, each compiled to intra-row
+expressions (no UDF, no shuffle): the flagship's macros are text macros
+(``expr.SqlMacro``) over generated SQL, with the Column builder through
+the pipeline's bridge for specs and maps the SQL cannot take; the rest
+are Column macros.  Every function cites the reference
 lines whose behavior it replicates, including the reference's own quirks
 (Ruby #to_i prefix parsing, sub-vs-gsub first-occurrence replacement,
 un-anchored period stripping) — those are part of the contract.
@@ -15,9 +18,8 @@ from typing import Optional
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from traject_spark.expr import let, let2, sql_let
+from traject_spark.expr import SQL_EMPTY, SqlMacro, let, let2, sql_let
 from traject_spark.marc.extractor import (
-    _SQL_EMPTY,
     _SQL_FIRST6,
     _empty,
     _extract_sql,
@@ -25,12 +27,12 @@ from traject_spark.marc.extractor import (
     _sql_tag_match,
     collect_matching_lines,
     collect_subfields_expr,
-    extract_values,
+    extract_values_sql,
     marc_extract,
 )
 from traject_spark.marc.spec import parse_marc_spec
 from traject_spark.transforms import ruby_to_i_expr, trim_punctuation_expr
-from traject_spark.sqlutil import sql_str_lit as _rx_lit
+from traject_spark.sqlutil import sql_str_lit as _rx_lit, sql_value_of
 
 from traject_spark.translation_map import TranslationMap
 
@@ -62,6 +64,7 @@ def _ruby_sub_first(v: Column, pattern_no_groups: str, replacement: str = "") ->
 
 #: Ruby OCLCPAT (marc21_semantics.rb:35-40), /x whitespace stripped, Java form
 OCLCPAT = r"\A\s*(?:\(OCoLC\)|(?:\(OCoLC\))?(?:ocm|ocn|on))(\d+)"
+_OCLC_LIT = _rx_lit(OCLCPAT)
 
 
 def oclcnum(spec: str = "035a"):
@@ -69,13 +72,13 @@ def oclcnum(spec: str = "035a"):
     dropped, de-duplicated (marc21_semantics.rb:18-48)."""
     parsed = parse_marc_spec(spec)
 
-    def macro(acc: Column, ctx=None) -> Column:
-        vals = extract_values(ctx, parsed, separator=None)
-        nums = F.transform(vals, lambda v: F.regexp_extract(v, OCLCPAT, 1))
-        kept = F.filter(nums, lambda x: x.isNotNull() & (x != ""))
-        return F.concat(acc, F.array_distinct(kept))
+    def sql(acc: str, ctx) -> str:
+        vals = extract_values_sql(ctx, parsed, separator=None)
+        nums = f"transform({vals}, v -> regexp_extract(v, {_OCLC_LIT}, 1))"
+        kept = f"filter({nums}, x -> (x IS NOT NULL) AND (x != ''))"
+        return f"concat({acc}, array_distinct({kept}))"
 
-    return macro
+    return SqlMacro(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -186,10 +189,7 @@ def marc_sortable_author():
         # [onexx, title].compact.join("   ") — concat_ws skips NULLs
         return f"array(concat_ws('   ', {onexx}, {title}))"
 
-    def macro(acc: Column, ctx=None) -> Column:
-        return F.concat(acc, F.expr(_sql(ctx.source_sql)))
-
-    return macro
+    return SqlMacro(lambda acc, ctx: f"concat({acc}, {_sql(ctx.source_sql)})")
 
 
 def marc_sortable_title(spec: str = "245ab"):
@@ -212,17 +212,15 @@ def marc_sortable_title(spec: str = "245ab"):
         _sql_nonfiling(f"coalesce({joined}, {k})", "fld.ind2")
     )
 
-    def macro(acc: Column, ctx=None) -> Column:
+    def sql(acc: str, ctx) -> str:
         st = sql_let(
             f"get(filter({ctx.source_sql}.datafields, f -> {match}), 0)",
             "fld",
             with_field,
         )
-        return F.concat(
-            acc, F.expr(f"filter(array({st}), x -> x IS NOT NULL)")
-        )
+        return f"concat({acc}, filter(array({st}), x -> x IS NOT NULL))"
 
-    return macro
+    return SqlMacro(sql)
 
 
 def extract_marc_filing_version(spec: str = "245abdefghknp", include_original: bool = False):
@@ -274,10 +272,9 @@ _LANGUAGES_DEFAULT_SPEC = "008[35-37]:041a:041d"
 
 def _languages_sql(marc_sql: str, probe_sql: str) -> str:
     """The DEFAULT-spec marc_languages expression as ONE generated-SQL
-    string for ``F.expr``: the Column builder issues ~3k Py4J round
-    trips per compile (~1.3s measured r10 — rivaling the 600k-row
-    execution). Values are pinned by tests/data/macro_goldens.json —
-    each piece mirrors a named helper:
+    string (the Column builder costs ~3k Py4J round trips per compile).
+    Values are pinned by tests/data/macro_goldens.json — each piece
+    mirrors a named helper:
 
     - ctrl: 008 byte-slice [35-37] (extractor._byteslice: NULL when the
       fixed field is shorter than the range start);
@@ -337,9 +334,9 @@ def marc_languages(
     """Byte-slice + subfield codes; packed >3-char values chunked into
     3-char codes; de-dup; translate (marc21_semantics.rb:195-223).
 
-    The default spec with a simple map builds as generated SQL in ~1
-    Py4J round trip instead of ~3k; a custom spec, or a map the SQL
-    probe cannot carry, uses the Column builder."""
+    The default spec with a simple map builds as generated SQL; a
+    custom spec, or a map the SQL probe cannot carry, bridges the
+    Column builder."""
     parsed = parse_marc_spec(spec)
     if translation_map is None:
         translation_map = TranslationMap("marc_languages")
@@ -363,20 +360,18 @@ def marc_languages(
             )
         )
 
-    def macro(acc: Column, ctx=None) -> Column:
-        # no lexer gate: the compiled SQL renders every regex/text
-        # literal via sql_str_lit, so it parses identically under both
-        # string-lexer modes (pinned by
-        # test_compiled_sql_texts_are_lexer_independent)
+    def sql(acc: str, ctx) -> str:
         if probe_sql is not None:
-            return F.concat(
-                acc, F.expr(_languages_sql(ctx.source_sql, probe_sql))
-            )
-        codes = collect_matching_lines(ctx.marc, parsed, data_fn)
-        codes = F.array_distinct(codes)
-        return F.concat(acc, translation_map.translate_array_expr(codes))
+            codes = _languages_sql(ctx.source_sql, probe_sql)
+        else:
+            codes = ctx.column_sql(translation_map.translate_array_expr(
+                F.array_distinct(
+                    collect_matching_lines(ctx.marc, parsed, data_fn)
+                )
+            ))
+        return f"concat({acc}, {codes})"
 
-    return macro
+    return SqlMacro(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -634,16 +629,14 @@ def marc_publication_date(
 
         max_year = datetime.date.today().year + 6
 
-    def macro(acc: Column, ctx=None) -> Column:
+    def sql(acc: str, ctx) -> str:
         d_sql = _pubdate_sql(
             ctx.source_sql, estimate_tolerance, min_year, max_year
         )
         v_sql = f"CAST({d_sql} AS string)" if as_string else d_sql
-        return F.concat(
-            acc, F.expr(f"filter(array({v_sql}), x -> x IS NOT NULL)")
-        )
+        return f"concat({acc}, filter(array({v_sql}), x -> x IS NOT NULL))"
 
-    return macro
+    return SqlMacro(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -652,6 +645,7 @@ def marc_publication_date(
 
 #: Ruby LCC_REGEX (marc21_semantics.rb:398), Java syntax
 LCC_REGEX = r"\A *[A-Z]{1,3}[ .]*(?:(\d+)(?:\s*?\.\s*?(\d+))?).*"
+_LCC_LIT = _rx_lit(LCC_REGEX)
 
 
 def marc_lcc_to_broad_category(
@@ -668,17 +662,30 @@ def marc_lcc_to_broad_category(
         else TranslationMap(translation_map or "lcc_top_level")
     )
 
-    def macro(acc: Column, ctx=None) -> Column:
-        cands = extract_values(ctx, parsed, separator=None)
-        kept = F.filter(cands, lambda v: v.rlike(LCC_REGEX))
-        letters = F.transform(kept, lambda v: F.substring(F.ltrim(v), 1, 1))
-        mapped = F.array_distinct(tmap.translate_array_expr(letters))
-        out = F.concat(acc, mapped)
+    probe = tmap.sql_probe("v")
+
+    def sql(acc: str, ctx) -> str:
+        cands = extract_values_sql(ctx, parsed, separator=None)
+        kept = f"filter({cands}, v -> v RLIKE {_LCC_LIT})"
+        letters = f"transform({kept}, v -> substring(ltrim(v), 1, 1))"
+        if probe is not None:
+            mapped = (
+                f"filter(transform({letters}, v -> {probe}), "
+                "x -> x IS NOT NULL)"
+            )
+        else:
+            mapped = ctx.column_sql(
+                tmap.translate_array_expr(F.expr(letters))
+            )
+        out = f"concat({acc}, array_distinct({mapped}))"
         if default is not None:
-            out = F.when(F.size(out) == 0, F.array(F.lit(default))).otherwise(out)
+            fill = sql_value_of(default)
+            out = sql_let(
+                out, "d", f"CASE WHEN size(d) = 0 THEN array({fill}) ELSE d END"
+            )
         return out
 
-    return macro
+    return SqlMacro(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -692,7 +699,7 @@ _GEO_Z_DEFAULT = "600:610:611:630:648:650:654:655:656:690:651:691"
 def _geo_sql(marc_sql: str, probe_sql: str) -> str:
     """The DEFAULT-spec marc_geo_facet parts as ONE generated-SQL string
     (part1+part2+part3 concatenated; the caller wraps acc + distinct).
-    One F.expr instead of ~1000 Py4J round trips; values are pinned by
+    Text instead of ~1000 Py4J round trips; values are pinned by
     tests/data/macro_goldens.json. Each fragment mirrors a named Column
     helper:
 
@@ -764,7 +771,7 @@ def _geo_sql(marc_sql: str, probe_sql: str) -> str:
     )
     # marc.datafields = NULL (schema-legal in user parquet) nulls all
     # three parts; contribute nothing rather than wipe the accumulator
-    return f"coalesce(concat({part1}, {part2}, {part3}), {_SQL_EMPTY})"
+    return f"coalesce(concat({part1}, {part2}, {part3}), {SQL_EMPTY})"
 
 
 def marc_geo_facet(
@@ -808,15 +815,14 @@ def marc_geo_facet(
         else None
     )
 
-    def macro(acc: Column, ctx=None) -> Column:
-        # no lexer gate: the compiled SQL renders every regex/text
-        # literal via sql_str_lit, so it parses identically under both
-        # string-lexer modes (pinned by
-        # test_compiled_sql_texts_are_lexer_independent)
+    def sql(acc: str, ctx) -> str:
         if probe_sql is not None:
-            return F.array_distinct(
-                F.concat(acc, F.expr(_geo_sql(ctx.source_sql, probe_sql)))
-            )
+            parts = _geo_sql(ctx.source_sql, probe_sql)
+        else:
+            parts = ctx.column_sql(column_parts(ctx))
+        return f"array_distinct(concat({acc}, {parts}))"
+
+    def column_parts(ctx) -> Column:
         codes = marc_extract(ctx.marc, "043a", separator=None)
         part1 = F.flatten(
             F.filter(
@@ -832,9 +838,9 @@ def marc_geo_facet(
         a_vals = marc_extract(ctx.marc, a_parsed, separator=None)
         part2 = F.transform(a_vals, lambda s: _ruby_sub_first(s, r"\. *"))
         part3 = collect_matching_lines(ctx.marc, z_parsed, z_per_field)
-        return F.array_distinct(F.concat(acc, part1, part2, part3))
+        return F.concat(part1, part2, part3)
 
-    return macro
+    return SqlMacro(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -927,9 +933,9 @@ def _lcsh_sql(
     match = _sql_tag_match(tags)
     data = (
         f"flatten(transform(filter({marc_sql}.datafields, f -> {match}), "
-        f"f -> coalesce({per_field}, {_SQL_EMPTY})))"
+        f"f -> coalesce({per_field}, {SQL_EMPTY})))"
     )
-    return f"coalesce({data}, {_SQL_EMPTY})"
+    return f"coalesce({data}, {SQL_EMPTY})"
 
 
 def marc_lcsh_formatted(
@@ -981,21 +987,18 @@ def marc_lcsh_formatted(
         and len({s.tag for s in parsed}) == len(parsed)
     )
 
-    def macro(acc: Column, ctx=None) -> Column:
+    def sql(acc: str, ctx) -> str:
         if eligible:
-            return F.concat(
-                acc,
-                F.expr(
-                    _lcsh_sql(
-                        ctx.source_sql,
-                        [s.tag for s in parsed],
-                        subdivision_separator,
-                        other_separator,
-                    )
-                ),
+            headings = _lcsh_sql(
+                ctx.source_sql,
+                [s.tag for s in parsed],
+                subdivision_separator,
+                other_separator,
             )
-        return F.concat(
-            acc, collect_matching_lines(ctx.marc, parsed, per_field)
-        )
+        else:
+            headings = ctx.column_sql(
+                collect_matching_lines(ctx.marc, parsed, per_field)
+            )
+        return f"concat({acc}, {headings})"
 
-    return macro
+    return SqlMacro(sql)

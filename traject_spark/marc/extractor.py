@@ -36,7 +36,7 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from traject_spark.expr import let, let2
+from traject_spark.expr import SQL_EMPTY, let, let2
 from traject_spark.marc.serialize import CONTROL_TAGS
 from traject_spark.marc.spec import ALTERNATE_SCRIPT_TAG, MarcSpec, parse_marc_spec
 
@@ -318,7 +318,6 @@ def collect_matching_lines(
     )
 
 
-_SQL_EMPTY = "CAST(array() AS array<string>)"
 _SQL_FIRST6 = "get(filter(f.subfields, sf -> sf.code = '6'), 0).value"
 
 
@@ -347,7 +346,7 @@ def _sql_collect_subfields(spec, separator: Optional[str], fvar: str = "f") -> s
         pred = f"(sf.code IN ({codes})) AND (sf.value IS NOT NULL)"
     vals = (
         f"coalesce(transform(filter({fvar}.subfields, sf -> {pred}), "
-        f"sf -> sf.value), {_SQL_EMPTY})"
+        f"sf -> sf.value), {SQL_EMPTY})"
     )
     if separator is not None and spec.joinable:
         from traject_spark.expr import sql_let
@@ -355,7 +354,7 @@ def _sql_collect_subfields(spec, separator: Optional[str], fvar: str = "f") -> s
         body = (
             "CASE WHEN size(jv) > 0 THEN "
             f"array(array_join(jv, {sql_str_lit(separator)})) "
-            f"ELSE {_SQL_EMPTY} END"
+            f"ELSE {SQL_EMPTY} END"
         )
         vals = sql_let(vals, "jv", body)
     return vals
@@ -370,9 +369,9 @@ def _extract_sql(
     """:func:`marc_extract` as ONE generated-SQL string for the common
     shape — datafield-only specs, no indicator filters, no literal-880
     specs, alternate_script='include' (the default) — so the flagship
-    rules build in ~1 Py4J round trip instead of hundreds. Returns None
-    when the spec is outside that shape (:func:`extract_values` then
-    uses the Column builder). Values are pinned by
+    rules build without a Py4J round trip. Returns None when the spec
+    is outside that shape (:func:`extract_values_sql` then bridges the
+    Column builder). Values are pinned by
     tests/data/macro_goldens.json and the marc_* oracle rows."""
     if alternate_script not in ("include", True):
         return None
@@ -409,12 +408,12 @@ def _extract_sql(
 
     matches = [_sql_tag_match(tags) for tags, _ in groups]
     if len(groups) == 1:
-        per_field = f"coalesce({_sql_collect_subfields(groups[0][1], separator)}, {_SQL_EMPTY})"
+        per_field = f"coalesce({_sql_collect_subfields(groups[0][1], separator)}, {SQL_EMPTY})"
     else:
         parts = [
             f"CASE WHEN {m} THEN "
-            f"coalesce({_sql_collect_subfields(s, separator)}, {_SQL_EMPTY}) "
-            f"ELSE {_SQL_EMPTY} END"
+            f"coalesce({_sql_collect_subfields(s, separator)}, {SQL_EMPTY}) "
+            f"ELSE {SQL_EMPTY} END"
             for m, (tags, s) in zip(matches, groups)
         ]
         per_field = "concat(" + ", ".join(parts) + ")"
@@ -423,7 +422,7 @@ def _extract_sql(
         f"flatten(transform(filter({marc_sql}.datafields, "
         f"f -> {any_match}), f -> {per_field}))"
     )
-    return f"coalesce({data}, {_SQL_EMPTY})"
+    return f"coalesce({data}, {SQL_EMPTY})"
 
 
 def marc_extract(
@@ -447,19 +446,21 @@ def marc_extract(
     )
 
 
-def extract_values(
+def extract_values_sql(
     ctx,
     spec,
     separator: Optional[str] = " ",
     alternate_script: Union[str, bool] = "include",
-) -> Column:
-    """:func:`marc_extract` over a pipeline context's record column: the
-    generated SQL where :func:`_extract_sql` renders the spec, the Column
-    builder for the shapes it does not (control, byte, indicator and
-    880 specs, alternate_script False/'only')."""
+) -> str:
+    """:func:`marc_extract` over a pipeline context's record column, as
+    SQL text: the generated SQL where :func:`_extract_sql` renders the
+    spec, else the Column builder's result through the pipeline's
+    Column bridge (``ctx.column_sql``) for the shapes it does not
+    (control, byte, indicator and 880 specs, alternate_script
+    False/'only')."""
     sql = _extract_sql(ctx.source_sql, spec, separator, alternate_script)
     if sql is not None:
-        return F.expr(sql)
-    return marc_extract(
+        return sql
+    return ctx.column_sql(marc_extract(
         ctx.marc, spec, separator=separator, alternate_script=alternate_script
-    )
+    ))

@@ -2,12 +2,30 @@
 
 The reference interprets an ordered list of step objects per record on a
 thread pool (lib/traject/indexer.rb:348-355,531-619).  Here, the same DSL
-*compiles*: each ``to_field`` rule becomes one Column expression (macros
-composed over a fresh accumulator), the whole pipeline becomes ONE
-``select`` + optional ``filter`` — a single narrow stage with no shuffle,
-executed by Catalyst/Tungsten with whole-stage codegen.  Thread pools,
-bounded queues and backpressure (lib/traject/thread_pool.rb) disappear into
-Spark task parallelism.
+*compiles*: each ``to_field`` rule becomes one SQL expression (macros
+composed as text over a fresh accumulator), and ``apply`` issues ONE
+``selectExpr`` + optional ``filter`` — a single narrow stage with no
+shuffle, executed by Catalyst/Tungsten with whole-stage codegen.  Thread
+pools, bounded queues and backpressure (lib/traject/thread_pool.rb)
+disappear into Spark task parallelism.
+
+Composition is SQL text end to end, because every ``F.*`` call is a Py4J
+round trip: the glue (accumulator seed, contribution concat, add_output
+post-processing, the skip fold, the error coalesce) is text, and the
+built-in macros are :class:`~traject_spark.expr.SqlMacro` objects that
+take the accumulator as text and return text. Compiling the flagship
+makes no JVM call; ``apply`` makes a handful. ``to_sql`` shows the text.
+
+A macro that returns a Column — the public contract for user macros,
+``each_record``'s ``add_output``/``skip_when``, the rescued
+``transform_udf``, a built-in's fallback for a spec or map its SQL
+cannot take — goes through one bridge (``PipelineContext.column_sql``):
+it is handed ``F.expr(acc_text)``, its Column is projected as a hidden
+``__traject_*_N__`` column ahead of the filter and select, and the text
+continues from that column's name. Hidden columns that do not read each
+other share one projection. Catalyst folds a hidden column into the
+select when the select reads it once; one read several times (a
+``default``'s ``CASE``) stays its own projection and is computed once.
 
 Fidelity notes (SURVEY §4 traps):
 - output post-processing per add_output: drop nil values, omit empty
@@ -26,11 +44,9 @@ from typing import Callable, Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from traject_spark.expr import let
+from traject_spark.expr import SQL_EMPTY, SqlMacro, sql_let
 from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
-from traject_spark.sqlutil import ident_safe
-
-_EMPTY = "array<string>"
+from traject_spark.sqlutil import ident_safe, quote_ident, sql_ref, sql_str_lit
 
 #: plain name the record column is projected under when the user's
 #: column name (``my-marc``, nested ``rec.marc``) is not an identifier
@@ -38,13 +54,13 @@ _EMPTY = "array<string>"
 _SOURCE_ALIAS = "__traject_source__"
 
 
-def _concat_contributions(exprs: list) -> Column:
-    """Combine one field's per-step contributions.
+def _concat_contributions(exprs: list[str]) -> str:
+    """Combine one field's per-step contributions (SQL text).
 
     Each contribution is coalesced to the empty array first: a NULL
     contribution means "this step adds nothing" (the reference's
     add_output just skips nil values, context.rb:117-129) — but
-    F.concat over arrays returns NULL if ANY argument is NULL, so one
+    concat over arrays returns NULL if ANY argument is NULL, so one
     nullable Column handed to ctx.add_output would otherwise silently
     wipe every other step's values for the field.
     """
@@ -52,8 +68,9 @@ def _concat_contributions(exprs: list) -> Column:
         # single contribution: NULL already flows to the omit-if-empty
         # rule (field absent), same outcome as coalesce+concat
         return exprs[0]
-    empty = F.array().cast(_EMPTY)
-    return F.concat(*[F.coalesce(e, empty) for e in exprs])
+    return "concat(" + ", ".join(
+        f"coalesce({e}, {SQL_EMPTY})" for e in exprs
+    ) + ")"
 
 
 class PipelineContext:
@@ -81,8 +98,7 @@ class PipelineContext:
 
     @property
     def source_sql(self) -> str:
-        """The record column as SQL text, for macros that build their
-        expression as one generated-SQL string (``F.expr``)."""
+        """The record column as SQL text, for text macros."""
         name = self._pipeline.source_col
         if not ident_safe(name):
             raise ValueError(
@@ -102,28 +118,22 @@ class PipelineContext:
         doc/indexing_rules.md:210-257.)"""
         exprs = self._pipeline._field_exprs.get(name)
         if not exprs:
-            return F.array().cast(_EMPTY)
+            return F.expr(SQL_EMPTY)
         # add-time invariants only: the omit-if-empty rule ([] -> NULL)
         # is a write-time concern — a reader doing size()/exists() over
         # an empty field must see [], not NULL
-        out = F.coalesce(
-            _concat_contributions(exprs), F.array().cast(_EMPTY)
-        )
-        s = self._pipeline.settings_dict
-        if not s.get("allow_nil_values", False):
-            out = F.filter(out, lambda x: x.isNotNull())
-        if not s.get("allow_duplicate_values", True):
-            out = F.array_distinct(out)
-        return out
+        return F.expr(self._pipeline._add_time(
+            f"coalesce({_concat_contributions(exprs)}, {SQL_EMPTY})"
+        ))
 
     def add_output(self, name: str, values: Column) -> None:
         """each_record-style write to any output field
         (lib/traject/indexer/context.rb:117-129)."""
-        self._pipeline._add_field_expr(name, values)
+        self._pipeline._add_field_expr(name, self.column_sql(values, "out"))
 
     def skip_when(self, cond: Column) -> None:
         """context.skip! analog (lib/traject/indexer/context.rb:35-43)."""
-        self._pipeline._skip_conds.append(cond)
+        self._pipeline._skip_conds.append(self.column_sql(cond, "skip"))
 
     @property
     def rescue_mode(self) -> str:
@@ -133,32 +143,48 @@ class PipelineContext:
         the reference's ``context.skip!``-in-handler pattern)."""
         return str(self._pipeline.settings_dict.get("mapping_rescue", "halt"))
 
+    def column_sql(self, col: Column, hint: str = "bridge") -> str:
+        """The bridge from a Column to the pipeline's SQL text: ``col``
+        becomes a hidden column projected ahead of the filter and select,
+        and the returned text is its quoted name. A hidden column is
+        projected after every hidden column it reads, so ``col`` may
+        read any text handed out earlier in the compile (``F.expr`` of
+        an accumulator, ``output``)."""
+        return quote_ident(self._pipeline._hide(col, hint))
+
     def materialize(self, expr: Column, hint: str = "mat") -> Column:
         """Register ``expr`` to be computed ONCE as a hidden column before
         the pipeline's filters/select, returning a reference to it.
 
         This is how a rescued UDF avoids double evaluation: its
-        (value, error) struct lands in one ``withColumns`` projection and
-        both the error filter and the field projection reference the
-        materialized attribute instead of re-embedding the UDF call
-        (Catalyst's filter pushdown / projection collapse would otherwise
-        re-inline the expression into BOTH consumers)."""
-        name = f"__traject_{hint}_{len(self._pipeline._materialized)}__"
-        self._pipeline._materialized.append((name, expr))
+        (value, error) struct lands in one projection and both the error
+        filter and the field projection reference the materialized
+        attribute instead of re-embedding the UDF call (Catalyst's
+        filter pushdown / projection collapse would otherwise re-inline
+        the expression into BOTH consumers). Unlike a bridged column, a
+        materialized one makes ``apply_with_quarantine`` and
+        ``process_with`` checkpoint the hidden columns, so both of their
+        frames read one evaluation."""
+        name = self._pipeline._hide(expr, hint)
+        self._pipeline._materialized.append(name)
         return F.col(name)
 
     def record_error(self, err: Column) -> None:
         """Report a per-record error Column (null = ok) from a rescued
         step; the pipeline routes errored records per ``mapping_rescue``
         (indexer.rb:483-517 handle_mapping_errors)."""
+        e = self.column_sql(err, "error")
         if self.current_step:
-            err = F.when(
-                err.isNotNull(),
-                F.concat(
-                    err, F.lit(f" (while executing {self.current_step})")
-                ),
-            )
-        self._pipeline._error_exprs.append(err)
+            where = sql_str_lit(f" (while executing {self.current_step})")
+            e = f"CASE WHEN {e} IS NOT NULL THEN concat({e}, {where}) END"
+        self._pipeline._error_exprs.append(e)
+
+    def _apply_macro(self, macro, acc: str) -> str:
+        """One macro step over the accumulator text: a text macro
+        extends the text, a Column macro goes through the bridge."""
+        if isinstance(macro, SqlMacro):
+            return macro.sql(acc, self)
+        return self.column_sql(macro(F.expr(acc), self))
 
 
 class Pipeline:
@@ -181,11 +207,13 @@ class Pipeline:
         self.settings_dict.update(settings)
         self._steps: list = []
         self._after_processing: list[Callable] = []
-        # compile state
-        self._field_exprs: dict[str, list[Column]] = {}
-        self._skip_conds: list[Column] = []
-        self._error_exprs: list[Column] = []
-        self._materialized: list[tuple[str, Column]] = []
+        # compile state: SQL text per field contribution / skip
+        # predicate / error, and the hidden columns the text reads
+        self._field_exprs: dict[str, list[str]] = {}
+        self._skip_conds: list[str] = []
+        self._error_exprs: list[str] = []
+        self._hidden: list[tuple[str, Column]] = []
+        self._materialized: list[str] = []
 
     # -- DSL ---------------------------------------------------------------
     def settings(self, **kwargs) -> "Pipeline":
@@ -238,28 +266,40 @@ class Pipeline:
             fn()
 
     # -- compilation -------------------------------------------------------
-    def _add_field_expr(self, name: str, expr: Column) -> None:
+    def _add_field_expr(self, name: str, expr: str) -> None:
         self._field_exprs.setdefault(name, []).append(expr)
 
-    def _post_process(self, acc: Column) -> Column:
-        """add_output invariants (context.rb:117-129): drop nils, then
-        de-dup (when allow_duplicate_values=False), then omit-if-empty
-        (=> NULL column; writers drop nulls)."""
-        out = acc
+    def _hide(self, col: Column, hint: str) -> str:
+        """Register ``col`` as the next hidden column; names are
+        deterministic per compile, so a re-compile over a frame that
+        already carries them reuses them (apply_with_quarantine)."""
+        name = f"__traject_{hint}_{len(self._hidden)}__"
+        self._hidden.append((name, col))
+        return name
+
+    def _add_time(self, acc: str) -> str:
+        """The add-time invariants (context.rb:117-129): drop nils, then
+        de-dup when allow_duplicate_values=False."""
         if not self.settings_dict.get("allow_nil_values", False):
-            out = F.filter(out, lambda x: x.isNotNull())
+            acc = f"filter({acc}, x -> x IS NOT NULL)"
         if not self.settings_dict.get("allow_duplicate_values", True):
-            out = F.array_distinct(out)
+            acc = f"array_distinct({acc})"
+        return acc
+
+    def _post_process(self, acc: str) -> str:
+        """add_output invariants, then omit-if-empty (=> NULL column;
+        writers drop nulls)."""
+        out = self._add_time(acc)
         if not self.settings_dict.get("allow_empty_fields", False):
-            # let-bind: the naive when(size(out)>0, out) would copy the
-            # entire accumulated field expression twice
-            out = let(out, lambda o: F.when(F.size(o) > 0, o))
+            # let-bind: the naive CASE over out would copy the entire
+            # accumulated field expression twice
+            out = sql_let(out, "o", "CASE WHEN size(o) > 0 THEN o END")
         return out
 
-    def compile(self) -> tuple[list[tuple[str, Column]], Optional[Column]]:
+    def compile(self) -> tuple[list[tuple[str, str]], Optional[str]]:
         """Run every step once, building the field-expression table.
 
-        Returns ([(field_name, final Column)], skip_condition_or_None).
+        Returns ([(field_name, SQL text)], skip predicate text or None).
         Steps run in registration order, each macro exactly once.
         ``source_col`` must be a plain identifier here; ``apply`` sees
         to that for any record column.
@@ -267,15 +307,16 @@ class Pipeline:
         self._field_exprs = {}
         self._skip_conds = []
         self._error_exprs = []
+        self._hidden = []
         self._materialized = []
         ctx = PipelineContext(self)
         for step in self._steps:
             if step[0] == "to_field":
                 _, names, macros = step
                 ctx.current_step = f"to_field {names}"
-                acc = F.array().cast(_EMPTY)
+                acc = SQL_EMPTY
                 for macro in macros:
-                    acc = macro(acc, ctx)
+                    acc = ctx._apply_macro(macro, acc)
                 for n in names:
                     self._add_field_expr(n, acc)
             else:
@@ -283,20 +324,133 @@ class Pipeline:
                 ctx.current_step = "each_record"
                 fn(ctx)
 
-        fields = []
-        for name, exprs in self._field_exprs.items():
-            raw = _concat_contributions(exprs)
-            fields.append((name, self._post_process(raw).alias(name)))
-        return fields, self._skip_condition()
+        fields = [
+            (name, self._post_process(_concat_contributions(exprs)))
+            for name, exprs in self._field_exprs.items()
+        ]
+        return fields, self._skip_sql()
 
-    def _skip_condition(self) -> Optional[Column]:
+    def _skip_sql(self) -> Optional[str]:
         """OR-fold of the registered skip! predicates — ONE definition
-        (compile and process_with both need it; two inline folds had
-        already started to drift)."""
-        skip = None
-        for cond in self._skip_conds:
-            skip = cond if skip is None else (skip | cond)
-        return skip
+        (compile and process_with both need it)."""
+        return " OR ".join(f"({c})" for c in self._skip_conds) or None
+
+    def _error_sql(self) -> Optional[str]:
+        """The record's first rescued-step error (NULL = ok)."""
+        errs = self._error_exprs
+        if len(errs) > 1:
+            return "coalesce(" + ", ".join(errs) + ")"
+        return errs[0] if errs else None
+
+    def _sql_plan(
+        self,
+        df: Optional[DataFrame],
+        keep: Optional[Sequence[str]] = None,
+        keep_source: bool = False,
+    ) -> tuple[Optional[DataFrame], list[str], Optional[str]]:
+        """Compile against ``df`` (None: a frame carrying ``source_col``
+        and ``id_col``) and return (the frame to project, the
+        ``selectExpr`` list, the ``filter`` predicate or None)."""
+        prev_source = self.source_col
+        if df is None:
+            user_source, columns = self.source_col, [self.id_col]
+        else:
+            user_source = self._adapted_source(df)
+            # adapt PER CALL — restored afterwards so a later apply() on
+            # a frame that does carry the configured column is unaffected
+            df, self.source_col = self._with_plain_source(df)
+            columns = df.columns
+        try:
+            fields, skip = self.compile()
+        finally:
+            self.source_col = prev_source
+        select: list[str] = []
+        field_names = {n for n, _ in fields}
+        # a to_field named like the id column wins (the reference's
+        # document id IS output_hash['id'] when mapped): emitting both
+        # would duplicate the column name and break asDict()/writers
+        if (
+            self.id_col
+            and self.id_col in columns
+            and self.id_col not in field_names
+        ):
+            select.append(quote_ident(self.id_col))
+        select.extend(sql_ref(k) for k in keep or [])
+        if keep_source:
+            select.append(sql_ref(user_source))
+        select.extend(f"{e} AS {quote_ident(n)}" for n, e in fields)
+        conds = []
+        if skip is not None:
+            # skip! => record produces nothing (indexer.rb:591-595)
+            conds.append(f"NOT coalesce({skip}, false)")
+        err = self._error_sql()
+        if err is not None and self.settings_dict.get("mapping_rescue") == "skip":
+            # rescued-step errors quarantine the record out of the output
+            # (doc/settings.md:35-58 skip!-in-handler); use
+            # apply_with_quarantine to also capture the errored rows
+            conds.append(f"({err}) IS NULL")
+        where = " AND ".join(f"({c})" for c in conds) if conds else None
+        return df, select, where
+
+    def to_sql(
+        self,
+        df: Optional[DataFrame] = None,
+        keep: Optional[Sequence[str]] = None,
+        keep_source: bool = False,
+    ) -> tuple[list[str], Optional[str]]:
+        """The SQL ``apply`` issues: (the ``selectExpr`` list, the
+        ``filter`` predicate or None). Without ``df`` the text assumes
+        a frame that carries ``source_col`` and ``id_col``.
+
+        The text is self-contained when every macro is a text macro (the
+        built-ins over their SQL-eligible specs and maps). A Column
+        macro, ``add_output``/``skip_when`` or a rescued UDF makes it
+        read hidden ``__traject_*_N__`` columns that ``apply`` projects
+        first."""
+        _, select, where = self._sql_plan(df, keep, keep_source)
+        return select, where
+
+    def _with_hidden(
+        self, df: DataFrame, upto: Optional[int] = None
+    ) -> DataFrame:
+        """``df`` plus the compile's hidden columns (the first ``upto``).
+        Columns ALREADY on ``df`` are reused, not recomputed: this is
+        how apply_with_quarantine shares one evaluation between the good
+        and bad plans (it checkpoints them on a base frame).
+
+        The rest are added with one ``withColumns`` per dependency
+        level: a column that reads no other pending hidden column lands
+        in the first projection, one that reads a level-k column in
+        level k+1. A Column's unresolved text (one ``toString`` round
+        trip) names every column it reads, so the reads are found
+        there. Each projection is one analysis of the plan, so bridging
+        ten independent rules costs one, not ten."""
+        present = set(df.columns)
+        levels: list[dict[str, Column]] = []
+        level_of: dict[str, int] = {}
+        for name, col in self._hidden[:upto]:
+            if name in present:
+                continue
+            text = col._jc.toString()
+            lv = max((level_of[n] + 1 for n in level_of if n in text), default=0)
+            level_of[name] = lv
+            if lv == len(levels):
+                levels.append({})
+            levels[lv][name] = col
+        for group in levels:
+            df = df.withColumns(group)
+        return df
+
+    def _checkpoint_materialized(self, df: DataFrame) -> DataFrame:
+        """``df`` plus the hidden columns up to the last materialized
+        one, lazily checkpointed: a nondeterministic rescued UDF is
+        evaluated once on the first action and every frame built on the
+        result reads the persisted value. (Driver+executor storage holds
+        one copy of df + the structs; on a cluster with executor churn
+        prefer a reliable checkpoint dir upstream.)"""
+        names = [n for n, _ in self._hidden]
+        upto = names.index(self._materialized[-1]) + 1
+        return self._with_hidden(df, upto).localCheckpoint(eager=False)
 
     # -- execution ---------------------------------------------------------
     def apply(
@@ -306,57 +460,11 @@ class Pipeline:
         keep_source: bool = False,
     ) -> DataFrame:
         """Compile and apply: one narrow select (+ skip filter)."""
-        prev_source = self.source_col
-        user_source = self._adapted_source(df)
-        # adapt PER CALL — restored afterwards so a later apply() on a
-        # frame that does carry the configured column is unaffected
-        df, self.source_col = self._with_plain_source(df)
-        try:
-            fields, skip = self.compile()
-            cols: list[Column] = []
-            field_names = {n for n, _ in fields}
-            # a to_field named like the id column wins (the reference's
-            # document id IS output_hash['id'] when mapped): emitting
-            # both would duplicate the column name and break asDict()/
-            # writers downstream
-            if (
-                self.id_col
-                and self.id_col in df.columns
-                and self.id_col not in field_names
-            ):
-                cols.append(F.col(self.id_col))
-            for k in keep or []:
-                cols.append(F.col(k))
-            if keep_source:
-                cols.append(F.col(user_source))
-            cols.extend(expr for _, expr in fields)
-            out = df
-            if self._materialized:
-                # one projection computes every registered expression
-                # (rescued-UDF structs) exactly once; the hidden columns
-                # never appear in the final select below. Columns ALREADY
-                # present on df are reused, not recomputed — this is how
-                # apply_with_quarantine shares one evaluation between the
-                # good and bad plans (it pre-materializes them on a
-                # checkpointed base; names are deterministic per compile)
-                missing = {
-                    n: e for n, e in self._materialized
-                    if n not in df.columns
-                }
-                if missing:
-                    out = out.withColumns(missing)
-            if skip is not None:
-                # skip! => record produces nothing (indexer.rb:591-595)
-                out = out.filter(~F.coalesce(skip, F.lit(False)))
-            err = self._error_col()
-            if err is not None and self.settings_dict.get("mapping_rescue") == "skip":
-                # rescued-step errors quarantine the record out of the output
-                # (doc/settings.md:35-58 skip!-in-handler); use
-                # apply_with_quarantine to also capture the errored rows
-                out = out.filter(err.isNull())
-            return out.select(*cols)
-        finally:
-            self.source_col = prev_source
+        df, select, where = self._sql_plan(df, keep, keep_source)
+        out = self._with_hidden(df)
+        if where is not None:
+            out = out.filter(where)
+        return out.selectExpr(*select)
 
     process = apply  # reference naming (indexer.rb:531)
 
@@ -380,14 +488,6 @@ class Pipeline:
         if ident_safe(src):
             return df, src
         return df.withColumn(_SOURCE_ALIAS, F.col(src)), _SOURCE_ALIAS
-
-    def _error_col(self) -> Optional[Column]:
-        if not self._error_exprs:
-            return None
-        e = self._error_exprs[0]
-        for nxt in self._error_exprs[1:]:
-            e = F.coalesce(e, nxt)
-        return e
 
     def apply_with_quarantine(
         self,
@@ -422,41 +522,24 @@ class Pipeline:
             # shared materialization, a nondeterministic rescued UDF
             # (e.g. a transiently-failing network call) could error in
             # the good-plan run yet succeed in the bad-plan run — the
-            # record vanishing from BOTH frames. A lazy local checkpoint
-            # of the hidden columns evaluates the UDFs once on the first
-            # action and both frames read the persisted result. (Driver+
-            # executor storage holds one copy of df + the structs; on a
-            # cluster with executor churn prefer a reliable checkpoint
-            # dir upstream.)
-            base = df.withColumns(
-                dict(self._materialized)
-            ).localCheckpoint(eager=False)
-            good = self.apply(base, keep=keep)
-            df = base
-        err = self._error_col()
+            # record vanishing from BOTH frames
+            df = self._checkpoint_materialized(df)
+            good = self.apply(df, keep=keep)
+        err = self._error_sql()
         # one quarantine schema for BOTH paths (zero registered error
         # exprs vs some): id col (when configured and present) + keep
         # cols + _error + source — so unions/writers downstream see a
         # stable shape, and id_col=None never aliases a None name
-        cols: list[Column] = []
+        cols: list[str] = []
         if self.id_col and self.id_col in df.columns:
-            cols.append(F.col(self.id_col))
-        for k in keep or []:
-            cols.append(F.col(k))
-        cols.append(
-            (err if err is not None else F.lit(None).cast("string"))
-            .alias("_error")
+            cols.append(quote_ident(self.id_col))
+        cols.extend(sql_ref(k) for k in keep or [])
+        cols.append(f"{err or 'CAST(NULL AS string)'} AS _error")
+        cols.append(sql_ref(user_source))
+        bad = (
+            self._with_hidden(df).selectExpr(*cols)
+            .filter("_error IS NOT NULL")
         )
-        cols.append(F.col(user_source))
-        # missing-only: when df is the checkpointed base from above, the
-        # hidden columns are already present and must be REUSED (a plain
-        # withColumns would overwrite them with the expressions and
-        # re-evaluate the UDFs, defeating the shared checkpoint)
-        missing = {
-            n: e for n, e in self._materialized if n not in df.columns
-        }
-        base = df.withColumns(missing) if missing else df
-        bad = base.select(*cols).filter(F.col("_error").isNotNull())
         if return_base:
             return good, bad, df
         return good, bad
@@ -505,20 +588,18 @@ class Pipeline:
                     # mechanism): recomputing them per frame could land
                     # a record in none/two of the frames when a UDF
                     # fails transiently
-                    base = base.withColumns(
-                        dict(self._materialized)
-                    ).localCheckpoint(eager=False)
+                    base = self._checkpoint_materialized(base)
                     good = self.apply(base)
             if on_skipped is not None:
-                skip = self._skip_condition()
-                # skip predicates compiled under rescue mode may
-                # reference the materialized hidden columns — base
-                # carries them (checkpointed, so this is the SAME
-                # evaluation the good/bad frames read); the callback
+                skip = self._skip_sql()
+                # skip predicates read hidden columns — base carries the
+                # checkpointed ones (the SAME evaluation the good/bad
+                # frames read) and gets the rest here; the callback
                 # gets the ORIGINAL input shape back
                 if skip is not None:
                     on_skipped(
-                        base.filter(F.coalesce(skip, F.lit(False)))
+                        self._with_hidden(base)
+                        .filter(f"coalesce({skip}, false)")
                         .select(*df.columns)
                     )
                 else:

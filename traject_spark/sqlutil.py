@@ -34,7 +34,10 @@ from __future__ import annotations
 import re as _re
 import weakref
 
-__all__ = ["sql_str_lit", "ident_safe", "sql_ref", "SessionFunction"]
+__all__ = [
+    "sql_str_lit", "sql_value_of", "sql_string_of", "ident_safe",
+    "quote_ident", "sql_ref", "SessionFunction",
+]
 
 
 def ident_safe(name: str) -> bool:
@@ -45,6 +48,13 @@ def ident_safe(name: str) -> bool:
     anything beyond ``[A-Za-z_][A-Za-z0-9_]*`` must take the generic
     path (callers fall back to ``F.col(name)``)."""
     return bool(_re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name))
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as ONE backtick-quoted SQL identifier (backticks inside
+    doubled): the text for a top-level column or an ``AS`` alias of any
+    name, dots and spaces included."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def sql_ref(name: str) -> str:
@@ -113,34 +123,49 @@ def sql_str_lit(s: str) -> str:
     The result is always a foldable scalar expression — valid wherever
     a literal operand is.
     """
-    if s == "":
-        return "''"
     if "\\" not in s and "'" not in s:
         return "'" + s + "'"
-    # split into maximal runs free of both troublemakers, splice the
-    # offenders back in via chr() (a double quote is literal inside a
+    # maximal runs free of both troublemakers, with the offenders
+    # spliced back in via chr() (a double quote is literal inside a
     # single-quoted literal under every knob — no special case)
-    pieces: list[str] = []
-    run: list[str] = []
-
-    def flush() -> None:
-        if run:  # runs are free of quotes and backslashes by split
-            pieces.append("'" + "".join(run) + "'")
-            run.clear()
-
-    for ch in s:
-        if ch == "\\":
-            flush()
-            pieces.append("chr(92)")
-        elif ch == "'":
-            flush()
-            pieces.append("chr(39)")
-        else:
-            run.append(ch)
-    flush()
-    if len(pieces) == 1 and not pieces[0].startswith("chr("):
-        return pieces[0]
+    pieces = [
+        _CHR.get(p) or "'" + p + "'" for p in _OFFENDERS.split(s) if p
+    ]
     return "concat(" + ", ".join(pieces) + ")"
+
+
+_OFFENDERS = _re.compile(r"(['\\])")
+_CHR = {"'": "chr(39)", "\\": "chr(92)"}
+
+
+def sql_value_of(value) -> str:
+    """``value`` as the SQL literal ``F.lit(value)`` builds: None a NULL
+    string, a bool, an int (INT, BIGINT past 32 bits), a float a DOUBLE
+    parsed from its shortest round-trip ``repr`` (NaN and the infinities
+    included), a str through :func:`sql_str_lit`. Other types are
+    refused."""
+    if value is None:
+        return "CAST(NULL AS string)"
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, str):
+        return sql_str_lit(value)
+    if isinstance(value, int):
+        return int.__repr__(value)
+    if isinstance(value, float):
+        return f"CAST('{float.__repr__(value)}' AS double)"
+    raise TypeError(
+        f"expected a str, int, float, bool or None value, got {value!r}"
+    )
+
+
+def sql_string_of(value) -> str:
+    """``value`` as the SQL string ``lit(value).cast('string')`` gives:
+    Spark renders it (``1.0E-4`` for 0.0001, ``true`` for True)."""
+    text = sql_value_of(value)
+    if value is None or isinstance(value, str):
+        return text
+    return f"CAST({text} AS string)"
 
 
 def default_lexer_active() -> bool:

@@ -723,14 +723,10 @@ class TranslationMap:
         return out
 
     def _encodable(self, norm: dict) -> bool:
-        seps = (_SEP_ENTRY, _SEP_KV, _SEP_VAL)
-        for k, v in norm.items():
-            if any(s in str(k) for s in seps):
-                return False
-            for x in v or []:
-                if any(s in x for s in seps):
-                    return False
-        return True
+        text = "".join(str(k) for k in norm) + "".join(
+            x for v in norm.values() for x in v or []
+        )
+        return not any(s in text for s in (_SEP_ENTRY, _SEP_KV, _SEP_VAL))
 
     def _hit_expr(self, norm: dict, value: Column) -> Optional[Column]:
         """Probe the dict for ``value`` -> array<string> (null on miss).
@@ -904,24 +900,20 @@ class TranslationMap:
         ).otherwise(result)
 
     def sql_probe(self, value_sql: str) -> Optional[str]:
-        """SQL-string twin of the sharded map probe for SIMPLE maps, or
-        None when the map shape needs the general Column path.
+        """SQL text probing this map for the STRING at ``value_sql``
+        (NULL on a miss), or None when the map shape needs the general
+        Column path — the text macros' translation step, no Py4J round
+        trip at any map size.
 
-        The Column builder issues ~30 shard ``str_to_map`` calls plus
-        probe/split/slice plumbing — hundreds of Py4J round trips per
-        compile; this renders the identical two-level dispatch as ONE
-        SQL string for ``F.expr`` (the r9 ANN fast-path pattern), which
-        is one round trip regardless of map size. Eligible shape: no
-        default, no nil (suppression) keys, every value a single string
-        (e.g. the 8k-entry marc_languages map), encodable (no C0
-        separator collisions, checked by the same ``_encodable`` rule
-        as the Column path). Single-valued maps probe straight to the
-        STRING — no per-value array encode/split/slice — so the row
-        cost drops too, not just the build cost.
-
-        ``value_sql`` is spliced in twice (shard select + in-shard
-        probe): pass a LEAF expression (a lambda variable), never a
-        computed subtree.
+        Eligible shape: no default, no nil (suppression) keys, every
+        value a single string (e.g. the 8k-entry marc_languages map),
+        encodable (no C0 separator collisions, checked by the same
+        ``_encodable`` rule as the Column path). Maps of up to
+        ``LITERAL_MAP_MAX`` entries probe one literal ``map(...)``, like
+        the Column path's string fast shape; larger ones take its
+        two-level shard dispatch (``_string_shards``), which splices
+        ``value_sql`` in twice (shard select + in-shard probe): pass a
+        LEAF expression (a lambda variable), never a computed subtree.
         """
         norm = self._as_array_dict()
         if self._default is not None:
@@ -939,12 +931,15 @@ class TranslationMap:
         # sql_str_lit (which also makes backslash-bearing maps eligible)
         from traject_spark.sqlutil import sql_str_lit as q
 
+        present = {k: v[0] for k, v in norm.items()}
+        if len(self._map) <= LITERAL_MAP_MAX:
+            # small maps: one literal map, like the Column path's hit_of
+            entries = ", ".join(f"{q(k)}, {q(v)}" for k, v in present.items())
+            return f"try_element_at(map({entries}), {value_sql})"
         outer = []
         # SAME shard+encode as the Column-path string fast shape
         # (_string_shards, one definition); this path only adds quoting
-        for p, encoded in _string_shards(
-            {k: v[0] for k, v in norm.items()}
-        ):
+        for p, encoded in _string_shards(present):
             outer.append(
                 f"{q(p)}, str_to_map({q(encoded)}, "
                 f"'{_SEP_ENTRY}', '{_SEP_KV}')"
