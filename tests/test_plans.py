@@ -125,35 +125,35 @@ def test_pruning_and_pushdown_reach_the_scan(spark):
 
 
 def test_flagship_compile_build_cost_regression(spark):
-    """Driver-side expression BUILD rivals execution for the flagship;
-    a build regression — someone un-SQLing a generated-SQL fast path —
-    is invisible in end-to-end wall time until it eats the B1 gate.
-    Floor after the r11 formats/geo generated-SQL paths: ~1.0s warm /
-    ~1.9s cold on this box; min-of-3 must stay under ~2x the cold
-    floor (the min absorbs this box's documented multi-second host
-    stalls)."""
+    """Driver-side build of the flagship: a warm ``apply`` on an empty
+    ``MARC_SOURCE_SCHEMA`` frame compiles the pipeline to SQL text and
+    has Spark parse and analyze the one projection. It measured
+    0.39-0.52 s min-of-3 warm on a 4-core host; the bound is about 3x
+    that. (``compile()`` alone is ~15 ms of pure Python, so bounding it
+    could not catch a build regression.) The min absorbs host stalls;
+    one settle-and-retry keeps a slow window from failing the run,
+    while a real regression fails both attempts."""
     import time
 
     from __spark_entry__ import flagship_pipeline
+    from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
 
-    # VERDICT r11 #2: the stamp reads ~1.1s at sf0.1; a bound of 4.0
-    # would let a 3x driver-side regression ship green. One settle-and-
-    # retry (r13): a full-suite run on a degraded window pushed min-of-3
-    # past the bound once (whole suite 1.6x slow) — a REAL regression
-    # fails both attempts, box noise doesn't abort the driver's -x run.
+    bound = 1.2
+    df = spark.createDataFrame([], MARC_SOURCE_SCHEMA)
+    flagship_pipeline().apply(df)  # warm: session functions, JIT
     attempts = []
     for attempt in range(2):
         builds = []
         for _ in range(3):
             t0 = time.monotonic()
-            fields, _skip = flagship_pipeline().compile()
+            out = flagship_pipeline().apply(df)
             builds.append(time.monotonic() - t0)
-        assert fields
+        assert len(out.columns) == 13
         attempts.append(builds)
-        if min(builds) < 2.0:
+        if min(builds) < bound:
             break
         time.sleep(5)
-    assert min(min(b) for b in attempts) < 2.0, attempts
+    assert min(min(b) for b in attempts) < bound, attempts
 
 
 def test_marc8_ingest_plan_is_narrow(spark, tmp_path):

@@ -21,22 +21,20 @@ store many moderate files — or convert once to parquet of the nested
 struct (the preferred long-term layout: nested-schema pruning at the
 scan; ``traject-spark convert``).
 
-All three parse inside ``mapInArrow`` — Arrow-batched column transfer
-into Python and back, no per-row pickling (the row-at-a-time
-``rdd.mapPartitions`` shape this replaced serializes every record twice
-through the Python pickler and was the first ingest bottleneck at scale).
-The OUTPUT side builds ``pyarrow.RecordBatch`` objects directly
-(``_marc_batches``): the previous ``mapInPandas`` emission paid Spark's
-pandas-Series-to-Arrow conversion on the nested struct column, measured
-at ~2x the whole remaining lane cost on the 600k-record NDJSON bench
-(isolated A/B, history/OPTIMIZATION_r15.md: mapInPandas 4.55s vs direct
-RecordBatches 2.41s min) — ``pa.array(list_of_dicts, type=struct)`` is
-one C-path conversion, per guide §4.1/§4.2 (r15 optimization round).
+All three parse inside ``mapInArrow``: Arrow batches in, Arrow batches
+out, no per-row pickling. The XML and marc-in-json readers build one
+record dict per record and convert each bounded batch of dicts with one
+``pa.array(..., type=struct)`` call (``_marc_batches``). The ISO 2709
+reader builds no dicts: its parser (``serialize.Iso2709Columns``)
+appends ids, leaders, list offsets and the tag, indicator, code and
+value strings to flat column buffers, and ``_iso2709_batch`` nests them
+with ``ListArray.from_arrays`` / ``StructArray.from_arrays``.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,10 +42,14 @@ from pyspark.sql import DataFrame, SparkSession
 from traject_spark.marc.schema import MARC_SOURCE_SCHEMA
 from traject_spark.marc.serialize import (
     CONTROL_TAGS,
-    from_iso2709,
+    Iso2709Columns,
     from_marc_in_json,
     split_iso2709_stream,
 )
+
+#: driver-side warnings (a large file that one task must read whole) and
+#: the executor-side skip of a malformed MARCXML file
+_log = logging.getLogger(__name__)
 
 
 def _id_from(rec: dict, id_tag: str) -> Optional[str]:
@@ -62,38 +64,105 @@ def _id_from(rec: dict, id_tag: str) -> Optional[str]:
 _MARC_ARROW_TYPE = None
 
 
-def _marc_batches(rows: Iterator) -> Iterator:
-    """(record_id, marc_dict) iterator -> bounded pyarrow RecordBatches.
-
-    The shared OUTPUT path of every MARC reader (r15): builds the
-    (record_id, marc) batches directly with ``pa.array(..., type=...)``
-    instead of routing Python dicts through a pandas object column —
-    Spark's pandas→Arrow conversion of a nested struct Series was ~2x
-    the cost of the entire remaining lane (see module docstring; A/B in
-    history/OPTIMIZATION_r15.md). Batch bounding (rows per batch) and the
-    yield-nothing-for-empty-input policy are unchanged — both come from
-    ``batched_rows``.
-    """
-    import pyarrow as pa
-
-    from traject_spark.arrowutil import batched_rows
-
+def _marc_arrow_type():
     global _MARC_ARROW_TYPE
     if _MARC_ARROW_TYPE is None:
         from pyspark.sql.pandas.types import to_arrow_type
 
         _MARC_ARROW_TYPE = to_arrow_type(MARC_SOURCE_SCHEMA["marc"].dataType)
+    return _MARC_ARROW_TYPE
+
+
+def _marc_batches(rows: Iterator) -> Iterator:
+    """(record_id, marc_dict) iterator -> bounded pyarrow RecordBatches:
+    the output path of the MARCXML and marc-in-json readers.
+
+    ``pa.array(list_of_dicts, type=struct)`` converts the dicts in one C
+    pass; routing them through a pandas object column instead made
+    Spark's pandas-to-Arrow conversion of the nested struct the largest
+    cost of the read. Batch bounding (rows per batch) and the
+    yield-nothing-for-empty-input policy come from ``batched_rows``.
+    The ISO 2709 reader builds no dicts: it parses straight into Arrow
+    columns (:func:`_iso2709_batches`).
+    """
+    import pyarrow as pa
+
+    from traject_spark.arrowutil import batched_rows
+
+    marc_type = _marc_arrow_type()
 
     def to_batch(buf):
         return pa.RecordBatch.from_arrays(
             [
                 pa.array([r[0] for r in buf], type=pa.string()),
-                pa.array([r[1] for r in buf], type=_MARC_ARROW_TYPE),
+                pa.array([r[1] for r in buf], type=marc_type),
             ],
             names=["record_id", "marc"],
         )
 
     return batched_rows(rows, to_batch)
+
+
+def _iso2709_batch(cols: Iso2709Columns):
+    """The parser's column buffers -> one RecordBatch of
+    MARC_SOURCE_SCHEMA: string columns converted in C, nested with
+    offsets (``ListArray.from_arrays``) and ``StructArray.from_arrays``."""
+    import pyarrow as pa
+
+    marc_type = _marc_arrow_type()
+    cf_type = marc_type.field("controlfields").type
+    df_type = marc_type.field("datafields").type
+    sf_type = df_type.value_type.field("subfields").type
+
+    def strings(xs):
+        return pa.array(xs, type=pa.string())
+
+    def lists(list_type, offsets, columns):
+        items = pa.StructArray.from_arrays(
+            columns, fields=list(list_type.value_type)
+        )
+        return pa.ListArray.from_arrays(
+            pa.array(offsets, type=pa.int32()), items, type=list_type
+        )
+
+    subfields = lists(
+        sf_type, cols.sf_offsets, [strings(cols.sf_codes), strings(cols.sf_values)]
+    )
+    datafields = lists(
+        df_type,
+        cols.df_offsets,
+        [
+            strings(cols.df_tags),
+            strings(cols.df_ind1),
+            strings(cols.df_ind2),
+            subfields,
+        ],
+    )
+    controlfields = lists(
+        cf_type, cols.cf_offsets, [strings(cols.cf_tags), strings(cols.cf_values)]
+    )
+    marc = pa.StructArray.from_arrays(
+        [strings(cols.leaders), controlfields, datafields],
+        fields=list(marc_type),
+    )
+    return pa.RecordBatch.from_arrays(
+        [strings(cols.ids), marc], names=["record_id", "marc"]
+    )
+
+
+def _iso2709_batches(raws, encoding: str, id_tag: str) -> Iterator:
+    """ISO 2709 record bytes -> RecordBatches of at most
+    ``DEFAULT_CHUNK_ROWS`` records (none for an input with no record),
+    so task memory stays flat however large the input files are."""
+    from traject_spark.arrowutil import DEFAULT_CHUNK_ROWS
+
+    cols = Iso2709Columns(encoding, id_tag)
+    for raw in raws:
+        if cols.add(raw) and len(cols) >= DEFAULT_CHUNK_ROWS:
+            yield _iso2709_batch(cols)
+            cols.clear()
+    if len(cols):
+        yield _iso2709_batch(cols)
 
 
 def read_marc_json(
@@ -467,51 +536,55 @@ def read_iso2709(
     """Binary MARC via the binaryFile source + per-file stream split
     (marc_reader.rb binary branch :78-80).
 
-    Large-file splitting (r13 verdict #7): binaryFile is one-task-per-
-    file, so at 100 TB a single 10 GB .mrc would serialize on one core.
-    Files larger than ``split_bytes`` on locally-openable storage
-    (file: scheme — local disk or a POSIX-mounted shared FS) are
-    instead read as parallel BYTE RANGES: each task seeks to its range,
-    resyncs on the 0x1D record terminator (a record is owned by the
-    range containing its first byte), and reads up to
-    ``ISO2709_MAX_RECORD`` + slack past its end to complete a
-    straddling record — the same boundary discipline Hadoop text splits
-    use for newlines, valid here because conformant records are bounded
-    by the 5-digit length field. Non-local large files fall back to
-    whole-file with a loud stderr warning naming the file and the
-    ~50k-records/file sizing discipline (TESTDATA fixtures follow it).
-    The file listing is os-side for local specs (zero Spark jobs; a
-    metadata-only binaryFile job only for remote schemes), and when
-    nothing exceeds the threshold the plan is exactly the r12 narrow
-    whole-file plan — an interleaved A/B on the 600k bench lane read
-    1.04x, within window noise. Measured payoff (local[32]): one
-    160 MB / 425k-record file reads 3.1x faster at 16 MB ranges than
-    whole-file (5.6s vs 17.5s), and under a 1 GiB heap the whole-file
-    read OOMs outright where ranges stream. At 2 GB (5.4M records,
-    zero boundary dupes/drops verified by countDistinct) the
-    whole-file path is not merely slow but PATHOLOGICAL — binaryFile
-    caps content at Int.MaxValue and the single-row Arrow transfer to
-    Python strangles in buffer growth near the 2 GiB batch limit —
-    while ranges read it in 62s at the 128 MB default granularity
-    (``range_bytes``; 221s at 512 MB ranges — the trigger and the
-    granularity are separate decisions)."""
+    Parsing: each task splits its bytes on the 0x1D record terminator
+    and hands every record to one parser, ``serialize.Iso2709Columns``
+    (the same one :func:`~traject_spark.marc.serialize.from_iso2709`
+    wraps). It appends straight into Arrow column buffers and yields
+    bounded RecordBatches (``_iso2709_batches``), so no record becomes
+    a Python dict. ``encoding`` is a Python codec name or 'MARC-8' /
+    'MARC-8-preserve'; a printable-ASCII datafield is decoded once and
+    split, and MARC-8 values without an escape take a table lookup (see
+    ``marc.marc8``). Records without a usable leader are skipped, and a
+    bad directory entry skips its field. On a 4-core host, the 12,000
+    MARC-8 records of the ``marc8_index_ndjson`` benchmark (16 files)
+    read to a noop sink in 0.77-0.85 s with 1.8-1.9 Python CPU-s; the
+    per-record dict parser before it took 1.00-1.17 s and 2.7-3.0
+    Python CPU-s. About 0.23 CPU-s of each Python task is PySpark's
+    own ``importlib.invalidate_caches()`` (CHANGES.md).
+
+    Large files: binaryFile is one task per file, so a single 10 GB
+    .mrc would serialize on one core. Files larger than ``split_bytes``
+    on locally-openable storage (file: scheme — local disk or a
+    POSIX-mounted shared FS) are instead read as parallel BYTE RANGES
+    of ``range_bytes``: each task seeks to its range, resyncs on the
+    0x1D record terminator (a record is owned by the range containing
+    its first byte), and reads up to ``ISO2709_MAX_RECORD`` + slack
+    past its end to complete a straddling record — the same boundary
+    discipline Hadoop text splits use for newlines, valid here because
+    conformant records are bounded by the 5-digit length field. Ranges
+    feed the same parser. Non-local large files are read whole, with a
+    warning on the ``traject_spark.marc.io`` logger naming the file and
+    the ~50k-records/file sizing discipline: above ~2 GiB the
+    whole-file read fails outright (binaryFile caps content at
+    Int.MaxValue). The file listing is os-side for local specs (zero
+    Spark jobs; a metadata-only binaryFile job only for remote
+    schemes), and when nothing exceeds the threshold the plan is the
+    plain whole-file plan."""
     import urllib.parse as _up
 
     meta = _list_input_sizes(spark, paths)
     ranges, _ = _iso2709_split_ranges(meta, split_bytes, range_bytes)
     for path, length in meta:
         if length > split_bytes and not path.startswith("file:"):
-            import sys as _sys
-
-            print(
-                f"read_iso2709: {path} is {length / (1 << 30):.1f} GiB on "
-                "non-local storage — one task must stream it whole "
-                "(byte-range splitting needs a locally-openable path), "
-                "and above ~2 GiB the whole-file read FAILS outright "
-                "(binaryFile content caps at Int.MaxValue). For parallel "
-                "ingest store many moderate files (~50k records each) or "
-                "copy to a POSIX mount.",
-                file=_sys.stderr,
+            _log.warning(
+                "read_iso2709: %s is %.1f GiB on non-local storage — one "
+                "task must stream it whole (byte-range splitting needs a "
+                "locally-openable path), and above ~2 GiB the whole-file "
+                "read FAILS outright (binaryFile content caps at "
+                "Int.MaxValue). For parallel ingest store many moderate "
+                "files (~50k records each) or copy to a POSIX mount.",
+                path,
+                length / (1 << 30),
             )
 
     if ranges:
@@ -546,23 +619,17 @@ def read_iso2709(
     if files is not None:
         files = files.select("content")
 
-    # bounded output batches (r12): one yield per FILE made the Arrow
-    # conversion superlinear — a 110 MB file is ~190k nested record
-    # dicts materialized as one giant pandas batch before serialization
-    # (the sf1 soak read 17x time for 10x data). batched_rows keeps
-    # per-task memory flat no matter how large the input files are —
-    # the property that matters at 100 TB, where file sizes are not
-    # under our control.
     def parse(batches: Iterator) -> Iterator:
-        def rows():
-            for batch in batches:
-                for content in batch.column(0).to_pylist():
-                    for raw in split_iso2709_stream(content):
-                        rec = from_iso2709(raw, encoding)
-                        if rec is not None:
-                            yield (_id_from(rec, id_tag), rec)
-
-        yield from _marc_batches(rows())
+        yield from _iso2709_batches(
+            (
+                raw
+                for batch in batches
+                for content in batch.column(0).to_pylist()
+                for raw in split_iso2709_stream(content)
+            ),
+            encoding,
+            id_tag,
+        )
 
     whole = (
         files.mapInArrow(parse, MARC_SOURCE_SCHEMA)
@@ -582,7 +649,7 @@ def read_iso2709(
         # the same per-record degradation posture as the whole-file path
         overrun = ISO2709_MAX_RECORD + (1 << 20)
 
-        def range_rows(path, start, end, file_len):
+        def range_records(path, start, end, file_len):
             local = _up.unquote(_up.urlsplit(path).path)
             with open(local, "rb") as fh:
                 rs = max(0, start - 1)
@@ -608,31 +675,27 @@ def read_iso2709(
                     if last_range:
                         seg = buf[cur:]
                         if seg.strip(b"\x00\r\n "):
-                            rec = from_iso2709(
-                                seg.lstrip(b"\x00\r\n ") + RT, encoding
-                            )
-                            if rec is not None:
-                                yield (_id_from(rec, id_tag), rec)
+                            yield seg.lstrip(b"\x00\r\n ") + RT
                     return
                 seg = buf[cur : nxt + 1]
                 if seg[:-1].strip(b"\x00\r\n "):
-                    rec = from_iso2709(
-                        seg.lstrip(b"\x00\r\n "), encoding
-                    )
-                    if rec is not None:
-                        yield (_id_from(rec, id_tag), rec)
+                    yield seg.lstrip(b"\x00\r\n ")
                 cur = nxt + 1
 
-        def rows():
-            for batch in batches:
+        yield from _iso2709_batches(
+            (
+                raw
+                for batch in batches
                 for path, start, end, file_len in zip(
                     *(batch.column(i).to_pylist() for i in range(4))
-                ):
-                    yield from range_rows(
-                        path, int(start), int(end), int(file_len)
-                    )
-
-        yield from _marc_batches(rows())
+                )
+                for raw in range_records(
+                    path, int(start), int(end), int(file_len)
+                )
+            ),
+            encoding,
+            id_tag,
+        )
 
     range_df = spark.createDataFrame(
         ranges, "path string, start long, end long, file_len long"
@@ -998,17 +1061,16 @@ def read_marcxml(
         meta = _list_input_sizes(spark, paths)
         ranges, warns = _marcxml_split_plan(meta, split_bytes, range_bytes)
         for wpath, wlen, reason in warns:
-            import sys as _sys
-
-            print(
-                f"read_marcxml: {wpath} is {wlen / (1 << 30):.1f} GiB — "
-                f"cannot byte-range split: {reason}. One task must "
-                "stream it whole, and above ~2 GiB raw the read FAILS "
-                "outright (binaryFile content caps at Int.MaxValue). "
-                "For parallel ingest store many moderate files "
-                "(~50k records each), or decompress/copy to a POSIX "
+            _log.warning(
+                "read_marcxml: %s is %.1f GiB — cannot byte-range split: "
+                "%s. One task must stream it whole, and above ~2 GiB raw "
+                "the read FAILS outright (binaryFile content caps at "
+                "Int.MaxValue). For parallel ingest store many moderate "
+                "files (~50k records each), or decompress/copy to a POSIX "
                 "mount so splitting applies.",
-                file=_sys.stderr,
+                wpath,
+                wlen / (1 << 30),
+                reason,
             )
     else:
         meta, ranges = [], []
@@ -1044,7 +1106,6 @@ def read_marcxml(
         import gzip as _gzip
         import io as _io
         import lzma as _lzma
-        import sys as _sys
         import xml.etree.ElementTree as _ET
         import zlib as _zlib
 
@@ -1093,11 +1154,12 @@ def read_marcxml(
                             ) from e
                         if skipped_files is not None:
                             skipped_files.add(1)
-                        print(
-                            f"read_marcxml: malformed XML input "
-                            f"({e}; {len(raw)} bytes); kept records "
-                            "parsed before the error, skipping the rest",
-                            file=_sys.stderr,
+                        _log.warning(
+                            "read_marcxml: malformed XML input (%s; %d "
+                            "bytes); kept records parsed before the "
+                            "error, skipping the rest",
+                            e,
+                            len(raw),
                         )
                         continue
 

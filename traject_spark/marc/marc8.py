@@ -39,14 +39,16 @@ The encoder (``unicode_to_marc8``) covers the same bundled tables via
 NFD decomposition — enough to synthesize MARC-8 fixtures from UTF-8
 records and to round-trip everything the decoder maps.
 
-Throughput: pure-printable-ASCII values (the overwhelming share of
-real MARC-8 fields) take a one-probe fast path; the state machine
-measures ~21k rec/s single-threaded on a worst-case all-diacritic
-record (~660k rec/s across 32 executor threads) — decode runs inside
-the Arrow-batched binary parse, never the hot mapping path. Measured
-end-to-end by the ``ingest_iso2709_marc8`` bench lane: ~100k rec/s on
-the 600k-record synthetic corpus at local[32] on a 32-core host
-(history/BENCH_full_last.json: min 5.91 s).
+Throughput: the binary reader decodes through :func:`marc8_decoder`.
+Printable-ASCII values (most real MARC-8 values) take a one-probe fast
+path, and the reader decodes a whole printable-ASCII datafield at once.
+A value without an escape byte goes through one ``translate`` table
+built from the default sets plus one regex that re-orders combining
+marks. Only values that designate another set run the state machine.
+On a 4-core host, one Python process parses the 12,000 synthetic
+MARC-8 records of the ``marc8_index_ndjson`` benchmark (16 files,
+5.5 MB) into Arrow batches in 0.50-0.64 s; the per-value dict path
+this replaced took 1.2-1.6 s.
 """
 
 from __future__ import annotations
@@ -466,26 +468,66 @@ def marc8_to_unicode(
     return unicodedata.normalize(normalize, text) if normalize else text
 
 
+def _default_sets_table() -> tuple:
+    """(translate table, reorder regex) for a value with no escape: every
+    byte is read through the default sets, G0 Basic Latin and G1 ANSEL.
+
+    The table maps all 256 bytes the way :func:`marc8_to_unicode` does
+    with no designation in force — tab, LF, CR and space pass through,
+    :func:`_lookup` supplies the rest, and an unmapped byte (C0 control,
+    DEL, unassigned G1 position) becomes U+FFFD. The regex matches a run
+    of ANSEL combining marks and the base character after it, so
+    ``sub(r"\\2\\1", ...)`` moves marks behind their base as the state
+    machine's pending buffer does; a run with no base stays at the end.
+    """
+    table = {}
+    marks = []
+    for b in range(256):
+        if b in (0x09, 0x0A, 0x0D, 0x20):
+            ch, combining = chr(b), False
+        else:
+            ch, combining = _lookup(
+                CODE_BASIC_LATIN if b < 0x80 else CODE_ANSEL, b
+            )
+        table[b] = "\ufffd" if ch is None else ch
+        if combining:
+            marks.append(ch)
+    run = "".join(marks)
+    return table, re.compile(f"([{run}]+)([^{run}])")
+
+
 def marc8_decoder(unmapped: str | None = None):
-    """Per-VALUE decode callable for the ingest hot path (~64 calls per
-    record): the plain-ASCII fast path is hoisted ahead of
-    :func:`marc8_to_unicode`'s argument validation so the overwhelmingly
-    common case (English values, no escapes) pays one closure call, one
-    ``isascii`` probe, one regex probe and one C decode — not an extra
-    Python frame plus re-validation per value. Non-fast-path values
-    delegate to :func:`marc8_to_unicode` unchanged (``replace=True``,
-    default NFC normalize), so output is identical by construction for
-    every input."""
+    """Per-VALUE decode callable for the ingest hot path, equal to
+    ``marc8_to_unicode(raw, replace=True, unmapped=unmapped)`` for every
+    input, with two fast paths ahead of the state machine:
+
+    - printable ASCII (the overwhelming share of real MARC-8 values):
+      one ``isascii`` probe, one regex probe and one C decode, NCRs
+      expanded only where ``&#x`` occurs;
+    - no escape byte (diacritics, ANSEL symbols, stray controls): the
+      default sets are in force throughout, so the value is one
+      ``translate`` through :func:`_default_sets_table`, one regex
+      substitution that puts combining marks after their base, NCR
+      expansion and NFC. ``unmapped`` cannot matter here: the default
+      sets both have tables.
+
+    Values with an escape take the state machine."""
     if unmapped not in (None, "replace", "preserve"):
         raise ValueError(
             f"unmapped must be None, 'replace' or 'preserve', got {unmapped!r}"
         )
     expand, search, full = _expand_ncr, _NON_PRINTABLE.search, marc8_to_unicode
+    table, marks_first = _default_sets_table()
+    reorder = marks_first.sub
+    nfc = unicodedata.normalize
 
     def dec(raw: bytes) -> str:
         if raw.isascii() and not search(raw):
             text = raw.decode("ascii")
             return expand(text) if "&#x" in text else text
+        if b"\x1b" not in raw:
+            text = reorder(r"\2\1", raw.decode("latin-1").translate(table))
+            return nfc("NFC", expand(text) if "&#x" in text else text)
         return full(raw, replace=True, unmapped=unmapped)
 
     return dec

@@ -1,9 +1,11 @@
 """Pure-python MARC serialization: marc-in-json, MARCXML, ISO 2709 binary.
 
 Used by the ``serialized_marc`` macro (reference:
-lib/traject/macros/marc21.rb:174-198) and the binary/XML ingest sources.
-These run row-at-a-time inside Arrow-batched pandas UDFs — serialization
-is a sink-side concern, not the hot mapping path.
+lib/traject/macros/marc21.rb:174-198) and the ingest sources. The
+writers run row-at-a-time inside Arrow-batched UDFs — serialization is
+a sink-side concern, not the hot mapping path. The ISO 2709 parser
+(:class:`Iso2709Columns`) fills column buffers that the binary reader
+turns into Arrow columns without building a dict per record.
 
 ISO 2709 layout (public spec): 24-byte leader; directory of 12-byte
 entries (3 tag + 4 length + 5 start); field terminator 0x1E; subfield
@@ -12,9 +14,17 @@ delimiter 0x1F; record terminator 0x1D.
 
 from __future__ import annotations
 
+import codecs
 import json
+import re
 from typing import Optional
 from xml.sax.saxutils import escape
+
+from traject_spark.marc.marc8 import (
+    _expand_ncr,
+    marc8_decoder,
+    unicode_to_marc8,
+)
 
 FT = b"\x1e"  # field terminator
 SD = b"\x1f"  # subfield delimiter
@@ -180,8 +190,6 @@ def _value_encoder(encoding: str):
     if enc in ("marc-8", "marc8", "marc-8-preserve", "marc8-preserve"):
         # the -preserve alias is accepted for read/write symmetry: the
         # encoder already emits preserve-parked bytes verbatim
-        from traject_spark.marc.marc8 import unicode_to_marc8
-
         return lambda s: unicode_to_marc8(s, ncr_fallback=True)
     codec = (encoding or "utf-8").strip() or "utf-8"
     return lambda s: s.encode(codec)
@@ -272,107 +280,219 @@ def to_iso2709(
     return leader.encode("ascii", "replace") + directory + data + RT
 
 
-def _decoder(encoding: str):
-    """bytes -> str for one MARC field/subfield value. 'MARC-8' (the
-    reference's marc_source.encoding = 'MARC-8', marc_reader.rb:27-35)
-    routes through the LoC escape-sequence converter with
-    :invalid => :replace parity; anything else is a Python codec name.
-    MARC-8 designations are resolved per decoded value (per subfield),
+#: codecs (``codecs.lookup(name).name``) that decode bytes 0x00-0x7F as
+#: ASCII: under them a datafield body of printable ASCII decodes the same
+#: whole as subfield by subfield. EBCDIC-style codecs (cp037, cp500, ...)
+#: give those bytes other characters and keep the per-subfield decode.
+_ASCII_COMPATIBLE = frozenset(
+    {"utf-8", "ascii", "iso8859-1", "iso8859-15", "cp1252"}
+)
+
+#: a byte that keeps a datafield body off the whole-field decode: the C0
+#: controls other than tab, LF, CR and the subfield delimiter, and DEL —
+#: the bytes the MARC-8 per-value fast path sends to the state machine
+_NOT_PLAIN = re.compile(rb"[\x00-\x08\x0b\x0c\x0e-\x1e\x7f]")
+
+#: one 12-byte directory entry: tag, field length, starting position
+_ENTRY = re.compile(rb"(...)(....)(.....)", re.DOTALL)
+
+
+def _decoder(encoding: str) -> tuple:
+    """(decode, whole_fields, expand_ncrs) for one MARC field/subfield
+    value. 'MARC-8' (the reference's marc_source.encoding = 'MARC-8',
+    marc_reader.rb:27-35) routes through the LoC escape-sequence
+    converter with :invalid => :replace parity; anything else is a
+    Python codec name, decoded with errors='replace'. MARC-8
+    designations are resolved per decoded value (per subfield),
     matching ruby-marc's per-value transcoding — MARC 21 requires
     fields to return to the default sets, and vendor data re-designates
-    per subfield in practice."""
+    per subfield in practice.
+
+    ``whole_fields``: a printable-ASCII datafield body may be decoded
+    once and split on the subfield delimiter (MARC-8 and the codecs in
+    ``_ASCII_COMPATIBLE``); ``expand_ncrs``: such values still need
+    MARC-8's ``&#x...;`` expansion."""
     enc = (encoding or "utf-8").strip().lower().replace("_", "-")
     if enc in ("marc-8", "marc8"):
-        from traject_spark.marc.marc8 import marc8_decoder
-
-        return marc8_decoder()
+        return marc8_decoder(), True, True
     if enc in ("marc-8-preserve", "marc8-preserve"):
         # byte-preserving posture for sets with no bundled table (EACC
         # CJK, Extended Arabic): unmapped spans land on plane-15 PUA
         # codepoints instead of U+FFFD, and to_iso2709(encoding='MARC-8')
         # emits them back verbatim — read->write round-trips
         # byte-identically even through scripts the converter can't map
-        from traject_spark.marc.marc8 import marc8_decoder
-
-        return marc8_decoder("preserve")
+        return marc8_decoder("preserve"), True, True
     # the normalized-empty check above implies None/'' mean utf-8 —
     # decode with a whitespace-stripped name so ' latin-1 ' (which the
-    # marc8 check already treats as non-MARC-8) resolves as a codec
-    # instead of raising LookupError per value on executors
+    # marc8 check already treats as non-MARC-8) resolves as a codec;
+    # an unknown name raises LookupError here
     codec = (encoding or "utf-8").strip() or "utf-8"
-    return lambda b: b.decode(codec, errors="replace")
+    whole = codecs.lookup(codec).name in _ASCII_COMPATIBLE
+    return (lambda b: b.decode(codec, errors="replace")), whole, False
+
+
+class _Memo(dict):
+    """bytes -> str through ``decode``, each distinct key decoded once."""
+
+    def __init__(self, decode):
+        super().__init__()
+        self._decode = decode
+
+    def __missing__(self, key: bytes) -> str:
+        value = self[key] = self._decode(key)
+        return value
+
+
+class Iso2709Columns:
+    """The ISO 2709 parser: :meth:`add` appends one record to column
+    buffers — record ids, leaders, list offsets and the tag, indicator,
+    code and value strings — which ``marc.io`` assembles into Arrow
+    columns of ``MARC_SOURCE_SCHEMA`` and :func:`from_iso2709` into one
+    record dict. Lenient like the reference readers: a bad directory
+    entry skips its field, a record without a usable leader is dropped.
+
+    Decode work per record: tags, indicators and subfield codes are
+    memoised per parser; a datafield body of printable ASCII is decoded
+    once and split on ``0x1F`` where the encoding allows it (see
+    :func:`_decoder`); every other value goes through the per-value
+    decoder."""
+
+    def __init__(self, encoding: str = "utf-8", id_tag: str = "001"):
+        self._dec, self._whole, self._ncr = _decoder(encoding)
+        self._id_tag = id_tag
+        self._memo = _Memo(self._dec)
+        self.clear()
+
+    def clear(self) -> None:
+        self.ids: list = []
+        self.leaders: list = []
+        self.cf_offsets = [0]
+        self.cf_tags: list = []
+        self.cf_values: list = []
+        self.df_offsets = [0]
+        self.df_tags: list = []
+        self.df_ind1: list = []
+        self.df_ind2: list = []
+        self.sf_offsets = [0]
+        self.sf_codes: list = []
+        self.sf_values: list = []
+
+    def __len__(self) -> int:
+        return len(self.leaders)
+
+    def add(self, raw: bytes) -> bool:
+        """Append one record; False (nothing appended) when ``raw`` has
+        no leader or a non-numeric base address."""
+        if len(raw) < 24:
+            return False
+        try:
+            base = int(raw[12:17])
+        except ValueError:
+            return False
+        dec, memo = self._dec, self._memo
+        whole, ncr, expand = self._whole, self._ncr, _expand_ncr
+        cf_tags, cf_values = self.cf_tags, self.cf_values
+        df_tags, df_ind1, df_ind2 = self.df_tags, self.df_ind1, self.df_ind2
+        codes, values = self.sf_codes, self.sf_values
+        sf_offsets, id_tag = self.sf_offsets, self._id_tag
+        self.leaders.append(dec(raw[:24]))
+        directory = raw[24 : base - 1]
+        data_region = raw[base:]
+        record_id = None
+        pos = 0  # expected start of the next field (directory order)
+        for key, length, start in _ENTRY.findall(directory):
+            try:
+                length = int(length)
+                start = int(start)
+            except ValueError:
+                # a skipped entry breaks the end-of-previous-field chain:
+                # the NEXT field's zeroed start can no longer be recovered
+                # from pos (it would point at the field before the gap)
+                pos = -1
+                continue
+            # allow_oversized zeroes slots that overflow their fixed
+            # width; recover by scanning like the reference's forgiving
+            # readers: a zeroed offset (except for the first field) means
+            # "where the previous field ended", and a zeroed length (a
+            # real body is >=1 byte, it always ends with FT) means "up to
+            # the next FT".
+            if start == 0 and pos > 0:
+                start = pos
+            elif start == 0 and pos < 0:
+                # recovery chain broken by a skipped entry: a zeroed
+                # start here cannot be resolved — reading from offset 0
+                # would return some earlier field's bytes. Drop the field.
+                continue
+            if length == 0:
+                end = data_region.find(FT, start)
+                if end == -1:
+                    continue
+                length = end - start + 1
+            pos = start + length
+            body = data_region[start:pos].rstrip(FT)
+            tag = memo[key]
+            if tag in CONTROL_TAGS:
+                # the canonical ruby-marc control-tag set (001-009): "000"
+                # or alphanumeric "00x" tags are DataFields there, and the
+                # JSON/XML serializers here dispatch on the same set — a
+                # wider predicate would make an ISO round-trip drop them
+                value = dec(body)
+                cf_tags.append(tag)
+                cf_values.append(value)
+                if record_id is None and tag == id_tag:
+                    record_id = value
+                continue
+            df_ind1.append(memo[body[0:1]] or " ")
+            df_ind2.append(memo[body[1:2]] or " ")
+            df_tags.append(tag)
+            rest = body[2:]
+            if whole and rest.isascii() and not _NOT_PLAIN.search(rest):
+                for chunk in rest.decode("ascii").split("\x1f"):
+                    if chunk:
+                        codes.append(chunk[0])
+                        value = chunk[1:]
+                        values.append(
+                            expand(value) if ncr and "&#x" in value else value
+                        )
+            else:
+                for chunk in rest.split(SD):
+                    if chunk:
+                        codes.append(memo[chunk[:1]])
+                        values.append(dec(chunk[1:]))
+            sf_offsets.append(len(codes))
+        self.ids.append(record_id)
+        self.cf_offsets.append(len(cf_tags))
+        self.df_offsets.append(len(df_tags))
+        return True
+
+    def record(self, i: int) -> dict:
+        """Record ``i`` of the buffers as a nested record dict."""
+        cfs = [
+            {"tag": self.cf_tags[k], "value": self.cf_values[k]}
+            for k in range(self.cf_offsets[i], self.cf_offsets[i + 1])
+        ]
+        dfs = [
+            {
+                "tag": self.df_tags[d],
+                "ind1": self.df_ind1[d],
+                "ind2": self.df_ind2[d],
+                "subfields": [
+                    {"code": self.sf_codes[k], "value": self.sf_values[k]}
+                    for k in range(self.sf_offsets[d], self.sf_offsets[d + 1])
+                ],
+            }
+            for d in range(self.df_offsets[i], self.df_offsets[i + 1])
+        ]
+        return {"leader": self.leaders[i], "controlfields": cfs, "datafields": dfs}
 
 
 def from_iso2709(raw: bytes, encoding: str = "utf-8") -> Optional[dict]:
-    """Decode one ISO 2709 record (lenient: bad fields skipped, mirroring
-    the reference readers' per-record error-skip policy). ``encoding``
-    accepts Python codec names or 'MARC-8' (see :func:`_decoder`)."""
-    if len(raw) < 24:
-        return None
-    dec = _decoder(encoding)
-    leader = dec(raw[:24])
-    try:
-        base = int(raw[12:17])
-    except ValueError:
-        return None
-    directory = raw[24 : base - 1]
-    out = {"leader": leader, "controlfields": [], "datafields": []}
-    data_region = raw[base:]
-    pos = 0  # expected start of the next field (directory order)
-    for i in range(0, len(directory) - 11, 12):
-        entry = directory[i : i + 12]
-        tag = dec(entry[:3])
-        try:
-            length = int(entry[3:7])
-            start = int(entry[7:12])
-        except ValueError:
-            # a skipped entry breaks the end-of-previous-field chain:
-            # the NEXT field's zeroed start can no longer be recovered
-            # from pos (it would point at the field before the gap)
-            pos = -1
-            continue
-        # allow_oversized zeroes slots that overflow their fixed width;
-        # recover by scanning like the reference's forgiving readers: a
-        # zeroed offset (except for the first field) means "where the
-        # previous field ended", and a zeroed length (a real body is >=1
-        # byte, it always ends with FT) means "up to the next FT".
-        if start == 0 and pos > 0:
-            start = pos
-        elif start == 0 and pos < 0:
-            # recovery chain broken by a skipped entry: a zeroed start
-            # here cannot be resolved — reading from offset 0 would
-            # return some earlier field's bytes. Drop the field.
-            continue
-        if length == 0:
-            end = data_region.find(FT, start)
-            if end == -1:
-                continue
-            length = end - start + 1
-        pos = start + length
-        body = data_region[start : start + length]
-        body = body.rstrip(FT)
-        if tag in CONTROL_TAGS:
-            # the canonical ruby-marc control-tag set (001-009): "000" or
-            # alphanumeric "00x" tags are DataFields there, and the JSON/
-            # XML serializers here dispatch on the same set — a wider
-            # predicate would make an ISO round-trip drop those records
-            out["controlfields"].append(
-                {"tag": tag, "value": dec(body)}
-            )
-        else:
-            ind1 = dec(body[0:1]) or " "
-            ind2 = dec(body[1:2]) or " "
-            sfs = []
-            for chunk in body[2:].split(SD):
-                if not chunk:
-                    continue
-                code = dec(chunk[:1])
-                value = dec(chunk[1:])
-                sfs.append({"code": code, "value": value})
-            out["datafields"].append(
-                {"tag": tag, "ind1": ind1, "ind2": ind2, "subfields": sfs}
-            )
-    return out
+    """Decode one ISO 2709 record into a record dict, or None when it
+    has no usable leader: one record through :class:`Iso2709Columns`,
+    the parser ``read_iso2709`` runs. ``encoding`` accepts Python codec
+    names or 'MARC-8' / 'MARC-8-preserve' (see :func:`_decoder`)."""
+    cols = Iso2709Columns(encoding)
+    return cols.record(0) if cols.add(raw) else None
 
 
 def split_iso2709_stream(raw: bytes) -> list[bytes]:
