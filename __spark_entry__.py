@@ -26,7 +26,6 @@ from traject_spark.corpus import (
     exact_dedup,
     fingerprint_expr,
     langid_expr,
-    lsh_topk,
     ngram_jaccard_pairs,
     gopher_quality_expr,
     langid_ngram_expr,
@@ -777,31 +776,6 @@ def q_dedup_exact_apply(spark, sf_dir):
     ).select("doc_id")
 
 
-def q_dedup_simhash_planted(spark, sf_dir):
-    """Oracle-checkable completeness slice of the banded SimHash pipeline
-    (the dedup_minhash_exact_pairs trick): planted EXACT copies (every
-    25th doc re-id'd +1000000) have identical token multisets, hence
-    identical 64-bit signatures, hence hamming distance 0 — they MUST
-    agree on every pigeonhole band and surface through the banding join
-    with distance exactly 0. The general hamming<=3 retrieval stays
-    covered by the pytest planted-distance tests (xxhash64 has no
-    DuckDB twin, so arbitrary distances aren't SQL-predictable)."""
-    from traject_spark.corpus import simhash_near_dup
-
-    pairs = simhash_near_dup(
-        _with_planted_copies(_docs(spark, sf_dir).select("doc_id", "text")),
-        max_distance=3,
-        bands=4,
-    )
-    # restrict to the planted pairs: natural near-dups surface at
-    # hash-dependent distances (not SQL-predictable); the oracle claim is
-    # completeness — every planted copy MUST appear at distance 0
-    return pairs.filter(
-        (F.col("id_b") == F.col("id_a") + 1000000)
-        & (F.col("distance") == 0)
-    )
-
-
 def q_corpus_decontaminate(spark, sf_dir):
     """Benchmark decontamination (contamination.decontaminate) as an
     exact full-rule oracle: benchmark pool = every 10th document's text,
@@ -903,18 +877,6 @@ def _ivf_centroids(emb):
     ]
 
 
-def q_ann_lsh_topk(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return lsh_topk(
-        emb.filter(F.col("vec_id") >= 8),
-        emb.filter(F.col("vec_id") < 8),
-        k=5,
-        dim=64,
-        bits=6,
-        tables=4,
-    )
-
-
 def q_ann_ivf_topk(spark, sf_dir):
     """IVF ANN with an explicit (SQL-mirrorable) coarse quantizer: the four
     lowest-id corpus vectors act as centroids, nprobe=2. Production use
@@ -976,65 +938,55 @@ def q_ann_ivf_layout_topk(spark, sf_dir):
 
 
 def q_ann_recall(spark, sf_dir):
-    """Recall@10 gate for BOTH approximate ANN paths against the exact
+    """Recall@10 gate for the IVF ANN path against the exact
     brute-force baseline (VERDICT r9 item 3). The fixed-seed
-    ann_lsh_topk / ann_ivf_topk rows hash-match their own candidate
-    sets — a retune (auto_lsh_bits, hyperplane seeds, nprobe) that
-    silently tanked recall would re-lock green; this row measures
-    recall INSIDE the query and returns the >= 0.9 verdict, so a
-    recall collapse flips the row red (exact measured values are
-    SF-dependent and pinned per-SF in
+    ann_ivf_topk row hash-matches its own candidate set — a retune
+    (quantizer training, nprobe) that silently tanked recall would
+    re-lock green; this row measures recall INSIDE the query and
+    returns the >= 0.9 verdict, so a recall collapse flips the row red
+    (exact measured values are SF-dependent and pinned per-SF in
     tests/test_similarity.py::test_ann_recall_locked_values).
 
-    Parameters are the PRODUCTION recall shapes (measured r10 on the
-    near-random synthetic embeddings, sf0.01 AND sf0.1): k-means-
-    trained 16-cell quantizer at nprobe=12 -> recall 0.9625 both SFs;
-    LSH bits=2 tables=12 -> 0.9875/1.0. The registered fixed-seed rows
-    (bits=6 tables=4 / 4-cell nprobe=2) stay as-is: they pin candidate-
-    set REPRODUCIBILITY; this row pins QUALITY (they measure 0.16-0.24
-    and 0.56-0.61 recall@10 respectively — aggressive-pruning shapes a
-    user tunes against exactly this metric, corpus.topk_recall)."""
+    Parameters are the PRODUCTION recall shape (measured r10 on the
+    near-random synthetic embeddings, sf0.01 AND sf0.1): a k-means-
+    trained 16-cell quantizer at nprobe=12 -> recall 0.9625 at both
+    SFs. The registered fixed-seed row (4-cell nprobe=2) stays as-is:
+    it pins candidate-set REPRODUCIBILITY; this row pins QUALITY (it
+    measures 0.56-0.61 recall@10 — an aggressive-pruning shape a user
+    tunes against exactly this metric, corpus.topk_recall)."""
     from traject_spark.corpus import ivf_topk, topk_recall, train_centroids
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     corpus = emb.filter(F.col("vec_id") >= 8)
     queries = emb.filter(F.col("vec_id") < 8)
-    # localCheckpoint: the truth subtree rides in BOTH unionAll branches
-    # and the exact cross-join scoring is the heaviest stage of the row
-    # — materialize its ~queries x k rows once instead of twice (eager,
-    # tiny, auto-cleaned with the context)
-    truth = brute_force_topk(corpus, queries, k=10).localCheckpoint()
-
-    def measure(method: str, approx):
-        # the hashed columns are SF-independent (the measured value
-        # itself varies with the synthetic vectors per sf_dir: 0.9375/
-        # 1.0 at sf0.001, 0.9625/0.9875 at sf0.01, 0.9625/1.0 at sf0.1
-        # for ivf/lsh); the EXACT values are pinned per-SF by
-        # tests/test_similarity.py::test_ann_recall_locked_values
-        return topk_recall(truth, approx).select(
-            F.lit(method).alias("method"),
-            F.col("n_queries").cast("long").alias("n_queries"),
-            (F.col("mean_recall") >= 0.9).alias("recall_ge_090"),
-        )
-
-    lsh = lsh_topk(corpus, queries, k=10, dim=64, bits=2, tables=12)
+    truth = brute_force_topk(corpus, queries, k=10)
     cents = train_centroids(corpus, n_centroids=16, iters=5)
     ivf = ivf_topk(corpus, queries, cents, k=10, nprobe=12)
-    return measure("ivf", ivf).unionAll(measure("lsh", lsh))
+    # the hashed columns are SF-independent (the measured value itself
+    # varies with the synthetic vectors per sf_dir: 0.9375 at sf0.001,
+    # 0.9625 at sf0.01 and sf0.1); the EXACT value is pinned per-SF by
+    # tests/test_similarity.py::test_ann_recall_locked_values
+    return topk_recall(truth, ivf).select(
+        F.lit("ivf").alias("method"),
+        F.col("n_queries").cast("long").alias("n_queries"),
+        (F.col("mean_recall") >= 0.9).alias("recall_ge_090"),
+    )
 
 
 def q_embed_near_dup(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs via the LSH-bucketed scale
-    path (candidates = pairs sharing a random-hyperplane bucket in any of
-    4 tables — shuffle volume ~n^2/2^bits per table, never all pairs).
-    The oracle mirrors the identical hyperplane constants in SQL; the
-    exact O(n^2) baseline stays a pytest subset/recall check
+    """Embedding-cosine near-dup marking, the production operator
+    (cosine_near_dup_witness): each vector is checked against the
+    bucket minimum and its sorted-neighbourhood predecessor in each of
+    4 random-hyperplane tables (bits=6), and marked with its best
+    witness at cosine >= 0.35. The oracle mirrors the identical
+    hyperplane constants and the candidate window in SQL; the exact
+    O(n^2) pair baseline stays a pytest check
     (tests/test_similarity.py)."""
-    from traject_spark.corpus import cosine_near_dup
+    from traject_spark.corpus import cosine_near_dup_witness
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return cosine_near_dup(
-        emb, threshold=0.35, mode="lsh", dim=64, bits=6, tables=4
+    return cosine_near_dup_witness(
+        emb, threshold=0.35, dim=64, bits=6, tables=4
     )
 
 
@@ -1075,10 +1027,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # The driver evaluates only the FIRST 50 entries: the registry stays
     # at <= 50 rows, every one with a DuckDB oracle (asserted by
     # tests/test_entry_oracle.py). Operators whose general output has
-    # no DuckDB twin (raw minhash/simhash signatures, arbitrary-distance
-    # retrieval) are covered by pytest instead, with an oracle-able
-    # planted-pair completeness slice registered here
-    # (dedup_minhash_exact_pairs, dedup_simhash_planted).
+    # no DuckDB twin (raw minhash signatures) are covered by pytest
+    # instead, with an oracle-able planted-pair completeness slice
+    # registered here (dedup_minhash_exact_pairs).
     return {
         "marc_title_join": q_marc_title_join,
         "marc_title_first_trim": q_marc_title_first_trim,
@@ -1118,13 +1069,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact_apply": q_dedup_exact_apply,
         "dedup_jaccard_adjacent": q_dedup_jaccard_adjacent,
         "dedup_minhash_exact_pairs": q_dedup_minhash_exact_pairs,
-        "dedup_simhash_planted": q_dedup_simhash_planted,
         "dedup_witness_clusters": q_dedup_witness_clusters,
         "stream_dedup_fingerprint": q_stream_dedup_fingerprint,
         "embed_norm": q_embed_norm,
         "embed_topk": q_embed_topk,
         "embed_near_dup": q_embed_near_dup,
-        "ann_lsh_topk": q_ann_lsh_topk,
         "ann_ivf_topk": q_ann_ivf_topk,
         "ann_ivf_layout_topk": q_ann_ivf_layout_topk,
         "ann_recall": q_ann_recall,
@@ -1185,7 +1134,7 @@ _SQL_IVF = f"""
 
 
 def _sql_lsh_bucket(vexpr: str, table: int, bits: int = 6, dim: int = 64) -> str:
-    """DuckDB twin of similarity.signs_expr: the same deterministic
+    """DuckDB twin of similarity._signs_sql: the same deterministic
     splitmix hyperplanes as double literals, same >= 0 sign rule."""
     from traject_spark.corpus.similarity import _hyperplane
 
@@ -1200,63 +1149,43 @@ def _sql_lsh_bucket(vexpr: str, table: int, bits: int = 6, dim: int = 64) -> str
     return "(" + " + ".join(terms) + ")"
 
 
-# LSH top-k oracle: identical hyperplane bucket constants (bits=6,
-# tables=4), distinct same-bucket candidates, exact rescoring of
-# candidates only, rank over (score desc, neighbor asc), k=5
-_SQL_LSH_TOPK = f"""
-    WITH corp AS (
-      SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 8
-    ), qry AS (
-      SELECT vec_id, embedding FROM embeddings WHERE vec_id < 8
-    ), cb AS (
-      {" UNION ALL ".join(
-        f"SELECT vec_id, embedding, {t} AS tbl, "
-        f"{_sql_lsh_bucket('embedding', t)} AS bucket FROM corp"
-        for t in range(4)
-    )}
-    ), qb AS (
-      {" UNION ALL ".join(
-        f"SELECT vec_id, embedding, {t} AS tbl, "
-        f"{_sql_lsh_bucket('embedding', t)} AS bucket FROM qry"
-        for t in range(4)
-    )}
-    ), cand AS (
-      SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-      FROM cb c JOIN qb q ON c.tbl = q.tbl AND c.bucket = q.bucket
-    ), scored AS (
-      SELECT cand.query_id, cand.neighbor_id,
-        round({_sql_cos('q.embedding', 'c.embedding')}, 6) AS score
-      FROM cand
-      JOIN embeddings q ON q.vec_id = cand.query_id
-      JOIN embeddings c ON c.vec_id = cand.neighbor_id
-    ), ranked AS (
-      SELECT query_id, neighbor_id, score,
-        CAST(row_number() OVER (
-          PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC
-        ) AS BIGINT) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, score, rank FROM ranked WHERE rank <= 5"""
-
-
+# embedding witness oracle: identical hyperplane bucket constants
+# (bits=6, tables=4); per (table, bucket) the bucket minimum (first) and
+# the predecessor (lag) by vec_id are each row's candidates; the best
+# candidate by 9-decimal cosine (ties: lower witness id) marks the row
 _SQL_NEAR_DUP = f"""
     WITH buckets AS (
       {" UNION ALL ".join(
-        f"SELECT vec_id, embedding, {t} AS tbl, "
-        f"{_sql_lsh_bucket('embedding', t)} AS bucket FROM embeddings"
+        f"SELECT vec_id, {t} AS tbl, "
+        f"{_sql_lsh_bucket('embedding', t)} AS bucket FROM embeddings "
+        "WHERE len(embedding) = 64"
         for t in range(4)
     )}
+    ), win AS (
+      SELECT vec_id AS id,
+        first_value(vec_id) OVER w AS first_id,
+        lag(vec_id) OVER w AS prev_id
+      FROM buckets
+      WINDOW w AS (PARTITION BY tbl, bucket ORDER BY vec_id)
     ), cand AS (
-      SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-      FROM buckets a JOIN buckets b
-        ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id
+      SELECT DISTINCT id, cand FROM (
+        SELECT id, first_id AS cand FROM win
+        UNION ALL
+        SELECT id, prev_id FROM win
+      ) WHERE cand IS NOT NULL AND cand < id
+    ), scored AS (
+      SELECT c.id, c.cand AS witness_id,
+        round({_sql_cos('a.embedding', 'b.embedding')}, 9) AS cos
+      FROM cand c
+      JOIN embeddings a ON a.vec_id = c.id
+      JOIN embeddings b ON b.vec_id = c.cand
+    ), ranked AS (
+      SELECT *, row_number() OVER (
+        PARTITION BY id ORDER BY cos DESC, witness_id
+      ) AS rn
+      FROM scored WHERE cos >= 0.35
     )
-    SELECT c.id_a, c.id_b,
-      round(round({_sql_cos('a.embedding', 'b.embedding')}, 9), 6) AS score
-    FROM cand c
-    JOIN embeddings a ON a.vec_id = c.id_a
-    JOIN embeddings b ON b.vec_id = c.id_b
-    WHERE round({_sql_cos('a.embedding', 'b.embedding')}, 9) >= 0.35"""
+    SELECT id, witness_id, round(cos, 6) AS score FROM ranked WHERE rn = 1"""
 
 
 def _sql_text_gopher() -> str:
@@ -1730,21 +1659,16 @@ def oracle_sql() -> dict[str, str]:
                 AS error
             FROM documents WHERE length({SQL_TITLE_A}) % 7 = 0""",
         # ann_recall: the recall measurement happens INSIDE the Spark
-        # query (DuckDB cannot run the LSH/IVF candidate generation);
-        # the oracle pins the asserted >= 0.9 verdict — a retune
-        # (auto_lsh_bits, hyperplane seeds, nprobe) that tanks recall
-        # flips the boolean and this row goes red. The measured value
-        # is SF-dependent (synthetic vectors differ per sf_dir) so it
-        # cannot ride an SF-independent SQL constant; the EXACT values
-        # are pinned per-SF by
-        # tests/test_similarity.py::test_ann_recall_locked_values.
+        # query (DuckDB cannot run the k-means quantizer training); the
+        # oracle pins the asserted >= 0.9 verdict — a retune (quantizer
+        # training, nprobe) that tanks recall flips the boolean and
+        # this row goes red. The measured value is SF-dependent
+        # (synthetic vectors differ per sf_dir) so it cannot ride an
+        # SF-independent SQL constant; the EXACT value is pinned per-SF
+        # by tests/test_similarity.py::test_ann_recall_locked_values.
         "ann_recall": """
-            SELECT * FROM (
-              SELECT 'ivf' AS method, CAST(8 AS BIGINT) AS n_queries,
-                TRUE AS recall_ge_090
-              UNION ALL
-              SELECT 'lsh', CAST(8 AS BIGINT), TRUE
-            ) ORDER BY method""",
+            SELECT 'ivf' AS method, CAST(8 AS BIGINT) AS n_queries,
+              TRUE AS recall_ge_090""",
         "pipeline_two_rules": """
             SELECT CAST(doc_id AS VARCHAR) AS record_id,
               CASE WHEN doc_id % 10 = 0 THEN 'Topic 0'
@@ -1766,10 +1690,6 @@ def oracle_sql() -> dict[str, str]:
         "dedup_minhash_exact_pairs": """
             SELECT doc_id AS id_a, doc_id + 1000000 AS id_b,
               CAST(1.0 AS DOUBLE) AS est_jaccard
-            FROM documents WHERE doc_id % 25 = 0""",
-        "dedup_simhash_planted": """
-            SELECT doc_id AS id_a, doc_id + 1000000 AS id_b,
-              CAST(0 AS BIGINT) AS distance
             FROM documents WHERE doc_id % 25 = 0""",
         "pii": _sql_pii(),
         "xml_extract": f"""
@@ -1913,7 +1833,6 @@ def oracle_sql() -> dict[str, str]:
         # centroids, same assignment/probe/rescore semantics over the
         # persisted partitioning) — same oracle
         "ann_ivf_layout_topk": _SQL_IVF,
-        "ann_lsh_topk": _SQL_LSH_TOPK,
         "embed_near_dup": _SQL_NEAR_DUP,
         "corpus_decontaminate": _SQL_DECONTAMINATE,
         "corpus_curate_planted": _sql_curate_planted(),

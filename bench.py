@@ -240,28 +240,6 @@ def dedup_minhash_lsh(spark, inp):
     noop(corpus.minhash_lsh_candidates(docs, num_hashes=32, bands=8))
 
 
-def _simhash_sigs(spark, inp):
-    """SimHash signatures written once per pass, as at scale: the band
-    self-join then reads the narrow (id, sig) table on both sides."""
-    path = tempfile.mkdtemp(dir=inp.work)
-    inp.table("documents").select(
-        "doc_id", corpus.simhash_expr("text").alias("sig")
-    ).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
-def dedup_simhash_near(spark, inp):
-    noop(corpus.simhash_near_dup(
-        _simhash_sigs(spark, inp), sig_col="sig", max_distance=3, bands=4
-    ))
-
-
-def dedup_simhash_witness(spark, inp):
-    noop(corpus.simhash_near_dup_witness(
-        _simhash_sigs(spark, inp), sig_col="sig", max_distance=3, bands=4
-    ))
-
-
 def embed_near_dup_witness(spark, inp):
     noop(corpus.cosine_near_dup_witness(
         inp.table("embeddings"), threshold=0.35, bits=None, tables=4
@@ -328,8 +306,6 @@ LANES = (
     ("dedup_exact", dedup_exact),
     ("decontaminate", decontaminate),
     ("dedup_minhash_lsh", dedup_minhash_lsh),
-    ("dedup_simhash_near", dedup_simhash_near),
-    ("dedup_simhash_witness", dedup_simhash_witness),
     ("embed_near_dup_witness", embed_near_dup_witness),
     ("text_quality_filter", text_quality_filter),
     ("text_repetition_filter", text_repetition_filter),

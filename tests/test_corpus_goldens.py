@@ -139,3 +139,68 @@ def test_builders_resolve_in_a_new_session(spark):
     finally:
         # hand the active session back to the shared fixture
         spark.createDataFrame([(1,)], "x int")
+
+
+def _golden(case: str) -> dict:
+    with open(GOLDEN_PATH, encoding="utf-8") as fh:
+        return json.load(fh)[case]
+
+
+def test_named_builder_explodes(spark):
+    """Called with a column name, a builder returns its body, which
+    Spark accepts inside a generator; the registered function's call is
+    refused there (UNSUPPORTED_SQL_UDF_USAGE)."""
+    from traject_spark.corpus.dedup import shingles_expr
+
+    df = spark.createDataFrame(TEXTS, "text_id string, text string")
+    rows = df.select(
+        "text_id", F.explode(shingles_expr("text")).alias("sh")
+    ).collect()
+    got: dict = {}
+    for r in rows:
+        got.setdefault(r["text_id"], []).append(r["sh"])
+    want = {k: v for k, v in _golden("shingles_3").items() if v}
+    assert got == want
+
+
+def test_named_builder_sorts(spark):
+    """A builder called with a column name can order rows; the
+    registered function's call is refused inside a sort."""
+    from traject_spark.corpus.textstats import token_count_expr
+
+    df = spark.createDataFrame(TEXTS, "text_id string, text string")
+    counts = _golden("token_count")
+    rows = df.orderBy(
+        token_count_expr("text").asc_nulls_first(), "text_id"
+    ).collect()
+    want = sorted(counts, key=lambda t: (
+        -1 if counts[t] is None else counts[t], t
+    ))
+    assert [r["text_id"] for r in rows] == want
+
+
+def test_builder_inside_a_lambda(spark):
+    """A builder called inside an ``F.transform`` lambda over the
+    lambda's own variable: a registered SQL function cannot bind a
+    lambda variable (MISSING_ATTRIBUTES), so the body is bound in
+    place."""
+    from traject_spark.corpus.textstats import (
+        quality_score_expr,
+        token_count_expr,
+    )
+
+    df = spark.createDataFrame(TEXTS, "text_id string, text string").agg(
+        F.sort_array(
+            F.collect_list(F.struct("text_id", "text"))
+        ).alias("docs")
+    )
+    row = df.select(
+        F.transform("docs", lambda d: d["text_id"]).alias("ids"),
+        F.transform("docs", lambda d: token_count_expr(d["text"])).alias("n"),
+        F.transform(
+            "docs", lambda d: quality_score_expr(d["text"], 2, 10)
+        ).alias("q"),
+    ).collect()[0]
+    counts, quality = _golden("token_count"), _golden("quality_2_10")
+    assert list(row["n"]) == [counts[t] for t in row["ids"]]
+    assert list(row["q"]) == [quality[t] for t in row["ids"]]

@@ -163,3 +163,30 @@ def test_whole_field_decode_equals_per_subfield_decode(inds, rest):
         assert got == want, encoding
         assert field["ind1"] == (dec(inds[:1]) or " ")
         assert field["ind2"] == (dec(inds[1:2]) or " ")
+
+
+def test_surrogate_ncr_value_reads(spark, tmp_path):
+    """A MARC-8 value carrying an NCR for a surrogate code point reads
+    as literal text; the lone surrogate it would otherwise expand to has
+    no UTF-8 form and failed the whole read task in Arrow."""
+    from traject_spark.marc.io import read_iso2709
+    from traject_spark.marc.serialize import to_iso2709
+
+    rec = {
+        "leader": "00000cam a2200000 a 4500",
+        "controlfields": [{"tag": "001", "value": "s1"}],
+        "datafields": [
+            {"tag": "245", "ind1": "1", "ind2": "0",
+             "subfields": [{"code": "a", "value": "PLACEHOLDER"}]},
+        ],
+    }
+    raw = to_iso2709(rec, encoding="MARC-8")
+    # same length, so the directory still points at the right bytes
+    raw = raw.replace(b"PLACEHOLDER", b"a&#xD800;bc")
+    path = tmp_path / "surrogate.mrc"
+    path.write_bytes(raw * 2)
+    rows = _rows(read_iso2709(spark, str(path), encoding="MARC-8"))
+    values = [
+        r["marc"]["datafields"][0]["subfields"][0]["value"] for r in rows
+    ]
+    assert values == ["a&#xD800;bc", "a&#xD800;bc"]

@@ -852,6 +852,20 @@ def test_preserve_range_ncr_stays_literal():
     assert marc8_to_unicode(unicode_to_marc8(s)) == s
 
 
+def test_surrogate_ncr_stays_literal():
+    """An NCR naming a surrogate (U+D800-U+DFFF) names no character: it
+    stays literal text, as one past U+10FFFF does, instead of becoming a
+    lone surrogate that has no UTF-8 form."""
+    import pyarrow as pa
+
+    from traject_spark.marc.marc8 import _expand_ncr
+
+    assert _expand_ncr("a&#xD800;b") == "a&#xD800;b"
+    s = marc8_to_unicode(b"&#xD800; &#xdfff; &#xD7FF; &#xE000;")
+    assert s == "&#xD800; &#xdfff; \ud7ff \ue000"
+    assert pa.array([s], pa.string()).to_pylist() == [s]
+
+
 def test_from_iso2709_marc8_preserve_round_trips_record():
     """encoding='MARC-8-preserve' on the record level: a record whose
     values carry EACC spans reads to a struct and writes back with the

@@ -2,7 +2,7 @@
 structurally instead of living only in docstrings and soak numbers
 (VERDICT r8 item 6).
 
-Three invariants a refactor must not silently break:
+Invariants a refactor must not silently break:
 
 1. The FLAGSHIP mapping pipeline (the exact one ``entry()`` exposes and
    B1 times) is one narrow stage: zero ``Exchange`` operators. On a
@@ -11,10 +11,12 @@ Three invariants a refactor must not silently break:
 2. ``ivf_topk_from_layout`` keeps dynamic partition pruning on the
    ``cell`` column — file-level pruning is the whole point of the
    partitioned layout; losing it re-reads the full corpus per probe.
-3. The shared LSH banding projection (``_banded``) scans the corpus
-   ONCE per join side, regardless of how many hash tables it posexplodes
-   — ``tables`` must multiply rows AFTER one scan, never re-scan the
-   parquet per table.
+3. The hyperplane banding projection (``_banded``) scans the corpus
+   ONCE, regardless of how many hash tables it explodes — ``tables``
+   must multiply rows AFTER one scan, never re-scan the parquet per
+   table.
+4. ``curate_documents(near_dup="cluster")`` labels the survivors with
+   ONE join.
 """
 
 import pytest
@@ -62,18 +64,17 @@ def _scan_count(plan: str, token: str = "Scan parquet") -> int:
 
 
 def test_banded_pair_plan_scans_corpus_once_per_side(spark):
-    """cosine_near_dup(mode='lsh') reads the embeddings parquet exactly
-    twice (side a + side b): the ``tables`` fan-out is a posexplode over
-    one scan's output, not a per-table re-scan. 4 tables -> still 2
-    scans; at 100 TB the difference is 2 corpus reads vs 8."""
-    from traject_spark.corpus import cosine_near_dup
+    """cosine_near_dup_witness reads the embeddings parquet exactly three
+    times: once for the banding pass and once for each of the two
+    id-keyed vector fetches (the candidate and its witness). The
+    ``tables`` fan-out is an explode over the banding scan's output,
+    not a per-table re-scan: 4 tables -> still 3 scans."""
+    from traject_spark.corpus import cosine_near_dup_witness
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    out = cosine_near_dup(
-        emb, threshold=0.35, mode="lsh", bits=4, tables=4
-    )
+    out = cosine_near_dup_witness(emb, threshold=0.35, bits=4, tables=4)
     n = _scan_count(_plan(out))
-    assert n == 2, f"expected 2 parquet scans (one per side), got {n}"
+    assert n == 3, f"expected 3 parquet scans, got {n}"
 
 
 def test_banded_witness_plan_scan_count(spark):
@@ -92,6 +93,25 @@ def test_banded_witness_plan_scan_count(spark):
         for t in (2, 8)
     }
     assert counts[2] == counts[8] <= 5, counts
+
+
+def test_curate_cluster_labels_survivors_with_one_join(spark):
+    """``curate_documents(near_dup="cluster")`` hands the survivors to
+    ``witness_clusters`` as its members: the labels arrive by ONE left
+    join of the survivors to the converged parent pointers (the
+    pointer-doubling rounds are checkpointed, so they add no join to
+    the result's plan). Joining the survivors again to attach the
+    labels would be a second join over the same rows."""
+    from traject_spark.corpus import curate_documents
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    out = curate_documents(docs, near_dup="cluster", num_hashes=16, bands=4)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    joins = [line for line in plan.splitlines() if "Join " in line]
+    assert len(joins) == 1, joins
+    assert out.columns[0] == "doc_id" and out.columns[-1] == "cluster_id"
 
 
 def test_minhash_banding_scans_documents_once_per_side(spark):

@@ -1,4 +1,4 @@
-"""Dedup, MinHash, SimHash, langid and witness operators (traject_spark.corpus)."""
+"""Dedup, MinHash, langid and witness operators (traject_spark.corpus)."""
 
 from pyspark.sql import functions as F
 
@@ -134,57 +134,6 @@ def test_minhash_near_dup_clusters_transitive_closure(spark):
     assert survivors == {0, 100, 101, 102, 103, 200, 201}
 
 
-def test_simhash_near_dup_witness_linear_output(spark):
-    """SimHash witness marking: a 5-copy exact clique yields 4 witness
-    rows at distance 0 (not 10 pairs); unrelated docs stay unmarked;
-    closure via witness_clusters labels the clique with its minimum."""
-    from traject_spark.corpus import (
-        simhash_near_dup,
-        simhash_near_dup_witness,
-        witness_clusters,
-    )
-
-    base = (
-        "the quick brown fox jumps over the lazy dog and keeps on "
-        "running through the quiet green field toward the river bend"
-    )
-    rows = [(i, base) for i in range(5)]
-    rows += [(100 + i, f"totally unrelated document number {i} about "
-                       f"spark catalyst optimizer internals part {i}")
-             for i in range(3)]
-    rows += [(200, None)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = simhash_near_dup_witness(df, max_distance=3, bands=4).collect()
-    marked = {r["id"]: r for r in out}
-    assert set(marked) == {1, 2, 3, 4}
-    assert all(r["witness_id"] < r["id"] for r in out)
-    assert all(r["distance"] == 0 for r in out)
-    pairs = simhash_near_dup(df, max_distance=3, bands=4).filter(
-        "distance = 0"
-    )
-    assert pairs.count() == 10 and len(out) == 4
-    labels = {
-        r["id"]: r["cluster_id"]
-        for r in witness_clusters(
-            spark.createDataFrame(
-                [(r["id"], r["witness_id"]) for r in out],
-                "id long, witness_id long",
-            )
-        ).collect()
-    }
-    assert all(labels[i] == 0 for i in range(5) if i in labels)
-
-
-def test_simhash_near_dup_witness_validates_bands(spark):
-    import pytest
-
-    from traject_spark.corpus import simhash_near_dup_witness
-
-    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="bands"):
-        simhash_near_dup_witness(df, max_distance=4, bands=4)
-
-
 def test_witness_clusters_deep_chain_and_guards(spark):
     """Pointer doubling closes a deep chain (0<-1<-2<-...<-40) in
     log-depth rounds; an upward/self edge (user-supplied) is dropped
@@ -251,7 +200,6 @@ def test_near_dup_operators_exclude_null_text(spark):
         minhash_lsh_candidates,
         minhash_near_dup_witness,
         ngram_jaccard_pairs,
-        simhash_near_dup,
     )
 
     df = spark.createDataFrame(
@@ -264,26 +212,11 @@ def test_near_dup_operators_exclude_null_text(spark):
     assert [(r["id_a"], r["id_b"]) for r in mh] == [(5, 6)]
     wit = minhash_near_dup_witness(df).collect()
     assert [(r["id"], r["witness_id"]) for r in wit] == [(6, 5)]
-    sh = simhash_near_dup(df, max_distance=3, bands=4).collect()
-    assert [(r["id_a"], r["id_b"]) for r in sh] == [(5, 6)]
     pairs = spark.createDataFrame(
         [(1, 2), (5, 6)], "id_a long, id_b long"
     )
     jc = ngram_jaccard_pairs(df, pairs=pairs).collect()
     assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in jc] == [(5, 6, 1.0)]
-
-
-def test_simhash_near_dup_bands_1(spark):
-    """bands=1 (width 64) needs the all-ones mask as -1: 2^64-1 overflows
-    a JVM long literal."""
-    from traject_spark.corpus.dedup import simhash_near_dup
-
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta")],
-        "doc_id long, text string",
-    )
-    out = simhash_near_dup(df, max_distance=0, bands=1).collect()
-    assert [(r["id_a"], r["id_b"], r["distance"]) for r in out] == [(1, 2, 0)]
 
 
 def test_minhash_sig_col_precomputed(spark):

@@ -166,3 +166,91 @@ def test_cli_streaming_flag(spark, tmp_path):
              "-s", "streaming=true", str(ndj)],
             spark=spark,
         )
+
+
+def _failing_solr():
+    """A Solr stand-in that rejects every update with HTTP 400."""
+    import http.server
+    import threading
+
+    class _Solr(http.server.BaseHTTPRequestHandler):
+        def do_POST(self):
+            self.rfile.read(int(self.headers["Content-Length"]))
+            self.send_response(400)
+            self.end_headers()
+            self.wfile.write(b'{"error": {"msg": "rejected"}}')
+
+        def log_message(self, *a):
+            pass
+
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _Solr)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv, f"http://127.0.0.1:{srv.server_address[1]}/solr/core"
+
+
+def test_stream_skipped_docs_are_logged(spark, tmp_path, caplog):
+    """A micro-batch that loses documents to Solr rejections reports the
+    count as a warning of the ``traject_spark.streaming.ops`` logger."""
+    import json
+    import logging
+
+    import __spark_entry__ as entry_mod
+    from traject_spark.streaming import stream_marc_to_solr
+
+    ndj = tmp_path / "drop"
+    ndj.mkdir()
+    (ndj / "a.ndjson").write_text("\n".join(json.dumps(
+        {"leader": "01234cam a2200301 a 4500", "fields": [
+            {"001": f"rec{i}"},
+            {"245": {"ind1": "1", "ind2": "0", "subfields": [
+                {"a": f"Title {i}"}]}},
+        ]}
+    ) for i in range(2)) + "\n")
+    srv, url = _failing_solr()
+    try:
+        with caplog.at_level(logging.WARNING, "traject_spark.streaming.ops"):
+            stream_marc_to_solr(
+                spark, str(ndj), entry_mod.flagship_pipeline(), url,
+                checkpoint=str(tmp_path / "ckpt"), max_skipped=None,
+                max_retries=0,
+            )
+    finally:
+        srv.shutdown()
+    msgs = [
+        r.getMessage() for r in caplog.records
+        if r.name == "traject_spark.streaming.ops"
+    ]
+    assert msgs == ["stream_marc_to_solr: batch 0 skipped 2 docs (2 total)"]
+
+
+def test_commit_on_close_without_await_is_logged(spark, tmp_path, caplog):
+    """``commit_on_close`` needs the query awaited (the commit runs after
+    it ends); without ``await_termination`` it is ignored with a
+    warning."""
+    import logging
+
+    import __spark_entry__ as entry_mod
+    from traject_spark.streaming import stream_marc_to_solr
+
+    ndj = tmp_path / "drop"
+    ndj.mkdir()
+    with caplog.at_level(logging.WARNING, "traject_spark.streaming.ops"):
+        q = stream_marc_to_solr(
+            spark, str(ndj), entry_mod.flagship_pipeline(),
+            "http://127.0.0.1:9/solr/core",
+            checkpoint=str(tmp_path / "ckpt"),
+            await_termination=False, commit_on_close=True,
+        )
+    try:
+        q.awaitTermination(60)
+    finally:
+        q.stop()
+    msgs = [
+        r.getMessage() for r in caplog.records
+        if r.name == "traject_spark.streaming.ops"
+    ]
+    assert msgs == [
+        "stream_marc_to_solr: commit_on_close requires "
+        "await_termination=True (the commit runs after the query "
+        "ends) — ignored; use commitWithin via solr_update_args"
+    ]

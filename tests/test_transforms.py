@@ -1014,19 +1014,27 @@ def test_ruby_map_hash_shorthand_without_whitespace():
     assert _parse_ruby_map('{k:"x"}') == {"k": "x"}
 
 
-def test_rb_parse_failure_fallthrough_warns(tmp_path, capsys):
+def test_rb_parse_failure_fallthrough_warns(tmp_path, caplog):
     """A broken .rb that shadows a loadable sibling .yaml falls through
-    (documented remedy: convert to YAML) but must WARN on stderr naming
-    both files, so a stale conversion can't silently serve old data
-    (ADVICE r10)."""
+    (documented remedy: convert to YAML) but must WARN, through the
+    ``traject_spark.translation_map`` logger, naming both files, so a
+    stale conversion can't silently serve old data (ADVICE r10)."""
+    import logging
+
     from traject_spark.translation_map import TranslationMap
 
     (tmp_path / "shadow.rb").write_text('{ "k" => lambda { 1 } }')
     (tmp_path / "shadow.yaml").write_text("k: stale\n")
-    tm = TranslationMap("shadow", load_path=[str(tmp_path)])
+    with caplog.at_level(logging.WARNING, "traject_spark.translation_map"):
+        tm = TranslationMap("shadow", load_path=[str(tmp_path)])
     assert tm.lookup("k") == "stale"
-    err = capsys.readouterr().err
-    assert "shadow.rb" in err and "shadow.yaml" in err and "WARNING" in err
+    [rec] = [
+        r for r in caplog.records if r.name == "traject_spark.translation_map"
+    ]
+    assert rec.levelno == logging.WARNING
+    msg = rec.getMessage()
+    assert "shadow.rb" in msg and "shadow.yaml" in msg, msg
+    assert "stale conversion" in msg
 
 
 def test_yes_language_code_translates_deliberately():

@@ -5,10 +5,16 @@ benchmark decontamination.
 These are first-class engine components designed for the 100 TB path:
 - text statistics are pure narrow Column expressions (no shuffle);
 - exact dedup is one hash-aggregate shuffle on a 128-bit fingerprint;
-- MinHash-LSH near-dup is shingle->minhash (narrow) + band explode +
-  bucket self-join (shuffle bounded by band buckets, not n^2 pairs);
+- text near-dup is MinHash-LSH: shingle->minhash (narrow) + band explode
+  + per-bucket witness window (shuffle bounded by band buckets, not n^2
+  pairs), with ``witness_clusters`` for transitive cluster ids;
+- embedding near-dup is the same witness over random-hyperplane buckets
+  (``cosine_near_dup_witness``); ``cosine_near_dup`` is its exact O(n^2)
+  baseline;
 - brute-force cosine top-k broadcasts the (small) query set so the corpus
-  side stays a narrow scan; the LSH variant buckets candidates first.
+  side stays a narrow scan; IVF (``ivf_topk``, the partitioned
+  ``write_ivf_layout`` + ``ivf_topk_from_layout``) probes only the
+  nearest coarse-quantizer cells.
 """
 
 from traject_spark.corpus.textstats import (
@@ -46,9 +52,6 @@ from traject_spark.corpus.dedup import (
     minhash_near_dup_witness,
     minhash_near_dup_clusters,
     witness_clusters,
-    simhash_expr,
-    simhash_near_dup,
-    simhash_near_dup_witness,
     ngram_jaccard_pairs,
 )
 from traject_spark.corpus.contamination import (
@@ -69,7 +72,6 @@ from traject_spark.corpus.similarity import (
     ivf_topk,
     ivf_topk_from_layout,
     write_ivf_layout,
-    lsh_topk,
     topk_recall,
     train_centroids,
 )
@@ -105,9 +107,6 @@ __all__ = [
     "minhash_near_dup_witness",
     "minhash_near_dup_clusters",
     "witness_clusters",
-    "simhash_expr",
-    "simhash_near_dup",
-    "simhash_near_dup_witness",
     "ngram_jaccard_pairs",
     "annotate_documents",
     "curate_documents",
@@ -122,7 +121,6 @@ __all__ = [
     "ivf_topk",
     "ivf_topk_from_layout",
     "write_ivf_layout",
-    "lsh_topk",
     "topk_recall",
     "train_centroids",
 ]

@@ -1,4 +1,4 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Deduplication operators: exact, MinHash+LSH, n-gram Jaccard.
 
 Scale design (the 100 TB story):
 - ``exact_dedup``: ONE hash-aggregate shuffle keyed on a 128-bit md5
@@ -8,9 +8,6 @@ Scale design (the 100 TB story):
   seeds over shingles — no UDF); LSH banding explodes each row into
   ``bands`` rows and self-joins on (band, band_hash) buckets, so shuffle
   volume is rows x bands, never the n^2 pair space.
-- SimHash: 64-bit signature via per-bit majority vote over token hashes,
-  computed with array algebra; near-dup = hamming distance <= t on a
-  band-bucketed join (here: exact-signature grouping as the first cut).
 - ``ngram_jaccard_pairs``: exact Jaccard on shingle sets for a bounded
   candidate pair set — the verifier stage after LSH, not a full cross
   product.
@@ -33,8 +30,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from traject_spark.expr import let, sql_let
-from traject_spark.corpus.textstats import _FINGERPRINT, tokens_expr
+from traject_spark.expr import sql_let
+from traject_spark.corpus.textstats import _FINGERPRINT
 from traject_spark.sqlutil import SessionFunction, sql_ref
 
 
@@ -158,7 +155,7 @@ _SHINGLES = SessionFunction(
 )
 
 
-def shingles_expr(text: Column, n: int = 3) -> Column:
+def shingles_expr(text: Column | str, n: int = 3) -> Column:
     """Word n-gram shingles as strings (distinct). NULL text -> NULL
     (NOT ``[null]`` — that constant would make every NULL-text document
     hash identically and form one giant false near-dup clique, the exact
@@ -166,7 +163,7 @@ def shingles_expr(text: Column, n: int = 3) -> Column:
     exact_dedup enforces via its null-safe group key). Empty text keeps
     its ``[""]`` shingle: empty documents ARE duplicates of each other,
     consistent with exact_dedup merging them."""
-    return _SHINGLES(text, F.lit(n))
+    return _SHINGLES(text, int(n))
 
 
 def _minhash_fn(num_hashes: int) -> SessionFunction:
@@ -195,15 +192,14 @@ def minhash_signature_expr(
 
     xxhash64(shingle, seed) is a JVM built-in — the whole signature is
     narrow array algebra, no UDF, no shuffle. ``text`` is a Column or a
-    column name (read as ``F.col(name)``, so nested fields resolve).
+    column name (read as ``F.col(name)`` reads it, so nested fields
+    resolve).
 
     NULL text -> NULL signature (not an array OF nulls, whose band hashes
     would still collide into one constant bucket); the pair operators
     exclude NULL signatures from candidate generation.
     """
-    if isinstance(text, str):
-        text = F.col(text)
-    return _minhash_fn(num_hashes)(text, F.lit(ngram))
+    return _minhash_fn(num_hashes)(text, int(ngram))
 
 
 def _check_bands(num_hashes: int, bands: int) -> None:
@@ -272,8 +268,8 @@ _SIG_CHECKPOINT_WARN_BYTES = 32 << 30
 
 
 def _checkpoint_sigs(sig: DataFrame) -> DataFrame:
-    """In-query materialization of a computed (id, sig) frame — shared
-    by the MinHash and SimHash text paths.
+    """In-query materialization of the computed (id, sig) frame of the
+    MinHash text path.
 
     ``localCheckpoint(eager=False)``: the builder stays LAZY (no Spark
     job at DataFrame-construction time — constructing a query must not
@@ -403,13 +399,13 @@ def _witness_candidates(
     """(id, *bucket_cols) -> deduped (id, cand) witness candidates:
     per-bucket minimum id + sorted-neighborhood predecessor id.
 
-    The shared skew-aware core of every ``*_near_dup_witness`` operator
-    (MinHash, SimHash, cosine-LSH): BOTH candidate kinds come out of a
-    single per-bucket window over the NARROW id projection (r15, guide
-    §2.4: operations keyed the same way share one exchange) — over a
-    window ordered by id, the running ``first`` IS the bucket minimum
-    (the first row of an ascending sort) and ``lag`` is the sorted-
-    neighborhood predecessor. The previous formulation computed minima
+    The shared skew-aware core of both ``*_near_dup_witness`` operators
+    (MinHash bands, cosine hyperplane buckets): BOTH candidate kinds
+    come out of a single per-bucket window over the NARROW id
+    projection (r15, guide §2.4: operations keyed the same way share
+    one exchange) — over a window ordered by id, the running ``first``
+    IS the bucket minimum (the first row of an ascending sort) and
+    ``lag`` is the sorted-neighborhood predecessor. The previous formulation computed minima
     via groupBy + join-back plus a separate window: three full shuffles
     of the banded rows where one suffices (measured plan: 4 Exchange ->
     2, the survivor being this window plus the narrow candidate de-dup).
@@ -645,9 +641,11 @@ def witness_clusters(
     soak harnesses. A caller-owned dict, not function-global state, so
     concurrent callers in one driver can't clobber each other's value.
 
-    ``members`` (optional, one id column named ``id_col``): the id
-    universe for the output — unmarked ids label themselves
-    (``cluster_id = id``). Default: only ids appearing in the edge set.
+    ``members`` (optional, with an id column named ``id_col``): the rows
+    to label. Every column of ``members`` is kept and ``cluster_id`` is
+    appended by one left join; unmarked ids label themselves
+    (``cluster_id = id``). Default: only ids appearing in the edge set,
+    as (``id_col``, cluster_id).
     """
     parents = witness.select(
         F.col(id_col).alias("id"), F.col(witness_col).alias("parent")
@@ -735,15 +733,17 @@ def witness_clusters(
         stats["converged"] = converged
     if members is None:
         members = (
-            witness.select(F.col(id_col).alias("id"))
-            .union(witness.select(F.col(witness_col).alias("id")))
+            witness.select(F.col(id_col))
+            .union(witness.select(F.col(witness_col).alias(id_col)))
             .distinct()
         )
-    else:
-        members = members.select(F.col(id_col).alias("id"))
-    return members.join(parents, "id", "left").select(
-        F.col("id").alias(id_col),
-        F.coalesce("parent", F.col("id")).alias("cluster_id"),
+    labels = parents.select(
+        F.col("id").alias("__wc_id"), F.col("parent").alias("__wc_parent")
+    )
+    return (
+        members.join(labels, F.col(id_col) == F.col("__wc_id"), "left")
+        .withColumn("cluster_id", F.coalesce("__wc_parent", F.col(id_col)))
+        .drop("__wc_id", "__wc_parent")
     )
 
 
@@ -785,370 +785,6 @@ def minhash_near_dup_clusters(
         max_iters=max_iters,
     )
     return out.select(F.col("id").alias(id_col), "cluster_id")
-
-
-# ---------------------------------------------------------------------------
-# SimHash
-# ---------------------------------------------------------------------------
-
-#: bit-spread multiply for the packed simhash counters: for a 4-bit
-#: nibble x = b0 + 2*b1 + 4*b2 + 8*b3, (x * _SIMHASH_SPREAD) &
-#: _SIMHASH_LANES lands b_k at bit 16k — all 16 partial products hit
-#: distinct bit positions, so there are no carries and the masked result
-#: is exactly b0 + b1<<16 + b2<<32 + b3<<48.
-_SIMHASH_SPREAD = 0x200040008001   # 1 + 2^15 + 2^30 + 2^45
-_SIMHASH_LANES = 0x0001000100010001  # bits 0, 16, 32, 48
-
-#: fast-path token bound: with n <= 32767 no 16-bit counter lane can
-#: saturate and the top lane's accumulation stays under 2^63 (no signed
-#: overflow under ANSI). Longer docs take the per-bit-pass path.
-_SIMHASH_MAX_FAST_TOKENS = 32767
-
-
-def _simhash_vote(ones: Column, n: Column, i: int) -> Column:
-    """Majority-vote contribution of bit i given its set-count."""
-    bit_val = (1 << i) if i < 63 else -(1 << 63)  # two's-complement top bit
-    return F.when(ones * 2 > n, F.lit(bit_val).cast("long")).otherwise(
-        F.lit(0).cast("long")
-    )
-
-
-def _simhash_sql(text_sql: str, bits: int) -> str:
-    """SQL-text twin of the Column path of :func:`simhash_expr` — same
-    packed-counter aggregate, same per-bit fallback, same guards, emitted
-    as ONE parsed SQL string. Rationale (r15): driver-side Column
-    construction of the combined packed+fallback tree is ~2.4s of Py4J
-    round trips per build — more than the 600k-row execution itself —
-    and every fresh query pays it; the SQL text parses JVM-side in one
-    round trip (the signs_expr/_signs_sql pattern in similarity.py)."""
-    from traject_spark.expr import sql_let
-
-    n_longs = (bits + 3) // 4
-    long_min = "(-9223372036854775807L - 1L)"  # Long.MIN literal-safe
-
-    def vote(ones: str, i: int) -> str:
-        bit_val = f"{1 << i}L" if i < 63 else long_min
-        return f"(CASE WHEN ({ones}) * 2 > n THEN {bit_val} ELSE 0L END)"
-
-    init = "named_struct(" + ", ".join(
-        f"'c{j}', 0L" for j in range(n_longs)
-    ) + ")"
-    step_fields = ", ".join(
-        f"'c{j}', acc.c{j} + (((shiftrightunsigned(h, {4 * j}) & 15L) * "
-        f"{_SIMHASH_SPREAD}L) & {_SIMHASH_LANES}L)"
-        for j in range(n_longs)
-    )
-    finish_terms = []
-    for i in range(bits):
-        j, k = divmod(i, 4)
-        ones = f"(shiftrightunsigned(acc.c{j}, {16 * k}) & 65535L)"
-        finish_terms.append(vote(ones, i))
-    packed = (
-        f"aggregate(hs, {init}, (acc, h) -> named_struct({step_fields}), "
-        f"acc -> ({' + '.join(finish_terms)}))"
-    )
-    perbit_terms = [
-        vote(
-            f"size(filter(hs, h -> (shiftright(h, {i}) & 1L) = 1L))", i
-        )
-        for i in range(bits)
-    ]
-    body = (
-        f"CASE WHEN n <= {_SIMHASH_MAX_FAST_TOKENS} THEN {packed} "
-        f"ELSE ({' + '.join(perbit_terms)}) END"
-    )
-    return sql_let(
-        f"transform(split({text_sql}, ' '), w -> xxhash64(w))",
-        "hs",
-        "CASE WHEN hs IS NOT NULL THEN "
-        + sql_let("size(hs)", "n", body)
-        + " END",
-    )
-
-
-def simhash_expr(text: Column | str, bits: int = 64) -> Column:
-    """64-bit SimHash as bigint: per-bit majority vote over token hashes.
-
-    For each bit position i, count tokens whose xxhash64 has bit i set;
-    bit i of the signature is 1 when the count exceeds half the tokens.
-    The whole signature is intra-row array algebra, JVM-side.
-
-    ``text`` may be a column NAME (string) — the fast path: the whole
-    signature is emitted as one parsed SQL string (`_simhash_sql`)
-    instead of thousands of Py4J Column round trips per build; the
-    Column path below stays as the reference implementation for
-    arbitrary Column inputs. Values are identical (cross-checked 0-diff
-    in the focused formulation test; history/OPTIMIZATION_r15.md,
-    dedup_simhash).
-
-    Formulation (r15 optimization): Spark higher-order functions are
-    CodegenFallback — every lambda invocation is interpreted — so the
-    original shape (one `filter` pass per bit = 64 * n_tokens lambda
-    invocations per row) paid invocation overhead 64x per token. The
-    fast path is ONE `aggregate` pass whose accumulator is 16 packed
-    longs of 4 x 16-bit bit-counters each; per token each long adds the
-    carry-free bit-spread product of one nibble of the hash (see
-    _SIMHASH_SPREAD). Counts are extracted once per row afterwards and
-    the identical majority votes taken, so signatures are BIT-IDENTICAL
-    (cross-checked 0-diff over the bench corpus,
-    history/OPTIMIZATION_r15.md; isolated lane min 1.287 -> 1.049s). Rows with more than
-    _SIMHASH_MAX_FAST_TOKENS tokens (counter-saturation bound) take the
-    original per-bit-pass path, same values.
-
-    NULL text -> NULL signature (every majority vote on NULL token counts
-    would otherwise take the otherwise(0) branch, giving all NULL-text
-    documents the identical signature 0 — a false distance-0 clique).
-    Empty text gets xxhash64('')'s bit pattern (a constant, NOT 0):
-    all empty documents share one signature and so ARE mutual
-    duplicates, consistent with exact_dedup — but don't filter on
-    sig = 0 to find them.
-    """
-    if not 1 <= bits <= 64:
-        # bits > 64 would silently produce garbage: shiftright wraps its
-        # shift amount mod 64 on the JVM (bit 64 re-tests bit 0) and
-        # every i >= 63 adds the same sign-bit constant
-        raise ValueError(f"bits must be in [1, 64], got {bits}")
-
-    if isinstance(text, str):
-        from traject_spark.corpus.similarity import _q
-        from traject_spark.sqlutil import ident_safe
-
-        if ident_safe(text):
-            return F.expr(_simhash_sql(_q(text), bits))
-        # nested-field names fall back to the Column path (ADVICE r15)
-        text = F.col(text)
-
-    def per_bit_body(hashes: Column, n: Column) -> Column:
-        sig = F.lit(0).cast("long")
-        for i in range(bits):
-            ones = F.size(
-                F.filter(
-                    hashes,
-                    lambda h: F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1,
-                )
-            )
-            sig = sig + _simhash_vote(ones, n, i)
-        return sig
-
-    # nibbles that carry at least one voted bit (for bits < 64 the
-    # higher counters would be dead weight in the accumulator struct)
-    n_longs = (bits + 3) // 4
-
-    def packed_body(hashes: Column, n: Column) -> Column:
-        def step(acc: Column, h: Column) -> Column:
-            fields = []
-            for j in range(n_longs):
-                x = F.shiftrightunsigned(h, 4 * j).bitwiseAND(F.lit(15))
-                add = (x * F.lit(_SIMHASH_SPREAD)).bitwiseAND(
-                    F.lit(_SIMHASH_LANES)
-                )
-                fields.append((acc[f"c{j}"] + add).alias(f"c{j}"))
-            return F.struct(*fields)
-
-        init = F.struct(
-            *[F.lit(0).cast("long").alias(f"c{j}") for j in range(n_longs)]
-        )
-
-        def finish(acc: Column) -> Column:
-            sig = F.lit(0).cast("long")
-            for i in range(bits):
-                j, k = divmod(i, 4)
-                ones = F.shiftrightunsigned(
-                    acc[f"c{j}"], 16 * k
-                ).bitwiseAND(F.lit(0xFFFF))
-                sig = sig + _simhash_vote(ones, n, i)
-            return sig
-
-        return F.aggregate(hashes, init, step, finish)
-
-    return let(
-        F.transform(tokens_expr(text), lambda t: F.xxhash64(t)),
-        lambda hashes: F.when(
-            hashes.isNotNull(),
-            let(
-                F.size(hashes),
-                lambda n: F.when(
-                    n <= _SIMHASH_MAX_FAST_TOKENS, packed_body(hashes, n)
-                ).otherwise(per_bit_body(hashes, n)),
-            ),
-        ),
-    )
-
-
-def hamming64_expr(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit signatures (bit_count of xor)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
-def _simhash_banded(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_distance: int,
-    bands: int,
-    sig_col: Optional[str],
-):
-    """Shared pigeonhole-banding build: validated params, then the
-    (id, sig) frame and its (id, sig, band, band_bits) explode."""
-    if max_distance >= bands:
-        raise ValueError(
-            f"pigeonhole banding needs max_distance < bands "
-            f"(got {max_distance} >= {bands})"
-        )
-    if 64 % bands:
-        raise ValueError(f"bands must divide 64, got {bands}")
-    width = 64 // bands
-    # width 64 (bands=1): 2^64-1 overflows a JVM long literal; -1 is the
-    # same all-ones mask in two's complement
-    mask = -1 if width == 64 else (1 << width) - 1
-    # NULL signatures (NULL text, or nulls in a user sig_col) never pair.
-    # Filter the RAW column (pushes to the scan); filtering the computed
-    # signature would re-evaluate the majority-vote tree for the predicate
-    raw = F.col(sig_col) if sig_col else F.col(text_col)
-    sig_src = (
-        F.col(sig_col)
-        if sig_col
-        # name form -> the generated-SQL build fast path (r15)
-        else simhash_expr(text_col)
-    )
-    sig = df.filter(raw.isNotNull()).select(
-        F.col(id_col).alias("id"), sig_src.alias("sig")
-    )
-    if not sig_col:
-        # text path: the majority-vote tree would otherwise re-run for
-        # the banding explode AND each id-keyed signature fetch — same
-        # in-query materialization rationale as _signatures (r15);
-        # lazy + size-warned via the shared helper (r16)
-        sig = _checkpoint_sigs(sig)
-    banded = sig.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("sig"), b * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_bits"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "sig", "bb.band", "bb.band_bits")
-    return sig, banded
-
-
-def simhash_near_dup_witness(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_distance: int = 3,
-    bands: int = 4,
-    sig_col: Optional[str] = None,
-) -> DataFrame:
-    """Witness-bounded SimHash near-dup marking: LINEAR output — the
-    ``minhash_near_dup_witness`` pattern over pigeonhole band buckets.
-
-    Each document is checked against at most two candidates per band
-    bucket (bucket minimum + sorted-neighborhood predecessor, computed
-    on the narrow (id, band, band_bits) projection — signatures fetched
-    afterwards by two id-keyed joins) and marked when the best
-    candidate's hamming distance is <= ``max_distance``. Every member
-    of an exact clique except its global minimum id is marked whenever
-    some band bucket offers it a clique candidate (identical signatures
-    agree on every band; the minhash witness docstring's shadowing
-    caveat applies here too). Exhaustive enumeration is
-    ``simhash_near_dup`` (quadratic in clique size). Compose with
-    ``witness_clusters`` for transitive cluster ids.
-
-    Returns (id, witness_id, distance) for marked duplicates only.
-    """
-    sig, banded = _simhash_banded(
-        df, text_col, id_col, max_distance, bands, sig_col
-    )
-    candidates = _witness_candidates(
-        banded.select("id", "band", "band_bits"), ["band", "band_bits"]
-    )
-    scored = (
-        candidates.join(sig, "id")
-        .join(
-            sig.select(
-                F.col("id").alias("cand"), F.col("sig").alias("wsig")
-            ),
-            "cand",
-        )
-        .select(
-            "id",
-            F.col("cand").alias("witness_id"),
-            hamming64_expr(F.col("sig"), F.col("wsig"))
-            .cast("long")
-            .alias("distance"),
-        )
-    )
-    best = Window.partitionBy("id").orderBy(
-        F.col("distance").asc(), F.col("witness_id").asc()
-    )
-    return (
-        scored.filter(F.col("distance") <= max_distance)
-        .withColumn("_rn", F.row_number().over(best))
-        .filter(F.col("_rn") == 1)
-        .select("id", "witness_id", "distance")
-    )
-
-
-def simhash_near_dup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_distance: int = 3,
-    bands: int = 4,
-    sig_col: Optional[str] = None,
-) -> DataFrame:
-    """Near-duplicate pairs with hamming(simhash_a, simhash_b) <= t.
-
-    Pigeonhole banding: the 64-bit signature splits into ``bands``
-    contiguous equal-width bands; any pair within hamming distance
-    < ``bands`` must agree EXACTLY on at least one band, so the candidate
-    set is pairs sharing a (band, band_bits) bucket — shuffle volume is
-    rows x bands, never the n^2 pair space — and the exact hamming filter
-    then verifies. Requires ``max_distance < bands`` for the guarantee.
-
-    ``sig_col`` uses a precomputed signature column instead of computing
-    SimHash from ``text_col``. At scale, materialize signatures FIRST
-    (one scan writing the narrow (id, sig) table) and pass ``sig_col`` —
-    a self-join over an unmaterialized signature expression recomputes
-    the 64-bit majority vote on both join sides. Returns
-    (id_a, id_b, distance).
-    """
-    sig, banded = _simhash_banded(
-        df, text_col, id_col, max_distance, bands, sig_col
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_bits") == F.col("b.band_bits"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        pairs.withColumn(
-            "distance",
-            hamming64_expr(F.col("sig_a"), F.col("sig_b")).cast("long"),
-        )
-        .filter(F.col("distance") <= max_distance)
-        .select("id_a", "id_b", "distance")
-    )
 
 
 # ---------------------------------------------------------------------------

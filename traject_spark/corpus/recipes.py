@@ -292,12 +292,7 @@ def curate_documents(
                 wit.select("id"), "id", "left_anti"
             )
         else:  # cluster
-            survivors = survivors.join(
-                witness_clusters(
-                    wit, members=survivors.select("id")
-                ),
-                "id",
-            )
+            survivors = witness_clusters(wit, members=survivors)
 
     out = survivors.drop("msig").withColumnRenamed("id", id_col)
     if output_path is not None:

@@ -4,16 +4,20 @@ document fingerprinting.
 All JVM-side expressions (whole-stage codegen, no UDF/shuffle) — at
 100 TB these run at scan speed. The curate-path builders
 (``token_count_expr``, ``quality_score_expr``, ``langid_expr``,
-``fingerprint_expr``) are session SQL functions (``SessionFunction``):
-one SQL body each, inlined by Spark wherever the returned Column is
-used. Each operator has an exact ANSI-SQL twin used by the DuckDB oracle
-in ``__spark_entry__``; keep semantics SQL-expressible (simple space
-tokenization, fixed stopword lists) so the correctness gate stays
-meaningful.
+``fingerprint_expr``) and ``langid_ngram_expr`` are session SQL
+functions (``SessionFunction``): one SQL body each, inlined by Spark
+wherever the returned Column is used. They take a Column or a column
+name; a name returns the body itself, usable in every position
+(generators, sorts and lambdas included). Each operator has an exact
+ANSI-SQL twin used by the DuckDB oracle in ``__spark_entry__``; keep
+semantics SQL-expressible (simple space tokenization, fixed stopword
+lists) so the correctness gate stays meaningful.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
 from typing import Optional
 
 from pyspark.sql import Column
@@ -49,7 +53,7 @@ _TOKEN_COUNT = SessionFunction(
 )
 
 
-def token_count_expr(text: Column) -> Column:
+def token_count_expr(text: Column | str) -> Column:
     """Number of single-space tokens (BIGINT); NULL text -> NULL."""
     return _TOKEN_COUNT(text)
 
@@ -101,13 +105,15 @@ _QUALITY = SessionFunction(
 )
 
 
-def quality_score_expr(text: Column, min_tokens: int = 50, max_tokens: int = 100000) -> Column:
+def quality_score_expr(
+    text: Column | str, min_tokens: int = 50, max_tokens: int = 100000
+) -> Column:
     """Heuristic quality score in [0,1]: length gate x stopword signal.
 
     A document scores 1.0 when it has a plausible token count AND a
     plausible stopword ratio; components degrade independently. 4dp.
     """
-    return _QUALITY(text, F.lit(min_tokens), F.lit(max_tokens))
+    return _QUALITY(text, min_tokens, max_tokens)
 
 
 # each marker count is let-bound once, so the CASE chain compares bound
@@ -134,7 +140,7 @@ _LANGID = SessionFunction(
 )
 
 
-def langid_expr(text: Column) -> Column:
+def langid_expr(text: Column | str) -> Column:
     """Marker-word language guess: highest marker count wins, ties broken
     en > de > fr > es; 'und' when no markers hit."""
     return _LANGID(text)
@@ -149,13 +155,13 @@ _FINGERPRINT = SessionFunction(
 )
 
 
-def fingerprint_expr(text: Column, normalize: bool = True) -> Column:
+def fingerprint_expr(text: Column | str, normalize: bool = True) -> Column:
     """128-bit content fingerprint (md5 hex). ``normalize`` lowercases,
     collapses whitespace, and trims the ends first — the usual
     exact-dedup key (web-scraped corpora routinely differ only by a
     trailing newline; without the trim those are distinct fingerprints
     and exact dedup silently misses them)."""
-    return _FINGERPRINT(text, F.lit(bool(normalize)))
+    return _FINGERPRINT(text, bool(normalize))
 
 
 # ---------------------------------------------------------------------------
@@ -458,16 +464,10 @@ def _sql_str(s: str) -> str:
 
 
 def _langid_sql(text_sql: str, profiles: dict) -> str:
-    """SQL-text twin of the Column path of :func:`langid_ngram_expr` —
-    same normalize/gram/prefilter/28-pass/argmax shape, emitted as ONE
-    parsed SQL string. Rationale (r15): the Column path builds 29
-    ``isin`` literal lists (~2,100 element literals) over Py4J — ~2.0s
-    of driver time per fresh query, roughly equal to the 5k-row
-    EXECUTION of the whole lane; the SQL text parses JVM-side in one
-    round trip. Catalyst converts the IN lists to the same InSet
-    hashsets ``isin`` produces, so the runtime plan is unchanged."""
-    from traject_spark.expr import sql_let
-
+    """The body of :func:`langid_ngram_expr` over the SQL text
+    ``text_sql``: normalize, trigrams, union prefilter, one scoring pass
+    per language, argmax. Catalyst converts the IN lists to InSet
+    hashsets, so each gram test is O(1)."""
     langs = sorted(profiles)
     union = sorted({g for p in profiles.values() for g in p})
 
@@ -504,11 +504,27 @@ def _langid_sql(text_sql: str, profiles: dict) -> str:
     )
 
 
+@functools.lru_cache(maxsize=8)
+def _langid_ngram_fn(profiles_key) -> SessionFunction:
+    """The session function over one profile set: ``None`` for the
+    generated profiles (``traject_langid_ngram``), else a sorted tuple
+    of (code, grams) pairs, named by its digest."""
+    if profiles_key is None:
+        from traject_spark.corpus.langid_data import LANGID_PROFILES
+
+        name, profiles = "traject_langid_ngram", LANGID_PROFILES
+    else:
+        digest = hashlib.sha1(repr(profiles_key).encode()).hexdigest()[:16]
+        name, profiles = f"traject_langid_ngram_{digest}", dict(profiles_key)
+    return SessionFunction(name, "text STRING", _langid_sql("text", profiles))
+
+
 def langid_ngram_expr(
     text: Column | str, profiles: dict | None = None
 ) -> Column:
     """Character-trigram language guess over the generated profiles
-    (28 languages; ``traject_spark/corpus/langid_data.py``).
+    (28 languages; ``traject_spark/corpus/langid_data.py``), or over
+    ``profiles`` ({code: grams}) when given.
 
     score(lang) = # of the document's trigrams that belong to the
     language's profile (a set-membership InSet per gram — O(1) each,
@@ -532,53 +548,15 @@ def langid_ngram_expr(
     outputs verified): prefilter 2.14s vs 28-pass 3.06s vs map-lookup
     9.9s, with gram construction alone a 1.83s floor — i.e. the
     scoring stage is ~4x faster and the map sketch would have been a
-    ~7x scoring regression."""
-    if profiles is None:
-        from traject_spark.corpus.langid_data import LANGID_PROFILES
+    ~7x scoring regression.
 
-        profiles = LANGID_PROFILES
-    if isinstance(text, str):
-        # column NAME -> the generated-SQL build fast path (r15); the
-        # Column path below stays the reference implementation. Dotted/
-        # exotic names fall back to F.col so both input forms resolve
-        # identically (ADVICE r15)
-        from traject_spark.corpus.similarity import _q
-        from traject_spark.sqlutil import ident_safe
-
-        if ident_safe(text):
-            return F.expr(_langid_sql(_q(text), profiles))
-        text = F.col(text)
-    langs = sorted(profiles)
-    union = sorted({g for p in profiles.values() for g in p})
-
-    def scored(all_grams: Column) -> Column:
-        # let-bound: the survivor array is computed ONCE, not re-filtered
-        # per language (28 uses of the raw filter expr would re-run it)
-        return let(
-            F.filter(all_grams, lambda g: g.isin(union)), _scored_langs
-        )
-
-    def _scored_langs(grams: Column) -> Column:
-        entries = [
-            F.struct(
-                F.size(
-                    F.filter(grams, lambda g: g.isin(list(profiles[lang])))
-                ).cast("long").alias("score"),
-                F.lit(-i).alias("negrank"),
-                F.lit(lang).alias("code"),
-            )
-            for i, lang in enumerate(langs)
-        ]
-        return let(
-            F.array_max(F.array(*entries)),
-            lambda best: F.when(best["score"] == 0, F.lit("und")).otherwise(
-                best["code"]
-            ),
-        )
-
-    return F.when(
-        text.isNotNull(), let(char_ngrams_expr(text), scored)
-    )
+    One SQL body (``traject_langid_ngram``), built once per process:
+    the 29 IN lists (~2,100 literals) cross to the JVM as one string
+    instead of a Column tree of Py4J round trips."""
+    key = None if profiles is None else tuple(sorted(
+        (code, tuple(sorted(grams))) for code, grams in profiles.items()
+    ))
+    return _langid_ngram_fn(key)(text)
 
 
 # ---------------------------------------------------------------------------

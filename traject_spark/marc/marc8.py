@@ -100,13 +100,20 @@ def _expand_ncr(text: str) -> str:
     # the preserve range (see _PRESERVE_BASE) is excluded: an NCR
     # naming one of those PUA codepoints must stay literal, or a
     # preserve-mode re-encode would emit it as a raw byte instead of
-    # the NCR text the stream actually carried
+    # the NCR text the stream actually carried. So are NCRs naming no
+    # character: past U+10FFFF, and the surrogates U+D800-U+DFFF, whose
+    # lone code point has no UTF-8 form (Arrow refuses the string, and
+    # one such value would fail the whole read task)
     if "&#x" not in text:  # necessary prefix of every _NCR match (r15)
         return text
 
     def _one(m):
         cp = int(m.group(1), 16)
-        if cp > 0x10FFFF or _PRESERVE_BASE <= cp <= _PRESERVE_BASE + 0xFF:
+        if (
+            cp > 0x10FFFF
+            or 0xD800 <= cp <= 0xDFFF
+            or _PRESERVE_BASE <= cp <= _PRESERVE_BASE + 0xFF
+        ):
             return m.group(0)
         return chr(cp)
 

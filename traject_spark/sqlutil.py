@@ -34,6 +34,8 @@ from __future__ import annotations
 import re as _re
 import weakref
 
+from traject_spark.expr import sql_let
+
 __all__ = [
     "sql_str_lit", "sql_value_of", "sql_string_of", "ident_safe",
     "quote_ident", "sql_ref", "SessionFunction",
@@ -83,13 +85,18 @@ class SessionFunction:
     Spark inlines SQL functions in projections, filters, aggregates,
     joins and windows, but refuses them inside a generator (``explode``)
     or a sort, and cannot bind a higher-order-function lambda variable
-    to a parameter: project the call first, then explode or sort the
-    projected column."""
+    to a parameter. So the call returns the body itself wherever it
+    can: with column NAMES (and literal values) as one ``F.expr``, its
+    parameters bound once each (:meth:`inline`), usable in every
+    position; with a ``Column`` that reads a lambda variable, bound by
+    the built-in ``aggregate``. Any other ``Column`` argument takes the
+    registered function's call."""
 
     _registered: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
     def __init__(self, name: str, params: str, body: str):
         self.name, self.params, self.body = name, params, body
+        self._params = [p.split() for p in params.split(",")]
 
     def sql(self, spark, *args: str) -> str:
         """``name(args)`` call text for SQL run in ``spark``."""
@@ -103,14 +110,63 @@ class SessionFunction:
             done.add(self.name)
         return f"{self.name}({', '.join(args)})"
 
-    def __call__(self, *cols, spark=None):
-        """The call as a Column, registered in ``spark`` (default: the
-        active session)."""
-        from pyspark.sql import SparkSession
+    def _bound_body(self) -> str:
+        """The body with parameter i bound from field ``p<i>`` of the
+        lambda variable ``args``. Binding every argument in one struct
+        evaluates them all before any parameter is in scope, so no
+        argument can read another's binding."""
+        body = self.body
+        for i, (name, _) in reversed(list(enumerate(self._params))):
+            body = sql_let(f"args.p{i}", name, body)
+        return body
+
+    def inline(self, *args: str) -> str:
+        """The body over the SQL text ``args``, each cast to its
+        parameter's declared type as a call would."""
+        fields = ", ".join(
+            f"'p{i}', CAST({a} AS {typ})"
+            for i, (a, (_, typ)) in enumerate(zip(args, self._params))
+        )
+        return sql_let(f"named_struct({fields})", "args", self._bound_body())
+
+    def __call__(self, *args, spark=None):
+        """The call as a Column. A ``str`` argument names a column,
+        other non-Column arguments are literal values. Without a
+        ``Column`` argument the result is the inlined body; with one,
+        the call of the function registered in ``spark`` (default: the
+        active session), unless an argument reads a lambda variable."""
+        from pyspark.sql import Column, SparkSession
         from pyspark.sql import functions as F
 
+        if not any(isinstance(a, Column) for a in args):
+            return F.expr(self.inline(*(
+                sql_ref(a) if isinstance(a, str) else sql_value_of(a)
+                for a in args
+            )))
+        cols = [
+            a if isinstance(a, Column)
+            else F.col(a) if isinstance(a, str) else F.lit(a)
+            for a in args
+        ]
+        if any(_reads_lambda_variable(c) for c in cols):
+            return F.call_function(
+                "aggregate",
+                F.array().cast("array<int>"),
+                F.struct(*(
+                    c.cast(typ).alias(f"p{i}")
+                    for i, (c, (_, typ)) in enumerate(zip(cols, self._params))
+                )),
+                F.expr("(acc, x) -> acc"),
+                F.expr(f"args -> {self._bound_body()}"),
+            )
         self.sql(spark or SparkSession.active())
         return F.call_function(self.name, *cols)
+
+
+def _reads_lambda_variable(col) -> bool:
+    """True when the Column's expression names a higher-order-function
+    lambda variable (the variable of an ``F.transform`` lambda, say)."""
+    return "UnresolvedNamedLambdaVariable(" in col._jc.node().toString()
 
 
 def sql_str_lit(s: str) -> str:

@@ -11,9 +11,12 @@ exact dedup over a stream, and a bounded-run harness.
 
 from __future__ import annotations
 
+import logging
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
 
 
 def stream_dedup(df: DataFrame, *keys: str) -> DataFrame:
@@ -64,8 +67,6 @@ def stream_marc_to_solr(
     Returns the StreamingQuery (already terminated when awaited and the
     query drained/stopped).
     """
-    import sys as _sys
-
     from traject_spark.marc.io import read_marc_json_stream
     from traject_spark.writers import solr_commit, solr_json_writer
 
@@ -105,10 +106,9 @@ def stream_marc_to_solr(
             # surface per-batch losses: the batch path returns this count
             # to its caller; a streaming run must not lose it silently
             skipped_total[0] += n
-            print(
-                f"stream_marc_to_solr: batch {batch_id} skipped {n} "
-                f"docs ({skipped_total[0]} total)",
-                file=_sys.stderr,
+            _log.warning(
+                "stream_marc_to_solr: batch %s skipped %d docs (%d total)",
+                batch_id, n, skipped_total[0],
             )
 
     writer = (
@@ -127,11 +127,10 @@ def stream_marc_to_solr(
                 basic_auth_password=solr_kwargs.get("basic_auth_password"),
             )
     elif commit_close:
-        print(
+        _log.warning(
             "stream_marc_to_solr: commit_on_close requires "
             "await_termination=True (the commit runs after the query "
-            "ends) — ignored; use commitWithin via solr_update_args",
-            file=_sys.stderr,
+            "ends) — ignored; use commitWithin via solr_update_args"
         )
     # expose the aggregate for callers holding the query handle
     q.skipped_docs = skipped_total

@@ -28,9 +28,9 @@ keys/values collide with the encoding separators.
 
 from __future__ import annotations
 
+import logging
 import os
 import re
-import sys
 from typing import Iterable, Mapping, Optional, Union
 
 import pandas as pd
@@ -39,6 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from traject_spark.expr import let
+
+_log = logging.getLogger(__name__)
 
 PASSTHROUGH = "__passthrough__"
 DEFAULT_KEY = "__default__"
@@ -609,11 +611,10 @@ class TranslationMap:
                     # instead — make the substitution VISIBLE so a broken
                     # .rb shadowing a stale conversion can't silently
                     # serve old data
-                    print(
-                        f"traject_spark: WARNING: .rb map failed to "
-                        f"parse ({rb_err}); loaded {cand} instead — "
-                        "verify it is not a stale conversion",
-                        file=sys.stderr,
+                    _log.warning(
+                        ".rb map failed to parse (%s); loaded %s instead "
+                        "— verify it is not a stale conversion",
+                        rb_err, cand,
                     )
                 return loaded
         if rb_err is not None:
