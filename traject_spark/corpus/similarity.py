@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from traject_spark.arrowutil import release_spark_zip_finders
 from traject_spark.expr import let2
 
 
@@ -338,6 +339,7 @@ def assign_cell_udf(centroids: list, vec_col: str = "embedding"):
 
     @pandas_udf("long")
     def _assign(vecs: pd.Series) -> pd.Series:
+        release_spark_zip_finders()
         valid, scores = _batch_scores(vecs, Cn)
         out = np.full(len(vecs), None, dtype=object)
         if scores.shape[0]:
@@ -361,6 +363,7 @@ def probe_cells_udf(centroids: list, nprobe: int, vec_col: str = "embedding"):
 
     @pandas_udf("array<long>")
     def _probe(vecs: pd.Series) -> pd.Series:
+        release_spark_zip_finders()
         valid, scores = _batch_scores(vecs, Cn_s)
         out = np.full(len(vecs), None, dtype=object)
         if scores.shape[0]:

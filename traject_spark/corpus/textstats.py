@@ -23,6 +23,7 @@ from typing import Optional
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from traject_spark.arrowutil import release_spark_zip_finders
 from traject_spark.expr import let, sql_let
 from traject_spark.sqlutil import SessionFunction, sql_str_lit
 
@@ -762,6 +763,7 @@ def _repetition_arrow_udf():
         from pyspark.sql.functions import pandas_udf
 
         def _rep(texts):
+            release_spark_zip_finders()
             return pd.DataFrame(
                 [_repetition_signals_py(t) for t in texts],
                 columns=_REPETITION_FIELDS,

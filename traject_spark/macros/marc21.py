@@ -10,6 +10,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from traject_spark.arrowutil import release_spark_zip_finders
 from traject_spark.expr import SQL_EMPTY, SqlMacro, sql_let
 from traject_spark.macros.semantics import _sql_trim_punct
 from traject_spark.marc.extractor import extract_values_sql
@@ -164,6 +165,8 @@ def serialized_marc(
 
     @pandas_udf("string")
     def _serialize(js: pd.Series) -> pd.Series:
+        release_spark_zip_finders()
+
         def one(text):
             if text is None:
                 return None

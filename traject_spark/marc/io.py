@@ -154,8 +154,12 @@ def _iso2709_batches(raws, encoding: str, id_tag: str) -> Iterator:
     """ISO 2709 record bytes -> RecordBatches of at most
     ``DEFAULT_CHUNK_ROWS`` records (none for an input with no record),
     so task memory stays flat however large the input files are."""
-    from traject_spark.arrowutil import DEFAULT_CHUNK_ROWS
+    from traject_spark.arrowutil import (
+        DEFAULT_CHUNK_ROWS,
+        release_spark_zip_finders,
+    )
 
+    release_spark_zip_finders()
     cols = Iso2709Columns(encoding, id_tag)
     for raw in raws:
         if cols.add(raw) and len(cols) >= DEFAULT_CHUNK_ROWS:
@@ -545,12 +549,16 @@ def read_iso2709(
     'MARC-8-preserve'; a printable-ASCII datafield is decoded once and
     split, and MARC-8 values without an escape take a table lookup (see
     ``marc.marc8``). Records without a usable leader are skipped, and a
-    bad directory entry skips its field. On a 4-core host, the 12,000
-    MARC-8 records of the ``marc8_index_ndjson`` benchmark (16 files)
-    read to a noop sink in 0.77-0.85 s with 1.8-1.9 Python CPU-s; the
-    per-record dict parser before it took 1.00-1.17 s and 2.7-3.0
-    Python CPU-s. About 0.23 CPU-s of each Python task is PySpark's
-    own ``importlib.invalidate_caches()`` (CHANGES.md).
+    bad directory entry skips its field. Each task first drops the
+    finders of Spark's own archives
+    (``arrowutil.release_spark_zip_finders``), so a reused worker's
+    per-task ``importlib.invalidate_caches()`` no longer re-reads
+    ``pyspark.zip``. On a 4-core host, the 12,000 MARC-8 records of the
+    ``marc8_index_ndjson`` benchmark (16 files, 4 tasks) read to a noop
+    sink in 0.41-0.50 s (median of 5) with 0.9-1.0 Python CPU-s; with
+    the re-read it took 0.65-0.85 s and 1.75-1.96 Python CPU-s, and the
+    per-record dict parser before the columnar one 1.00-1.17 s and
+    2.7-3.0 Python CPU-s.
 
     Large files: binaryFile is one task per file, so a single 10 GB
     .mrc would serialize on one core. Files larger than ``split_bytes``

@@ -23,6 +23,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from traject_spark.arrowutil import release_spark_zip_finders
 from traject_spark.translation_map import TranslationMap
 
 Macro = Callable[[Column, "PipelineContext"], Column]
@@ -173,10 +174,12 @@ def transform_udf(py_fn: Callable[[str], Optional[str]]) -> Macro:
 
     @pandas_udf("array<string>")
     def _apply(col: pd.Series) -> pd.Series:
+        release_spark_zip_finders()
         return col.map(lambda vs: None if vs is None else _coerced(vs))
 
     @pandas_udf("struct<value:array<string>,error:string>")
     def _apply_rescued(col: pd.Series) -> pd.DataFrame:
+        release_spark_zip_finders()
         values, errors = [], []
         for vs in col:
             if vs is None:

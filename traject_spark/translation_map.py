@@ -38,6 +38,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from traject_spark.arrowutil import release_spark_zip_finders
 from traject_spark.expr import let
 
 _log = logging.getLogger(__name__)
@@ -1051,6 +1052,8 @@ class TranslationMap:
 
         @pandas_udf("array<string>")
         def _lookup(col: pd.Series) -> pd.Series:
+            release_spark_zip_finders()
+
             def one(v):
                 if v is None:
                     # miss path, like lookup(): default unless passthrough
@@ -1074,6 +1077,8 @@ class TranslationMap:
 
         @pandas_udf("array<string>")
         def _translate(col: pd.Series) -> pd.Series:
+            release_spark_zip_finders()
+
             def one(values):
                 if values is None:
                     return None

@@ -19,6 +19,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from traject_spark.arrowutil import release_spark_zip_finders
+
 
 # ---------------------------------------------------------------------------
 # file writers
@@ -518,6 +520,8 @@ def solr_json_writer(
         import time as _time
         import urllib.parse
 
+        release_spark_zip_finders()
+
         parsed = urllib.parse.urlsplit(update_url)
         conn_cls = (
             http.client.HTTPSConnection
@@ -771,6 +775,8 @@ def solr_delete_ids(
         import http.client
         import json as _json
         import urllib.parse
+
+        release_spark_zip_finders()
 
         parsed = urllib.parse.urlsplit(target)
         conn_cls = (

@@ -38,6 +38,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from traject_spark.arrowutil import release_spark_zip_finders
+
 _QNAME = re.compile(r"(@?)([A-Za-z_][\w.-]*):([A-Za-z_][\w.-]*)")
 
 
@@ -186,6 +188,8 @@ def _xml_match_udf(path: str, ns: dict | None, mode: str):
     @pandas_udf("array<string>")
     def _matches(col: pd.Series) -> pd.Series:
         import xml.etree.ElementTree as ET
+
+        release_spark_zip_finders()
 
         def localname(tag):
             return tag.rsplit("}", 1)[-1] if isinstance(tag, str) else ""
